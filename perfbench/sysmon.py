@@ -1,14 +1,18 @@
-"""Benchmark-side observation: trace spans, and process-tree CPU and
-Python-worker memory read from /proc (psutil is not assumed)."""
+"""Benchmark-side observation: trace spans, process-tree CPU and
+Python-worker memory read from /proc (psutil is not assumed), and the
+clean-up that waits for every process the benchmark started."""
 
 from __future__ import annotations
 
+import ctypes
 import os
+import signal
 import threading
 import time
 from contextlib import contextmanager
 
 _CLK = os.sysconf("SC_CLK_TCK")
+_PR_SET_CHILD_SUBREAPER = 36
 
 
 class Tracer:
@@ -134,3 +138,53 @@ class WorkerPeakRss:
     @property
     def peak_mb(self) -> float:
         return self.peak_kb / 1024
+
+
+def adopt_orphans() -> None:
+    """Make this process the subreaper of everything it starts: a process
+    whose parent exits first (the Python daemon and workers of a stopped
+    Spark JVM, which outlive it by a moment) is re-parented here instead
+    of to init, so `end_descendants` can see it and wait for it."""
+    libc = ctypes.CDLL(None, use_errno=True)
+    if libc.prctl(_PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0) != 0:
+        raise OSError(ctypes.get_errno(), "prctl(PR_SET_CHILD_SUBREAPER)")
+
+
+def _reap() -> None:
+    """Collect every child of this process that has exited."""
+    while True:
+        try:
+            pid, _ = os.waitpid(-1, os.WNOHANG)
+        except ChildProcessError:
+            return
+        if pid == 0:
+            return
+
+
+def end_descendants(grace_s: float = 20.0, kill_s: float = 5.0) -> list[int]:
+    """Return only once every process this one started has exited. They
+    get `grace_s` to end on their own, then SIGTERM, then SIGKILL. Returns
+    the pids that had to be signalled."""
+    from multiprocessing import resource_tracker
+
+    # the tracker that a spawn-context pool starts ignores SIGTERM and
+    # exits when its pipe from this process closes
+    resource_tracker._resource_tracker._stop()
+    signalled: list[int] = []
+    deadline = time.monotonic() + grace_s
+    sig = signal.SIGTERM
+    while True:
+        _reap()
+        pids = _descendants(_procs(), os.getpid())[1:]
+        if not pids:
+            return signalled
+        if time.monotonic() > deadline:
+            for pid in pids:
+                try:
+                    os.kill(pid, sig)
+                except ProcessLookupError:
+                    pass
+            signalled.extend(p for p in pids if p not in signalled)
+            sig = signal.SIGKILL
+            deadline = time.monotonic() + kill_s
+        time.sleep(0.02)
