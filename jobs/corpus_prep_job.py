@@ -7,7 +7,7 @@ Usage (cluster: swap master/conf; package ships via --py-files):
 
   spark-submit --master local[32] --py-files pdf_extract_spark.zip \
       jobs/corpus_prep_job.py --input <pages_parquet|synth:N> \
-      --output /path/out --partitions 64
+      --output /path/out [--partitions N]
 
 Re-running the same command after a crash resumes from the first
 uncommitted stage (stage-granular; see plans/corpus.py commit protocol).
@@ -29,7 +29,9 @@ def main() -> None:
                     help="pages parquet path, synth:N for fixture pages, "
                          "or warc:<glob> for WARC archives")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="decode partitions and synth: splits (default: "
+                         "the session's default parallelism)")
     ap.add_argument("--master", default=None)
     ap.add_argument("--fail-after", default=None, choices=[None] + [
         "extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",
@@ -49,7 +51,8 @@ def main() -> None:
         if args.input.startswith("synth:"):
             from pdf_extract_spark.sources.synth_pages import synth_pages
             n = int(args.input.split(":", 1)[1])
-            pages = synth_pages(spark, n, partitions=args.partitions)
+            pages = synth_pages(spark, n, partitions=args.partitions
+                                or spark.sparkContext.defaultParallelism)
         elif args.input.startswith("warc:"):
             from pdf_extract_spark.sources.warc import read_warc
             pages = read_warc(spark, args.input.split(":", 1)[1])

@@ -4,7 +4,7 @@ Usage (cluster: swap master/conf; package ships via --py-files):
 
   spark-submit --master local[32] --py-files pdf_extract_spark.zip \
       jobs/extract_job.py --input <pages_parquet|synth:N> \
-      --output /path/out --run-id r1 --partitions 64
+      --output /path/out --run-id r1 [--partitions N]
 
 `--input synth:N` synthesizes N deterministic fixture pages on the
 executors (no driver materialization) — used by BENCH and smoke runs.
@@ -24,7 +24,9 @@ def main() -> None:
                          "or warc:<glob> for WARC archives")
     ap.add_argument("--output", required=True)
     ap.add_argument("--run-id", default="run1")
-    ap.add_argument("--partitions", type=int, default=32)
+    ap.add_argument("--partitions", type=int, default=None,
+                    help="decode partitions and synth: splits (default: "
+                         "one per input split, at least one per core)")
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
@@ -36,7 +38,8 @@ def main() -> None:
         if args.input.startswith("synth:"):
             from pdf_extract_spark.sources.synth_pages import synth_pages
             n = int(args.input.split(":", 1)[1])
-            pages = synth_pages(spark, n, partitions=args.partitions)
+            pages = synth_pages(spark, n, partitions=args.partitions
+                                or spark.sparkContext.defaultParallelism)
         elif args.input.startswith("warc:"):
             from pdf_extract_spark.sources.warc import read_warc
             pages = read_warc(spark, args.input.split(":", 1)[1])

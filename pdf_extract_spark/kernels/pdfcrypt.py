@@ -289,9 +289,12 @@ def _pad_pw(pw: bytes) -> bytes:
 
 def _alg2_file_key(pw: bytes, o: bytes, p: int, id0: bytes, r: int,
                    nbytes: int, encrypt_metadata: bool) -> bytes:
-    """Algorithm 2: RC4/AESV2 file key from the user password."""
+    """Algorithm 2: RC4/AESV2 file key from the user password.
+
+    /P is a 32-bit two's-complement field that producers write signed
+    (-44) or unsigned (4294967252); both spell the same four bytes."""
     h = hashlib.md5(_pad_pw(pw) + o[:32]
-                    + struct.pack("<i", p) + id0)
+                    + struct.pack("<I", p & 0xFFFFFFFF) + id0)
     if r >= 4 and not encrypt_metadata:
         h.update(b"\xff\xff\xff\xff")
     key = h.digest()

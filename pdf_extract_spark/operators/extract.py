@@ -8,9 +8,10 @@ the single-node golden SHA-256s, so distributed output is byte-identical by
 construction; tests assert it stays that way under any partitioning.
 
 Skew handling (SURVEY.md O7): payloads spread by unique-url hash — at
-scale statistically round-robin for the oversized tail (see
-salted_repartition). AQE cannot fix map-side payload skew, so this is
-explicit.
+scale statistically round-robin for the oversized tail — over as many
+partitions as the input has, and at least as many as there are cores,
+unless told otherwise (see derived_width). AQE cannot fix map-side
+payload skew, so this is explicit.
 """
 
 from __future__ import annotations
@@ -26,11 +27,31 @@ EXTRACT_SCHEMA = (
     "error string"
 )
 
-def salted_repartition(df: DataFrame, num_partitions: int,
+def derived_width(df: DataFrame) -> int:
+    """Url-hash spread width when the caller gives none: one partition per
+    input partition of ``df`` — for a file scan, one per byte-bounded
+    split (``spark.sql.files.maxPartitionBytes``) — and never fewer than
+    the cores (``defaultParallelism``, always >= 1). Each decode task pays
+    a fixed Python-worker cost whatever it holds, so a width that follows
+    the input's bytes instead of a constant keeps that cost proportional
+    to the data; the floor keeps inputs with few partitions (``synth:``'s
+    generator splits, one per unsplittable WARC file, an empty table's
+    zero) from leaving cores idle or asking for zero partitions.
+
+    Call it before any join or aggregation enters ``df``'s plan: with AQE
+    on, asking an exchange-bearing plan for its partitions runs its
+    stages."""
+    return max(df.rdd.getNumPartitions(),
+               df.sparkSession.sparkContext.defaultParallelism)
+
+
+def salted_repartition(df: DataFrame, num_partitions: int | None,
                        key: str = "url") -> DataFrame:
     """Skew-spreading repartition on the key hash (BASELINE.json north_star:
     'salted repartitioning on url-hash to break skew from oversized
     documents'): ONE scan, ONE shuffle, exactly num_partitions outputs.
+
+    ``num_partitions=None`` takes the count from ``derived_width(df)``.
 
     Why plain key-hash suffices for the oversized tail: keys are unique, so
     heavy rows land uniformly at random; with B heavy rows over P
@@ -40,12 +61,17 @@ def salted_repartition(df: DataFrame, num_partitions: int,
     earlier two-class variant (filter big/small, round-robin the big rows)
     gave exact balance but scanned the payload column twice and produced
     2×P partitions — worse at 100 TB than the hash spread it replaced.
+    The spread stays even at the input's own width: heavy documents
+    written together share a row group, and decoding the scan splits in
+    place leaves that one split's task as the job's straggler.
 
     Hash directly on the key column — NOT on a precomputed
     pmod(xxhash64(key), n) bucket id: repartition hashes its expression
     again, and re-hashing n distinct bucket ids into n partitions is a
     balls-in-bins throw (~1/e of partitions empty, others 2-3 buckets) — a
     3× straggler skew that halves scaling efficiency."""
+    if num_partitions is None:
+        num_partitions = derived_width(df)
     return df.repartition(num_partitions, F.col(key))
 
 
@@ -96,6 +122,13 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def extract_text(pages: DataFrame, num_partitions: int | None = None) -> DataFrame:
     """pages(url, warc_ts, html, text, lang) → extracted table.
 
+    ``num_partitions`` spreads the rows over that many url-hash
+    partitions before the decode. None here means NO shuffle: decode in
+    the input's own partitions (the streaming ingest keeps its
+    micro-batches narrow this way) — unlike ``salted_repartition`` and
+    ``run_extraction``, where None means ``derived_width``. Callers that
+    want the derived spread resolve it first and pass the int.
+
     Column pruning note: only url/warc_ts/html/lang are read — the input
     `text` column is never deserialized (Catalyst prunes it from the scan).
     """
@@ -104,13 +137,3 @@ def extract_text(pages: DataFrame, num_partitions: int | None = None) -> DataFra
         df = salted_repartition(df, num_partitions)
     return df.mapInPandas(_decode_batches, schema=EXTRACT_SCHEMA)
 
-
-def quarantine(extracted: DataFrame) -> DataFrame:
-    """Error rows → quarantine table (reference error_final analog,
-    /root/reference/modules/graphs.py:22-30)."""
-    return (extracted.filter(F.col("error").isNotNull())
-            .select("url", F.lit("extract").alias("stage"), "error"))
-
-
-def extracted_ok(extracted: DataFrame) -> DataFrame:
-    return extracted.filter(F.col("error").isNull())

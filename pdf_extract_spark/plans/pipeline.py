@@ -1,4 +1,5 @@
-"""End-to-end extraction job: scan → salted repartition → extract →
+"""End-to-end extraction job: scan → salted repartition (one partition per
+input split and at least one per core, unless told otherwise) → extract →
 single partitioned write + per-partition lineage, checkpoint-resumable.
 
 North-rule mechanics (BASELINE.json:14): per-partition lineage rows
@@ -41,7 +42,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import extract_text
+from ..operators.extract import derived_width, extract_text
 
 LINEAGE_SCHEMA = ("run_id string, partition_id int, n_in long, n_out long, "
                   "n_err long, digest string")
@@ -197,6 +198,11 @@ def _publish_lineage(lineage: DataFrame, out_dir: str, lineage_dir: str,
     return tab
 
 
+# the columns of the extracted table the lineage re-read needs
+_STAGED_SCHEMA = ("partition_id int, text_sha256 string, error string, "
+                  "run_id string")
+
+
 class ParquetRunWriter:
     """Default output writer: directory-partitioned parquet append. Run
     atomicity comes from the surrounding run-level commit protocol
@@ -250,10 +256,15 @@ def run_extraction(
     pages: DataFrame,
     out_dir: str,
     run_id: str,
-    num_partitions: int = 32,
+    num_partitions: int | None = None,
     writer=None,
 ) -> dict:
     """Run (or resume) the extraction job. Returns counters for the run.
+
+    `num_partitions` is the width of the url-hash spread before the
+    decode; None (the default) takes it from `pages` itself — one decode
+    task per input split, at least one per core (operators.extract.
+    derived_width).
 
     `writer` is the output-format seam (default ParquetRunWriter; pass an
     IcebergRunWriter on a cluster with the runtime jar)."""
@@ -278,6 +289,11 @@ def run_extraction(
             f"run_id {run_id!r} is already committed in {out_dir}; "
             "use a new run_id for each invocation (resume is automatic)")
 
+    if num_partitions is None:
+        # counted on `pages` before the resume anti-join enters the plan
+        # (a joined plan would run its stages just to report a count), and
+        # always resolved: extract_text reads None as "no shuffle"
+        num_partitions = derived_width(pages)
     done = _read_urls(spark, extracted_dir)
     todo = pages
     snap_dir = None
@@ -314,7 +330,8 @@ def run_extraction(
     lineage_spark = spark.newSession()
     lineage_spark.conf.set("spark.sql.files.maxPartitionBytes",
                            str(512 * 1024 * 1024))
-    staged = (lineage_spark.read.parquet(extracted_dir)
+    # explicit schema: an empty run writes no data files to infer it from
+    staged = (lineage_spark.read.schema(_STAGED_SCHEMA).parquet(extracted_dir)
               .filter(F.col("run_id") == run_id)
               .select("partition_id", "text_sha256", "error"))
     tab = _publish_lineage(lineage_rows(staged, run_id), out_dir,

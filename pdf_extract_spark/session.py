@@ -16,14 +16,28 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings")
 
 
+# Arrow batches handed to mapInPandas close at whichever cap they reach
+# first: 4096 rows bounds per-batch bookkeeping on small pages, 1 MB
+# bounds worker memory on large ones. The byte cap came with one decode
+# task per input split, at least one per core (operators.extract.
+# derived_width, in place of a fixed 32): fuller tasks hold more
+# rows at once. On the extraction benchmark (4 cores) worker peak RSS is
+# 147 MB with the row cap alone and 137.6 MB with 1 MB batches, against
+# 131.4 MB for the old 32-way layout.
+# Fewer tasks pay off because each Python task costs ~0.3 core-s whatever
+# it holds (a passthrough mapInPandas over 6,000 rows: 2.2 CPU-s at 4
+# tasks, 10.4 at 32). A cProfile of the worker puts that cost in
+# pyspark's worker_util.setup_spark_files: importlib.invalidate_caches()
+# re-reads the pyspark.zip directory 16 times per task. The url-hash
+# spread stays: decoding the scan splits in place leaves the split
+# holding a block of many-page PDFs a straggler.
+ARROW_MAX_RECORDS_PER_BATCH = 4096
+ARROW_MAX_BYTES_PER_BATCH = 1 << 20
+
+
 def get_spark(master: str | None = None,
               app_name: str = "pdf-extract-spark",
-              shuffle_partitions: int | None = None,
-              arrow_batch: int = 4096) -> SparkSession:
-    # arrow_batch sizing: target ~10-30 MB per Arrow batch so per-batch
-    # fixed costs (pandas block build, IPC framing) amortize. 4096 rows of
-    # ~3 KB sandbox pages ≈ 12 MB; for ~60 KB real Common-Crawl pages set
-    # SPARK_GRAFT env / pass ~512.
+              shuffle_partitions: int | None = None) -> SparkSession:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -37,7 +51,10 @@ def get_spark(master: str | None = None,
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", str(arrow_batch))
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch",
+                str(ARROW_MAX_RECORDS_PER_BATCH))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_MAX_BYTES_PER_BATCH))
         # free Arrow IPC buffers during the pandas conversion instead of
         # holding both copies: ~8% on the decode phase (6.55s vs 7.11s on
         # the 300k-page A/B) and lower worker peak memory. Arrow IPC

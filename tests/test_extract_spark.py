@@ -156,7 +156,8 @@ def test_salted_repartition_balances_oversized_tail(spark):
     must cap the max partition byte load near the mean; naive url-hash
     partitioning would let multiple oversized docs co-locate by chance."""
     import pyspark.sql.functions as F
-    from pdf_extract_spark.operators.extract import salted_repartition
+    from pdf_extract_spark.operators.extract import (derived_width,
+                                                     salted_repartition)
 
     # 400 small docs (~1 KB) + 96 oversized (~512 KB): heavy tail ~99% of
     # bytes; unique-url hashing must spread it near-uniformly
@@ -166,17 +167,22 @@ def test_salted_repartition_balances_oversized_tail(spark):
               bytearray(b"y" * (512 * 1024)), None, "en") for i in range(96)]
     df = spark.createDataFrame(rows, pages.PAGES_SCHEMA)
 
-    parts = (salted_repartition(df, 12)
-             .select(F.spark_partition_id().alias("p"),
-                     F.length("html").alias("n"))
-             .groupBy("p").agg(F.sum("n").alias("part_bytes"))
-             .collect())
-    loads = [r["part_bytes"] for r in parts]
-    total = sum(loads)
-    assert len(loads) <= 12
-    # uniform hash of 96 heavy keys over 12 partitions: mean 8/partition;
-    # no partition may carry more than ~2.5× the mean byte load
-    assert max(loads) < 0.21 * total, loads
+    # an explicit width, and None: the derived width (the heavy rows are
+    # contiguous, so the input's own layout packs them into its last
+    # partitions)
+    for width in (12, None):
+        n = width or derived_width(df)
+        parts = (salted_repartition(df, width)
+                 .select(F.spark_partition_id().alias("p"),
+                         F.length("html").alias("n"))
+                 .groupBy("p").agg(F.sum("n").alias("part_bytes"))
+                 .collect())
+        loads = [r["part_bytes"] for r in parts]
+        total = sum(loads)
+        assert len(loads) <= n
+        # uniform hash of 96 heavy keys over n partitions; no partition
+        # may carry more than ~2.5× the mean byte load
+        assert max(loads) * n < 2.52 * total, (width, loads)
 
 
 def test_crash_between_data_and_lineage_writes(spark, tmp_path_factory):
@@ -330,3 +336,95 @@ def test_charset_declared_pages_flow_through_extract(spark):
     # the two BOM/meta decodes must agree with the plain-utf8 text
     plain, _ = decode_payload(doc("").encode("utf-8"))
     assert got["cs://bom-utf8"][0] == text_sha256(plain)
+
+
+def test_run_extraction_derives_layout_from_input(spark, tmp_path_factory):
+    """With no num_partitions, run_extraction decodes in one url-hash
+    partition per input partition: a table with more partitions than
+    cores, whose heavy rows all sit in one input partition, commits one
+    lineage partition per input partition, spreads the heavy rows across
+    them, and matches the single-node golden and an explicit-width run."""
+    import datetime as dt
+
+    import pyspark.sql.functions as F
+
+    base = str(tmp_path_factory.mktemp("derived"))
+    ts = dt.datetime(2026, 1, 1)
+    heavy = [(f"https://heavy.example/{i:02d}", ts,
+              ("<html><body><article><p>"
+               + f"heavy document {i} paragraph words " * 6000
+               + "</p></article></body></html>").encode(), None, "en")
+             for i in range(8)]
+    rows = pages.make_rows(120) + heavy  # heavy rows: the last input slice
+    n_in = spark.sparkContext.defaultParallelism + 4
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, n_in),
+                               pages.PAGES_SCHEMA)
+    assert df.rdd.getNumPartitions() == n_in
+
+    stats = run_extraction(spark, df, f"{base}/derived", run_id="r1")
+    assert stats["n_in"] == len(rows)
+    lineage = spark.read.parquet(f"{base}/derived/lineage")
+    assert lineage.count() == n_in
+    heavy_parts = (extracted_ok(spark, f"{base}/derived")
+                   .filter(F.col("url").startswith("https://heavy."))
+                   .select("partition_id").distinct().count())
+    assert heavy_parts > 1
+
+    golden = {}
+    for url, _, payload, _, _ in rows:
+        text, err = decode_payload(payload)
+        golden[url] = (text_sha256(text) if text is not None else None, err)
+    got = _collect_shas(spark.read.parquet(f"{base}/derived/extracted"))
+    assert got == golden
+    run_extraction(spark, df, f"{base}/explicit", run_id="r1",
+                   num_partitions=5)
+    assert final_digest(spark, f"{base}/derived") \
+        == final_digest(spark, f"{base}/explicit")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_derived_width_floors_at_the_cores(spark, tmp_path_factory):
+    """An input with fewer partitions than cores, or none at all (an empty
+    table), still decodes one url-hash partition per core, and
+    run_extraction runs on an empty pages table."""
+    from pdf_extract_spark.operators.extract import derived_width
+
+    cores = spark.sparkContext.defaultParallelism
+    few = spark.createDataFrame(
+        spark.sparkContext.parallelize(pages.make_rows(20), 2),
+        pages.PAGES_SCHEMA)
+    empty = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                  pages.PAGES_SCHEMA)
+    assert empty.rdd.getNumPartitions() == 0
+    assert derived_width(few) == derived_width(empty) == cores
+
+    base = str(tmp_path_factory.mktemp("empty"))
+    stats = run_extraction(spark, empty, base, run_id="r1")
+    assert (stats["n_in"], stats["n_err"]) == (0, 0)
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_arrow_batches_are_byte_bounded(spark):
+    """mapInPandas receives Arrow batches no larger than the session's
+    byte bound, well before the row cap closes them."""
+    from pdf_extract_spark.session import (ARROW_MAX_BYTES_PER_BATCH,
+                                           ARROW_MAX_RECORDS_PER_BATCH)
+
+    rows = [(f"https://b.example/{i:05d}", bytes([65 + i % 26]) * 3000)
+            for i in range(2000)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
+                               "url string, html binary")
+
+    def sizes(batches):
+        import pandas as pd
+        for pdf in batches:
+            yield pd.DataFrame({
+                "rows": [len(pdf)],
+                "bytes": [int(pdf["html"].map(len).sum()
+                              + pdf["url"].str.len().sum())]})
+
+    got = df.mapInPandas(sizes, "rows long, bytes long").collect()
+    assert sum(r["rows"] for r in got) == len(rows)
+    assert len(got) > 1
+    assert max(r["bytes"] for r in got) <= ARROW_MAX_BYTES_PER_BATCH
+    assert max(r["rows"] for r in got) < ARROW_MAX_RECORDS_PER_BATCH

@@ -416,6 +416,25 @@ def test_pdf_encrypted_taxonomy():
     assert extract_pdf_text(iv_hit)[0] == "secret line"
 
 
+def test_pdf_encrypted_unsigned_p_matches_signed():
+    """/P written unsigned (4294967252) is the same 32-bit field as the
+    fixtures' signed -44: Algorithm 2 must derive the same key from
+    both spellings, so the document decrypts instead of quarantining."""
+    import re
+
+    pgs = [pdf_writer.page_ops_simple(["unsigned permissions line"])]
+    for mode in ("rc4-40", "rc4-128", "aesv2"):
+        signed = pdf_writer.build_pdf2(pgs, encrypt=mode)
+        unsigned = signed.replace(b"/P -44 ", b"/P 4294967252 ")
+        # the /Encrypt dict is the last object, so only startxref moves
+        shift = len(unsigned) - len(signed)
+        unsigned = re.sub(
+            rb"startxref\n(\d+)",
+            lambda m: b"startxref\n%d" % (int(m.group(1)) + shift), unsigned)
+        assert extract_pdf_text(unsigned) == extract_pdf_text(signed) \
+            == ("unsigned permissions line", None), mode
+
+
 def test_pdf_literal_string_escapes():
     """_parse_value unescapes literal strings at the byte level (octal,
     named escapes, line continuations) — required for /O //U key
