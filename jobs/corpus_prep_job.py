@@ -31,7 +31,7 @@ def main() -> None:
     ap.add_argument("--output", required=True)
     ap.add_argument("--partitions", type=int, default=None,
                     help="decode partitions and synth: splits (default: "
-                         "the session's default parallelism)")
+                         "one per input split, at least one per core)")
     ap.add_argument("--master", default=None)
     ap.add_argument("--fail-after", default=None, choices=[None] + [
         "extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",

@@ -14,18 +14,20 @@ this is the corpus-scale equivalent over Common-Crawl-style pages):
     split        deterministic train/val/test + decontamination flags
     pack         fixed-budget sequence packing of the train split
 
-Stage-granular commit protocol (same discipline as plans/pipeline.py, at
-stage rather than run granularity): each stage writes its output in ONE
-dynamically-partitioned pass under ``<out>/stages/<name>/data/st={ok,
-err}`` (survivors / quarantine — a single write action, so the stage
-plan executes exactly once) and is COMMITTED only when its lineage row
-set — counts + order-insensitive digest — appears at
+Stage-granular commit protocol (plans/commit.py — the extraction job's
+rule, at stage rather than run granularity): each stage writes its
+output in ONE dynamically-partitioned pass under ``<out>/stages/<name>/
+data/st={ok,err}`` (survivors / quarantine — a single write action, so
+the stage plan executes exactly once) and is COMMITTED only when its
+lineage row — counts + order-insensitive digest — appears at
 ``<out>/lineage/<name>.parquet`` via an atomic rename. On (re)start, any
 stage directory without its lineage file is a crashed partial write and
 is deleted wholesale; committed stages are never recomputed — a rerun
 after a kill converges to the byte-identical final corpus digest
 (test-gated in tests/test_corpus_job.py, including a kill between the
-data write and the commit marker, the worst crash point).
+data write and the commit marker, the worst crash point, and a torn
+marker). run_corpus_prep walks the stages in one loop: read the marker,
+then skip, or build, write and commit.
 
 Production-hash discipline: the isolated registry queries pay sha256 per
 gram/paragraph so DuckDB can replay them value-exactly; this job is the
@@ -73,14 +75,15 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from ..operators.extract import extract_text
+from ..operators.extract import derived_width, extract_text
 from ..queries.text_q import _NORM_PASSES
 from ..queries.pipeline_q import _PAT_EMAIL, _PAT_IP, _PAT_PHONE
-from .pipeline import _is_torn_parquet, _sum_digest
+from .commit import publish_marker, read_marker, sum_digest, sweep_tmp
 
 STAGES = ("extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",
           "cut_spans", "split", "pack")
@@ -91,8 +94,6 @@ STAGES = ("extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",
 # corpus where committed downstream tables saw different text).
 
 QUAR_SCHEMA = "url string, stage string, error string"
-LINEAGE_SCHEMA = ("stage string, n_in long, n_out long, n_quarantined long, "
-                  "digest string")
 
 # Lineage format version, stamped into every commit marker. Resume trusts
 # committed stage TABLES as-is, so a marker written by incompatible code
@@ -739,43 +740,26 @@ def _lineage_path(out_dir: str, stage: str) -> str:
 
 
 def _publish_stage_lineage(out_dir: str, stage: str, n_in: int, n_out: int,
-                           n_quar: int, digest: str) -> None:
-    """Atomic commit marker: one tiny parquet file, temp-write +
-    os.replace (POSIX-atomic rename; an Iceberg writer folds this into
-    the table transaction — see plans/pipeline.IcebergRunWriter)."""
+                           n_quar: int, digest: str) -> dict:
+    """Commit ``stage``: publish its marker (commit.publish_marker) and
+    return the committed lineage as _read_stage_lineage would."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    tab = pa.table({
-        "stage": [stage],
-        "n_in": [int(n_in)], "n_out": [int(n_out)],
-        "n_quarantined": [int(n_quar)], "digest": [digest],
-        "fmt": [LINEAGE_FMT],
-    })
-    os.makedirs(os.path.join(out_dir, "lineage"), exist_ok=True)
-    tmp = os.path.join(out_dir, f"_lineage_tmp_{stage}.parquet")
-    pq.write_table(tab, tmp)
-    os.replace(tmp, _lineage_path(out_dir, stage))
+    lin = {"stage": stage, "n_in": int(n_in), "n_out": int(n_out),
+           "n_quarantined": int(n_quar), "digest": digest,
+           "fmt": LINEAGE_FMT}
+    publish_marker(pa.table({k: [v] for k, v in lin.items()}), out_dir,
+                   _lineage_path(out_dir, stage))
+    return lin
 
 
 def _read_stage_lineage(out_dir: str, stage: str) -> dict | None:
-    """None if the stage is uncommitted. A torn lineage file (crash inside
-    the publish itself) is removed — its stage is uncommitted by
-    definition; an unreadable-but-not-provably-torn file aborts (same
-    refusal discipline as plans/pipeline._committed_run_ids)."""
+    """None if the stage is uncommitted; a torn marker is removed and an
+    unreadable one aborts (commit.read_marker)."""
     path = _lineage_path(out_dir, stage)
-    if not os.path.exists(path):
+    t = read_marker(path)
+    if t is None:
         return None
-    import pyarrow.parquet as pq
-    try:
-        t = pq.read_table(path)
-    except Exception as e:
-        if _is_torn_parquet(path):
-            os.remove(path)
-            return None
-        raise RuntimeError(
-            f"stage lineage {path} unreadable but not provably torn "
-            f"({e!r}); refusing to resume") from e
     lin = {k: t.column(k)[0].as_py() for k in t.column_names}
     fmt = lin.get("fmt")
     if fmt != LINEAGE_FMT:
@@ -798,7 +782,7 @@ def _docs_count_digest(spark: SparkSession, docs_dir: str) -> tuple[int, str]:
     df = spark.read.parquet(docs_dir).select("url", "text_sha")
     row = df.agg(
         F.count("*").alias("n"),
-        _sum_digest(
+        sum_digest(
             "sha2(concat_ws('|', url, coalesce(text_sha, '0')), 256)")
         .alias("d")).collect()[0]
     return row["n"], row["d"]
@@ -844,8 +828,6 @@ def run_corpus_prep(
     Returns {"stages": {name: {...}}, "n_docs": int, "wall_s": float}.
     """
     t_job = time.monotonic()
-    if num_partitions is None:
-        num_partitions = spark.sparkContext.defaultParallelism
 
     # flag-stability guards: committed state must agree with cut_spans
     cut_lin = _read_stage_lineage(out_dir, "cut_spans")
@@ -867,39 +849,16 @@ def run_corpus_prep(
         sdir = _stage_dir(out_dir, stage)
         if os.path.isdir(sdir) and _read_stage_lineage(out_dir, stage) is None:
             shutil.rmtree(sdir, ignore_errors=True)
-    if os.path.isdir(out_dir):
-        for name in os.listdir(out_dir):
-            if name.startswith("_lineage_tmp_"):
-                os.remove(os.path.join(out_dir, name))
+    sweep_tmp(out_dir)
 
-    stats: dict = {"stages": {}}
-    prev_docs: DataFrame | None = None
-    prev_n: int = 0
-    t_stage = [time.monotonic()]  # per-stage wall clock (scaling forensics:
-    #                               which stage stops scaling names the
-    #                               bottleneck, tools/corpus_scale_run.py)
-
-    def _stamp(stage: str) -> None:
-        now = time.monotonic()
-        stats["stages"][stage]["wall_s"] = round(now - t_stage[0], 3)
-        t_stage[0] = now
-
-    def _commit_docs_stage(stage: str, staged: DataFrame,
-                           n_in: int | None) -> tuple[DataFrame, int]:
-        """ONE-PASS stage commit: ``staged`` carries the stage's doc
+    def write_docs(stage: str, staged: DataFrame) -> tuple[int, int, str]:
+        """ONE-PASS stage write: ``staged`` carries the stage's doc
         columns plus a nullable ``error`` column (null = survivor), and
         is written ONCE, dynamically partitioned on st=ok|err — so the
-        stage plan executes exactly once per job (previously ok and
-        quarantine were two separate write actions and every stage
-        recomputed its full plan twice). The task-local sort the dynamic
-        writer inserts is over a 2-value column — noise next to a second
-        full compute of the stage. Publishes lineage after the write
-        (the commit) and returns the READ-BACK ok docs (downstream
-        stages consume the committed table, decoupling their plans from
-        this stage's). ``n_in=None`` derives the input count as
-        n_out + n_quarantined (the extract stage, whose input would
-        otherwise need a second full scan of the pages table just to
-        count it)."""
+        stage plan executes exactly once per job. The task-local sort the
+        dynamic writer inserts is over a 2-value column — noise next to a
+        second full compute of the stage. Returns (n_out, n_quarantined,
+        digest) of the rows written."""
         data_dir = os.path.join(_stage_dir(out_dir, stage), "data")
         (staged.withColumn("st", F.when(F.col("error").isNull(),
                                         F.lit("ok")).otherwise(F.lit("err")))
@@ -916,149 +875,111 @@ def run_corpus_prep(
         qdir = _quarantine_dir(out_dir, stage)
         n_quar = (spark.read.parquet(qdir).count()
                   if os.path.isdir(qdir) else 0)
-        committed = spark.read.parquet(docs_dir).drop("error")
         n_out, digest = _docs_count_digest(spark, docs_dir)
-        if n_in is None:
-            n_in = n_out + n_quar
-        _publish_stage_lineage(out_dir, stage, n_in, n_out, n_quar, digest)
-        stats["stages"][stage] = {
-            "status": "ran", "n_in": n_in, "n_out": n_out,
-            "n_quarantined": n_quar, "digest": digest}
-        _stamp(stage)
-        return committed, n_out
+        return n_out, n_quar, digest
 
-    def _skip(stage: str, lin: dict) -> tuple[DataFrame, int]:
-        stats["stages"][stage] = {**{k: lin[k] for k in
-                                     ("n_in", "n_out", "n_quarantined",
-                                      "digest")},
-                                  "status": "skipped"}
-        _stamp(stage)
-        docs_dir = _stage_docs_dir(out_dir, stage)
-        return spark.read.parquet(docs_dir).drop("error"), lin["n_out"]
+    def write_sequences(stage: str, seqs: DataFrame) -> tuple[int, int, str]:
+        seq_dir = os.path.join(_stage_dir(out_dir, stage), "sequences")
+        seqs.write.mode("overwrite").parquet(seq_dir)
+        if fail_after == stage:
+            raise CorpusJobInterrupted(stage)
+        row = spark.read.parquet(seq_dir).agg(
+            F.count("*").alias("n"),
+            sum_digest("sha2(concat_ws('|', seq_id, url, tok_begin,"
+                       " tok_end), 256)").alias("d")).collect()[0]
+        return row["n"], 0, row["d"]
 
-    # --- extract ---
-    lin = _read_stage_lineage(out_dir, "extract")
-    if lin is not None:
-        prev_docs, prev_n = _skip("extract", lin)
-    else:
+    # callbacks a build registers, run once its stage's write ends (a
+    # reusable ExitStack: one `with` per stage)
+    release = ExitStack()
+
+    def extract(_docs) -> DataFrame:
         if pages is None:
             raise ValueError("extract stage uncommitted and pages=None")
-        ext = extract_text(pages, num_partitions=num_partitions)
-        staged = ext.select("url", "warc_ts", "lang", "doc_kind", "text",
-                            F.col("text_sha256").alias("text_sha"), "error")
-        prev_docs, prev_n = _commit_docs_stage("extract", staged, n_in=None)
+        # sized here, not up front: on resume pages may be None
+        width = (derived_width(pages) if num_partitions is None
+                 else num_partitions)
+        return (extract_text(pages, num_partitions=width)
+                .select("url", "warc_ts", "lang", "doc_kind", "text",
+                        F.col("text_sha256").alias("text_sha"), "error"))
 
-    # --- clean ---
-    lin = _read_stage_lineage(out_dir, "clean")
-    if lin is not None:
-        prev_docs, prev_n = _skip("clean", lin)
-    else:
-        staged = clean_docs(prev_docs).withColumn(
+    def dedup_doc(docs: DataFrame) -> DataFrame:
+        kept, dropped, cached = dedup_documents(docs)
+        # released on every exit path, the fail_after hook and write
+        # errors included: never leak a corpus-sized MEMORY_AND_DISK
+        # cache into a long-lived session
+        release.callback(cached.unpersist)
+        return (kept.withColumn("error", F.lit(None).cast("string"))
+                .unionByName(dropped, allowMissingColumns=True))
+
+    # stage -> build(docs): the staged table of the stage, built from the
+    # previous stage's committed docs, in STAGES order
+    builds = {
+        "extract": extract,
+        "clean": lambda docs: clean_docs(docs).withColumn(
             "error", F.when(F.length("text") == 0,
-                            F.lit("empty_after_normalize")))
-        prev_docs, prev_n = _commit_docs_stage("clean", staged, prev_n)
-
-    # --- gate ---
-    lin = _read_stage_lineage(out_dir, "gate")
-    if lin is not None:
-        prev_docs, prev_n = _skip("gate", lin)
-    else:
-        staged = (gate_docs(prev_docs)
-                  .select("url", "warc_ts", "lang", "doc_kind", "text",
-                          "text_sha", "n_words", "domain",
-                          F.col("reject_reason").alias("error")))
-        prev_docs, prev_n = _commit_docs_stage("gate", staged, prev_n)
-
-    # --- classify (declared-vs-predicted language gate) ---
-    lin = _read_stage_lineage(out_dir, "classify")
-    if lin is not None:
-        prev_docs, prev_n = _skip("classify", lin)
-    else:
-        staged = (classify_docs(prev_docs)
-                  .select("url", "warc_ts", "lang", "text", "text_sha",
-                          "n_words", "domain",
-                          F.when(~F.col("keep"),
-                                 F.concat(F.lit("lang_mismatch:"),
-                                          F.col("pred_lang")))
-                          .alias("error")))
-        prev_docs, prev_n = _commit_docs_stage("classify", staged, prev_n)
-
-    # --- dedup_para ---
-    lin = _read_stage_lineage(out_dir, "dedup_para")
-    if lin is not None:
-        prev_docs, prev_n = _skip("dedup_para", lin)
-    else:
-        staged = dedup_paragraphs(prev_docs).withColumn(
+                            F.lit("empty_after_normalize"))),
+        "gate": lambda docs: gate_docs(docs).select(
+            "url", "warc_ts", "lang", "doc_kind", "text", "text_sha",
+            "n_words", "domain", F.col("reject_reason").alias("error")),
+        # declared-vs-predicted language gate
+        "classify": lambda docs: classify_docs(docs).select(
+            "url", "warc_ts", "lang", "text", "text_sha", "n_words",
+            "domain",
+            F.when(~F.col("keep"), F.concat(F.lit("lang_mismatch:"),
+                                            F.col("pred_lang")))
+            .alias("error")),
+        "dedup_para": lambda docs: dedup_paragraphs(docs).withColumn(
             "error", F.when(F.col("n_kept") == 0,
-                            F.lit("all_paragraphs_duplicate")))
-        prev_docs, prev_n = _commit_docs_stage("dedup_para", staged, prev_n)
+                            F.lit("all_paragraphs_duplicate"))),
+        "dedup_doc": dedup_doc,
+        # optional ExactSubstr excision, Lee et al. 2022
+        "cut_spans": lambda docs: cut_dup_spans(docs).withColumn(
+            "error", F.when(F.length("text") == 0,
+                            F.lit("all_text_duplicate"))),
+        "split": lambda docs: split_docs(docs).withColumn(
+            "error", F.lit(None).cast("string")),
+        # an aux output table: sequences, not docs (n_docs is read when
+        # the build runs, after split has set it)
+        "pack": lambda docs: pack_train(docs, approx_n=n_docs),
+    }
+    if not cut_spans:
+        del builds["cut_spans"]
 
-    # --- dedup_doc ---
-    lin = _read_stage_lineage(out_dir, "dedup_doc")
-    if lin is not None:
-        prev_docs, prev_n = _skip("dedup_doc", lin)
-    else:
-        kept, dropped, cached = dedup_documents(prev_docs)
-        staged = (kept.withColumn("error", F.lit(None).cast("string"))
-                  .unionByName(dropped, allowMissingColumns=True))
-        try:
-            prev_docs, prev_n = _commit_docs_stage("dedup_doc", staged,
-                                                   prev_n)
-        finally:
-            # also on the fail_after crash-injection path / write errors:
-            # never leak a corpus-sized MEMORY_AND_DISK cache into a
-            # long-lived session
-            cached.unpersist()
-
-    # --- cut_spans (optional ExactSubstr excision, Lee et al. 2022) ---
-    if cut_spans:
-        lin = _read_stage_lineage(out_dir, "cut_spans")
-        if lin is not None:
-            prev_docs, prev_n = _skip("cut_spans", lin)
-        else:
-            staged = cut_dup_spans(prev_docs).withColumn(
-                "error", F.when(F.length("text") == 0,
-                                F.lit("all_text_duplicate")))
-            prev_docs, prev_n = _commit_docs_stage("cut_spans", staged,
-                                                   prev_n)
-
-    # --- split ---
-    lin = _read_stage_lineage(out_dir, "split")
-    if lin is not None:
-        prev_docs, prev_n = _skip("split", lin)
-    else:
-        staged = split_docs(prev_docs).withColumn(
-            "error", F.lit(None).cast("string"))
-        prev_docs, prev_n = _commit_docs_stage("split", staged, prev_n)
-
-    # --- pack (aux output table: sequences, not docs) ---
-    lin = _read_stage_lineage(out_dir, "pack")
-    if lin is not None:
-        stats["stages"]["pack"] = {
+    stats: dict = {"stages": {}}
+    docs: DataFrame | None = None
+    n_docs = 0
+    # per-stage wall clock (scaling forensics: which stage stops scaling
+    # names the bottleneck, tools/scale_run.py --job corpus)
+    t_stage = time.monotonic()
+    for stage, build in builds.items():
+        lin = _read_stage_lineage(out_dir, stage)
+        status = "skipped"
+        if lin is None:
+            status = "ran"
+            write = write_sequences if stage == "pack" else write_docs
+            with release:
+                n_out, n_quar, digest = write(stage, build(docs))
+            # the extract stage's input is what it wrote: counting the
+            # pages table would take a second full scan of it
+            n_in = n_out + n_quar if stage == "extract" else n_docs
+            lin = _publish_stage_lineage(out_dir, stage, n_in, n_out,
+                                         n_quar, digest)
+        now = time.monotonic()
+        stats["stages"][stage] = {
+            "status": status,
             **{k: lin[k] for k in ("n_in", "n_out", "n_quarantined",
                                    "digest")},
-            "status": "skipped"}
-        _stamp("pack")
-    else:
-        sdir = _stage_dir(out_dir, "pack")
-        seq_dir = os.path.join(sdir, "sequences")
-        pack_train(prev_docs, approx_n=prev_n) \
-            .write.mode("overwrite").parquet(seq_dir)
-        if fail_after == "pack":
-            raise CorpusJobInterrupted("pack")
-        committed = spark.read.parquet(seq_dir)
-        row = committed.agg(
-            F.count("*").alias("n"),
-            _sum_digest("sha2(concat_ws('|', seq_id, url, tok_begin,"
-                        " tok_end), 256)").alias("d")).collect()[0]
-        _publish_stage_lineage(out_dir, "pack", prev_n, row["n"], 0,
-                               row["d"])
-        stats["stages"]["pack"] = {
-            "status": "ran", "n_in": prev_n, "n_out": row["n"],
-            "n_quarantined": 0, "digest": row["d"]}
-        _stamp("pack")
+            "wall_s": round(now - t_stage, 3)}
+        t_stage = now
+        if stage != "pack":
+            # downstream stages consume the COMMITTED table, decoupling
+            # their plans from this stage's
+            docs = (spark.read.parquet(_stage_docs_dir(out_dir, stage))
+                    .drop("error"))
+            n_docs = lin["n_out"]
 
-    stats["n_docs"] = prev_n
+    stats["n_docs"] = n_docs
     stats["wall_s"] = round(time.monotonic() - t_job, 3)
     return stats
 

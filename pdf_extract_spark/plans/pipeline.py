@@ -22,14 +22,14 @@ just written (3 thin columns), and run counters come from the lineage
 table itself — the full extracted text is scanned exactly once and
 written exactly once.
 
-Crash safety (run-level commit protocol): lineage is written LAST and
-published as ONE atomically-renamed parquet file per run, so its presence
-is the commit marker for a run and can never be half-visible. At resume,
-run_id= directories with no lineage (crashed mid-write — committer v2
-exposes task files as tasks finish, possibly torn) are deleted wholesale
-and their input reprocessed; committed runs are never touched, and a
-lineage file that is unreadable without being provably torn (parquet
-footer magic intact) ABORTS the resume rather than risking deletion of
+Crash safety (run-level commit protocol, plans/commit.py): lineage is
+written LAST and published as ONE atomically-renamed parquet file per
+run, so its presence is the commit marker for a run and can never be
+half-visible. At resume, run_id= directories with no lineage (crashed
+mid-write — committer v2 exposes task files as tasks finish, possibly
+torn) are deleted wholesale and their input reprocessed; committed runs
+are never touched, and a lineage file that is unreadable without being
+provably torn ABORTS the resume rather than risking deletion of
 committed data. Iceberg would make data+lineage one transaction; this
 protocol is the parquet equivalent at run granularity, tested including a
 torn-parquet-file crash.
@@ -39,63 +39,31 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import derived_width, extract_text
+from .commit import publish_marker, read_marker, sum_digest, sweep_tmp
 
-LINEAGE_SCHEMA = ("run_id string, partition_id int, n_in long, n_out long, "
-                  "n_err long, digest string")
-
-
-def _is_torn_parquet(path: str) -> bool:
-    """True iff the file is provably NOT a complete parquet file (missing
-    the trailing PAR1 magic) — the signature of a write that crashed
-    mid-flight. Returns False when the file cannot even be read: transient
-    I/O errors must not be mistaken for corruption."""
-    try:
-        with open(path, "rb") as f:
-            size = os.fstat(f.fileno()).st_size
-            if size < 12:  # magic + footer-len + magic is the minimum
-                return True
-            f.seek(-4, os.SEEK_END)
-            return f.read(4) != b"PAR1"
-    except OSError:
-        return False
-
-
-def _committed_run_ids(spark: SparkSession, lineage_dir: str) -> set[str]:
+def _committed_run_ids(lineage_dir: str) -> set[str]:
     """Runs whose lineage exists are committed: lineage is the LAST write
     of a run, so its presence proves the data write completed.
 
     Read file-by-file: a torn lineage file belongs to a run that crashed
     DURING its lineage write (still uncommitted) — it must not poison the
     whole-directory read, or every committed run would look uncommitted
-    and be wrongly deleted. Only files that provably lack the parquet
-    footer magic are treated as torn and removed; any other read failure
-    (transient I/O, environment) aborts the resume instead — wrongly
-    deleting a committed run's lineage would cascade into
-    _cleanup_uncommitted rmtree-ing its DATA."""
+    and be wrongly deleted. Any other unreadable file aborts the resume
+    (commit.read_marker): wrongly dropping a committed run's lineage would
+    cascade into _cleanup_uncommitted rmtree-ing its DATA."""
     if not os.path.isdir(lineage_dir):
         return set()
-    import pyarrow.parquet as pq
-
     committed: set[str] = set()
     for name in sorted(os.listdir(lineage_dir)):
-        if not name.endswith(".parquet"):
-            continue
-        path = os.path.join(lineage_dir, name)
-        try:
-            col = pq.read_table(path, columns=["run_id"]).column("run_id")
-            committed.update(col.to_pylist())
-        except Exception as e:
-            if _is_torn_parquet(path):
-                os.remove(path)  # torn file from a crashed lineage write
-                continue
-            raise RuntimeError(
-                f"lineage file {path} is unreadable but not provably torn "
-                f"({e!r}); refusing to resume — a wrong 'uncommitted' "
-                "verdict here would delete committed data") from e
+        if name.endswith(".parquet"):
+            tab = read_marker(os.path.join(lineage_dir, name))
+            if tab is not None:
+                committed.update(tab.column("run_id").to_pylist())
     return committed
 
 
@@ -108,8 +76,6 @@ def _cleanup_uncommitted(extracted_dir: str, committed: set[str]) -> list[str]:
     without touching committed data. (Local-FS listing here; on a real
     cluster this is the same operation through the Hadoop FS API, and an
     Iceberg writer would make the whole run one transaction instead.)"""
-    from urllib.parse import unquote
-
     removed = []
     if not os.path.isdir(extracted_dir):
         return removed
@@ -126,33 +92,6 @@ def _cleanup_uncommitted(extracted_dir: str, committed: set[str]) -> list[str]:
     return removed
 
 
-def _read_urls(spark: SparkSession, d: str) -> DataFrame | None:
-    try:
-        df = spark.read.parquet(d)
-        return df.select("url")
-    except Exception:
-        return None
-
-
-# Order-insensitive O(1)-state checksum: each row contributes the low 60
-# bits of its sha256 (15 hex chars via conv), summed as DECIMAL(38,0) —
-# exact and commutative, so partition order and merge order never matter —
-# then reduced mod 2^60 and rendered as fixed-width hex. Unlike the
-# previous array_sort(collect_list(...)) digest this buffers ONE number
-# per aggregation state instead of every row digest of a partition (which
-# at 10^12 rows would OOM the agg buffer). It is an audit checksum, not a
-# cryptographic commitment: a 2^-60 collision chance per comparison is
-# fine for detecting divergent reruns.
-_MOD_2_60 = str(1 << 60)
-
-
-def _sum_digest(row_hex_expr: str) -> F.Column:
-    return F.expr(
-        f"lpad(hex(CAST(pmod(SUM(CAST(conv(substring({row_hex_expr}, 1, 15),"
-        f" 16, 10) AS DECIMAL(38,0))), CAST({_MOD_2_60} AS DECIMAL(38,0)))"
-        f" AS BIGINT)), 15, '0')")
-
-
 def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     """One row per task partition: counts + order-insensitive checksum
     (modular sum of per-row text digests — constant agg state)."""
@@ -163,39 +102,11 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
             F.count("*").alias("n_in"),
             F.count("text_sha256").alias("n_out"),
             F.sum(F.when(F.col("error").isNotNull(), 1).otherwise(0)).alias("n_err"),
-            _sum_digest("coalesce(text_sha256, '0')").alias("digest"),
+            sum_digest("coalesce(text_sha256, '0')").alias("digest"),
         )
         .select(F.lit(run_id).alias("run_id"), "partition_id",
                 "n_in", "n_out", "n_err", "digest")
     )
-
-
-def _publish_lineage(lineage: DataFrame, out_dir: str, lineage_dir: str,
-                     run_id: str) -> "pyarrow.Table":
-    """Atomically publish a run's lineage as ONE parquet file and return
-    the published rows as the Arrow table (callers derive run counters
-    from it without another Spark job).
-
-    Lineage presence is the run's commit marker, so the marker itself must
-    appear atomically: a multi-file Spark append under committer v2 can
-    crash having committed a subset of part files, making the run look
-    committed while its audit counters are permanently under-reported.
-    Lineage is tiny (one row per task partition), so it is collected to the
-    driver as Arrow, written to a temp file on the same filesystem, and
-    os.replace'd into place — the POSIX-atomic rename; on S3/HDFS the same
-    role is played by an atomic PUT / create-then-rename, and an Iceberg
-    writer would fold this into the table transaction."""
-    from urllib.parse import quote
-
-    import pyarrow.parquet as pq
-
-    tab = lineage.toArrow()
-    os.makedirs(lineage_dir, exist_ok=True)
-    safe = quote(run_id, safe="")
-    tmp = os.path.join(out_dir, f"_lineage_tmp_{safe}.parquet")
-    pq.write_table(tab, tmp)
-    os.replace(tmp, os.path.join(lineage_dir, f"run-{safe}.parquet"))
-    return tab
 
 
 # the columns of the extracted table the lineage re-read needs
@@ -273,14 +184,11 @@ def run_extraction(
     if writer is None:
         writer = ParquetRunWriter(extracted_dir)
 
-    # run-level commit protocol: drop data from runs that crashed before
-    # their lineage (= commit marker) was written, and sweep lineage temp
-    # files orphaned by a crash inside _publish_lineage itself (written
-    # but never renamed — their runs are uncommitted by definition)
-    for name in os.listdir(out_dir) if os.path.isdir(out_dir) else []:
-        if name.startswith("_lineage_tmp_"):
-            os.remove(os.path.join(out_dir, name))
-    committed = _committed_run_ids(spark, lineage_dir)
+    # run-level commit protocol: sweep marker temp files orphaned by a
+    # crash inside the publish, and drop data from runs that crashed
+    # before their lineage (= commit marker) was written
+    sweep_tmp(out_dir)
+    committed = _committed_run_ids(lineage_dir)
     _cleanup_uncommitted(extracted_dir, committed)
     if run_id in committed:
         # re-using a committed run_id would re-append its lineage rows and
@@ -294,17 +202,21 @@ def run_extraction(
         # (a joined plan would run its stages just to report a count), and
         # always resolved: extract_text reads None as "no shuffle"
         num_partitions = derived_width(pages)
-    done = _read_urls(spark, extracted_dir)
     todo = pages
     snap_dir = None
-    if done is not None:
+    if committed:
         # Snapshot the committed-url set to a staging dir: the extraction plan
         # must NOT read the directory it appends to — Spark refreshes/invalidates
         # cached plans on write-to-path, which would make post-append actions
-        # re-list the output and see their own writes.
+        # re-list the output and see their own writes. Explicit schema: a
+        # committed empty run leaves no data file to infer it from. A read
+        # error raises — taking it for "nothing committed" would decode
+        # and append every committed url a second time.
         snap_dir = os.path.join(out_dir, "_resume_snapshots", run_id)
-        done.write.mode("overwrite").parquet(snap_dir)
-        todo = pages.join(spark.read.parquet(snap_dir), "url", "left_anti")
+        (spark.read.schema("url string").parquet(extracted_dir)
+         .select("url").write.mode("overwrite").parquet(snap_dir))
+        todo = pages.join(spark.read.schema("url string").parquet(snap_dir),
+                          "url", "left_anti")
 
     ext = (
         extract_text(todo, num_partitions=num_partitions)
@@ -334,8 +246,13 @@ def run_extraction(
     staged = (lineage_spark.read.schema(_STAGED_SCHEMA).parquet(extracted_dir)
               .filter(F.col("run_id") == run_id)
               .select("partition_id", "text_sha256", "error"))
-    tab = _publish_lineage(lineage_rows(staged, run_id), out_dir,
-                           lineage_dir, run_id)
+    # ONE marker file, not a Spark append: a multi-file append under
+    # committer v2 can crash having committed a subset of its part files,
+    # leaving a run that looks committed with under-reported counters.
+    # Lineage is one row per task partition, so it comes to the driver.
+    tab = lineage_rows(staged, run_id).toArrow()
+    publish_marker(tab, out_dir, os.path.join(
+        lineage_dir, f"run-{quote(run_id, safe='')}.parquet"))
 
     # run counters from the just-published lineage table (same rows that
     # landed in the commit marker — no extra Spark job)
@@ -363,6 +280,6 @@ def final_digest(spark: SparkSession, out_dir: str) -> str:
     modular sum over per-row sha256(url|text_sha256) — O(1) agg state,
     same construction as the lineage checksum."""
     row = extracted_ok(spark, out_dir).agg(
-        _sum_digest("sha2(concat_ws('|', url, text_sha256), 256)")
+        sum_digest("sha2(concat_ws('|', url, text_sha256), 256)")
         .alias("d")).collect()[0]
     return row["d"]

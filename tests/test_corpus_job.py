@@ -543,3 +543,58 @@ def test_cut_spans_flag_mismatch_guards(spark, tmp_path):
     with pytest.raises(RuntimeError, match="WITHOUT the cut_spans"):
         run_corpus_prep(spark, out2, pages=_span_pages(spark),
                         num_partitions=8, cut_spans=True)
+
+
+# --- commit markers and the decode width -------------------------------------
+
+@pytest.fixture(scope="module")
+def span_job(spark, tmp_path_factory):
+    """The _span_pages job with the decode width left to the job."""
+    out = str(tmp_path_factory.mktemp("spanjob") / "job")
+    run_corpus_prep(spark, out, pages=_span_pages(spark))
+    return out
+
+
+def test_default_decode_width_matches_explicit(spark, tmp_path, span_job):
+    """num_partitions=None sizes the extract decode from the input
+    (operators.extract.derived_width, the extraction job's rule); the
+    corpus is the same at any width."""
+    from pdf_extract_spark.operators.extract import derived_width
+
+    pages = _span_pages(spark)
+    assert derived_width(pages) != 3
+    out = str(tmp_path / "width3")
+    run_corpus_prep(spark, out, pages=pages, num_partitions=3)
+    assert job_digest(out) == job_digest(span_job)
+
+
+def test_torn_stage_marker_reruns_but_unreadable_aborts(spark, tmp_path,
+                                                        span_job):
+    """A stage marker without the parquet footer magic is a crashed
+    publish: it is removed, and its stage and every later one run again
+    to the same digest. A marker that ends in PAR1 but cannot be read
+    ABORTS the resume: calling its stage uncommitted would delete the
+    stage's committed table."""
+    out = str(tmp_path / "torn")
+    with pytest.raises(CorpusJobInterrupted):
+        run_corpus_prep(spark, out, pages=_span_pages(spark),
+                        fail_after="gate")
+    marker = os.path.join(out, "lineage", "clean.parquet")
+    with open(marker, "rb") as f:
+        head = f.read()[:50]
+    with open(marker, "wb") as f:
+        f.write(head)
+    stats = run_corpus_prep(spark, out, pages=_span_pages(spark))
+    assert {name: s["status"] for name, s in stats["stages"].items()} == {
+        "extract": "skipped", "clean": "ran", "gate": "ran",
+        "classify": "ran", "dedup_para": "ran", "dedup_doc": "ran",
+        "split": "ran", "pack": "ran"}
+    assert job_digest(out) == job_digest(span_job)
+
+    with open(marker, "wb") as f:
+        f.write(head + b"\x00" * 20 + b"PAR1")
+    with pytest.raises(RuntimeError, match="refusing to resume"):
+        run_corpus_prep(spark, out, pages=None)
+    # the aborted resume removed nothing
+    assert os.path.exists(marker)
+    assert os.path.isdir(os.path.join(out, "stages", "clean"))

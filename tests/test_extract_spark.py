@@ -6,6 +6,7 @@ and the job must be checkpoint-resumable without duplicates.
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -278,6 +279,32 @@ def test_torn_lineage_removed_but_unreadable_aborts(spark, tmp_path_factory):
     _os.remove(f"{lin}/run-odd.parquet")
     # data untouched by the aborted resume
     assert final_digest(spark, base) == d1
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_unreadable_committed_data_aborts_resume(spark, tmp_path_factory):
+    """Resume reads the committed urls of every committed run; a read
+    failure must raise, never pass for "nothing committed" (which would
+    decode and append every committed url a second time). A committed
+    run that wrote no rows still resumes."""
+    import glob
+
+    base = str(tmp_path_factory.mktemp("unreadable"))
+    empty = spark.createDataFrame([], pages.PAGES_SCHEMA)
+    assert run_extraction(spark, empty, base, run_id="r0")["n_in"] == 0
+    df = spark.createDataFrame(pages.make_rows(60), schema=pages.PAGES_SCHEMA)
+    assert run_extraction(spark, df, base, run_id="r1",
+                          num_partitions=2)["n_in"] == 60
+
+    files = glob.glob(f"{base}/extracted/run_id=r1/*/*.parquet")
+    assert files
+    for path in files:
+        with open(path, "wb") as f:
+            f.write(b"garbage" * 10)
+    with pytest.raises(Exception, match="(?i)parquet"):
+        run_extraction(spark, df, base, run_id="r2", num_partitions=2)
+    assert sorted(n for n in os.listdir(f"{base}/lineage")) == [
+        "run-r0.parquet", "run-r1.parquet"]
     shutil.rmtree(base, ignore_errors=True)
 
 

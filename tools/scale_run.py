@@ -1,5 +1,11 @@
-"""Single scaling-protocol measurement: run the extraction job in THIS
-process at a given parallelism and print one JSON line.
+"""Single scaling-protocol measurement: run the extraction job
+(``--job extract``, the default) or the fused corpus-prep job
+(``--job corpus``: extract -> clean -> gate -> classify -> paragraph
+dedup -> document dedup -> split -> pack) in THIS process at a given
+parallelism and print one JSON line.
+
+    python tools/scale_run.py --pages <pages.parquet> --cpus 8 --out <dir> \\
+        [--job corpus] [--no-warmup] [--parts N] [--shuffle-partitions N]
 
 Methodology (BASELINE.md sandbox protocol):
 - caller pins the process to N cores via `taskset -c 0-(N-1)` so local[N]
@@ -13,17 +19,55 @@ Methodology (BASELINE.md sandbox protocol):
   exactly what the N->4N criterion measures. (A per-cpu partition count
   would hand the low run artificially coarse, overhead-free tasks and
   deflate measured efficiency.)
+
+The extraction job stresses the narrow decode path; the corpus job adds
+the shuffle-heavy dedup/split/pack stages, which scale differently — the
+dedup exchanges are bandwidth-bound where decode is CPU-bound — and its
+line carries per-stage wall times.
 """
 
 from __future__ import annotations
 
 import argparse
 import json
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _warm_up(spark, args) -> None:
+    if args.job == "corpus":
+        from pdf_extract_spark.plans.corpus import run_corpus_prep
+        from pdf_extract_spark.sources.synth_pages import synth_pages
+        warm_dir = f"{args.out}_warm"
+        shutil.rmtree(warm_dir, ignore_errors=True)
+        run_corpus_prep(spark, warm_dir,
+                        pages=synth_pages(spark, 1000, partitions=args.cpus),
+                        num_partitions=args.cpus)
+        shutil.rmtree(warm_dir, ignore_errors=True)
+    else:
+        from pdf_extract_spark.fixtures.pages import pages_df
+        from pdf_extract_spark.operators.extract import extract_text
+        extract_text(pages_df(spark, 2000, partitions=args.cpus)) \
+            .write.format("noop").mode("overwrite").save()
+
+
+def _run(spark, args, pages) -> tuple[int, dict]:
+    """The timed job: (docs in, extra fields of the printed line)."""
+    if args.job == "corpus":
+        from pdf_extract_spark.plans.corpus import run_corpus_prep
+        stats = run_corpus_prep(spark, args.out, pages=pages,
+                                num_partitions=args.parts)
+        return stats["stages"]["extract"]["n_in"], {
+            "stage_walls": {s: round(v.get("wall_s", 0.0), 2)
+                            for s, v in stats["stages"].items()}}
+    from pdf_extract_spark.plans.pipeline import run_extraction
+    stats = run_extraction(spark, pages, args.out, run_id=f"scale{args.cpus}",
+                           num_partitions=args.parts)
+    return stats["n_in"], {}
 
 
 def main() -> None:
@@ -31,33 +75,37 @@ def main() -> None:
     ap.add_argument("--pages", required=True)
     ap.add_argument("--cpus", type=int, required=True)
     ap.add_argument("--out", required=True)
+    ap.add_argument("--job", choices=("extract", "corpus"), default="extract")
     ap.add_argument("--no-warmup", action="store_true")
     ap.add_argument("--parts", type=int, default=128)
+    # Like --parts, shuffle granularity is data-determined on a real
+    # cluster, not cluster-size-determined: fixing it across parallelism
+    # levels keeps per-partition shuffle volume (and spill behavior)
+    # identical on both legs. AQE still coalesces small exchanges below
+    # this ceiling the same way at either level. 0 = cpus-matched.
+    ap.add_argument("--shuffle-partitions", type=int, default=None,
+                    help="default: --cpus for extract, 64 for corpus")
     args = ap.parse_args()
+    shuffle = args.shuffle_partitions
+    if shuffle is None:
+        shuffle = 64 if args.job == "corpus" else args.cpus
 
-    from pdf_extract_spark.fixtures.pages import pages_df
-    from pdf_extract_spark.plans.pipeline import run_extraction
     from pdf_extract_spark.session import get_spark
 
     spark = get_spark(master=f"local[{args.cpus}]",
-                      app_name=f"scale-{args.cpus}",
-                      shuffle_partitions=args.cpus)
+                      app_name=f"{args.job}-scale-{args.cpus}",
+                      shuffle_partitions=shuffle or args.cpus)
     try:
         if not args.no_warmup:
-            from pdf_extract_spark.operators.extract import extract_text
-            extract_text(pages_df(spark, 2000, partitions=args.cpus)) \
-                .write.format("noop").mode("overwrite").save()
-
+            _warm_up(spark, args)
         pages = spark.read.parquet(args.pages)
         shutil.rmtree(args.out, ignore_errors=True)
         t0 = time.monotonic()
-        stats = run_extraction(spark, pages, args.out,
-                               run_id=f"scale{args.cpus}",
-                               num_partitions=args.parts)
+        docs, extra = _run(spark, args, pages)
         wall = time.monotonic() - t0
-        print(json.dumps({"cpus": args.cpus, "docs": stats["n_in"],
+        print(json.dumps({"cpus": args.cpus, "docs": docs,
                           "wall_s": round(wall, 2),
-                          "docs_per_s": round(stats["n_in"] / wall, 1)}))
+                          "docs_per_s": round(docs / wall, 1), **extra}))
     finally:
         spark.stop()
 
