@@ -128,11 +128,11 @@ def _materialize_pages(n: int) -> str:
     path = f"/tmp/bench_pages_v{FIXTURE_VERSION}_{n}.parquet"
     if os.path.exists(os.path.join(path, "_SUCCESS")):
         return path
-    from pdf_extract_spark.fixtures.pages import pages_df
     from pdf_extract_spark.session import get_spark
+    from pdf_extract_spark.sources.synth_pages import synth_pages
     spark = get_spark(master=f"local[{CPUS}]", app_name="bench-gen")
     try:
-        pages_df(spark, n, partitions=max(CPUS, 8)).write.mode(
+        synth_pages(spark, n, partitions=max(CPUS, 8)).write.mode(
             "overwrite").parquet(path)
     finally:
         spark.stop()

@@ -218,41 +218,3 @@ def make_rows(n: int, start: int = 0) -> list[tuple]:
 
 
 PAGES_SCHEMA = "url string, warc_ts timestamp, html binary, text string, lang string"
-
-
-def pages_df(spark, n: int, partitions: int = 8):
-    """pages DataFrame synthesized ON THE EXECUTORS (driver only ships index
-    ranges) so bench inputs scale without driver memory pressure."""
-    from pyspark.sql import functions as F, types as T
-    import pandas as pd
-
-    span = (n + partitions - 1) // partitions
-    bounds = [(p * span, min((p + 1) * span, n)) for p in range(partitions)]
-    bounds = [(a, b) for a, b in bounds if a < b]
-    schema = T.StructType([
-        T.StructField("url", T.StringType()),
-        T.StructField("warc_ts", T.TimestampType()),
-        T.StructField("html", T.BinaryType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-    ])
-
-    def gen(iterator):
-        # yield bounded frames (≤2048 rows), never a whole index range at
-        # once: a 100k-row range with multi-KB payloads as one pandas frame
-        # would hold hundreds of MB per task before Arrow copies it again
-        for pdf in iterator:
-            for _, r in pdf.iterrows():
-                lo, hi = int(r["lo"]), int(r["hi"])
-                for a in range(lo, hi, 2048):
-                    rows = make_rows(min(2048, hi - a), start=a)
-                    yield pd.DataFrame(
-                        rows, columns=["url", "warc_ts", "html", "text", "lang"])
-
-    # round-robin (no columns): hashing the k distinct `lo` values into k
-    # partitions is a balls-in-bins throw leaving ~1/e of the generator
-    # partitions empty (see operators/extract.salted_repartition)
-    bounds_df = spark.createDataFrame(
-        [(a, b) for a, b in bounds], "lo long, hi long"
-    ).repartition(len(bounds))
-    return bounds_df.mapInPandas(gen, schema=schema)

@@ -52,12 +52,3 @@ def embed_batch(texts: list[str], dim: int = DIM) -> np.ndarray:
     for i, t in enumerate(texts):
         out[i] = embed_text(t, dim)
     return out
-
-
-def l2_distance(a: np.ndarray, b: np.ndarray) -> float:
-    return float(np.linalg.norm(a.astype(np.float64) - b.astype(np.float64)))
-
-
-def knn_score(distance: float) -> float:
-    """Reference score transform 1/(1+L2) (tools.py:198)."""
-    return 1.0 / (1.0 + distance)

@@ -32,10 +32,6 @@ _BLOCK_TAGS = frozenset(
      "ul", "ol", "dl", "dd", "dt", "figure", "figcaption", "body"}
 )
 
-# void elements never get close tags
-_VOID = frozenset({"br", "hr", "img", "input", "meta", "link", "area", "base",
-                   "col", "embed", "source", "track", "wbr"})
-
 # Heuristic thresholds (fixed constants of the kernel's spec).
 MAX_LINK_DENSITY = 0.35   # blocks with >35% of chars inside <a> are boilerplate
 MIN_BLOCK_CHARS = 25      # shorter blocks are dropped unless headline-like
@@ -163,7 +159,6 @@ _RAWTEXT = frozenset({"script", "style"})
 # tag may carry whitespace but nothing else, and name match is exact.
 _RAWTEXT_END = {t: re.compile(r"</\s*%s\s*>" % t, re.IGNORECASE)
                 for t in _RAWTEXT}
-_WS_ONLY = re.compile(r"\s+")
 
 
 def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:

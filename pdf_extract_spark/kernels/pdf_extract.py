@@ -114,7 +114,6 @@ class _Ref:
 
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
 
 def _skip_ws(p: bytes, pos: int) -> int:

@@ -998,11 +998,6 @@ def decode_payload_media(payload: bytes) -> tuple[dict | None, str | None]:
     return None, "unknown_container"
 
 
-# Back-compat alias (the round-2 name; decode is no longer a stub for the
-# four real formats above, MMK1 remains the compressed-codec stand-in).
-_decode_stub = decode_payload_media
-
-
 def _meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         rows = {k: [] for k in ("media_id", "kind", "width", "height",

@@ -26,8 +26,9 @@ is deleted wholesale; committed stages are never recomputed — a rerun
 after a kill converges to the byte-identical final corpus digest
 (test-gated in tests/test_corpus_job.py, including a kill between the
 data write and the commit marker, the worst crash point, and a torn
-marker). run_corpus_prep walks the stages in one loop: read the marker,
-then skip, or build, write and commit.
+marker). run_corpus_prep reads every stage marker once, then walks the
+stages in one loop: skip, or build, write once, summarise the write with
+one read, and commit.
 
 Production-hash discipline: the isolated registry queries pay sha256 per
 gram/paragraph so DuckDB can replay them value-exactly; this job is the
@@ -775,19 +776,6 @@ def _read_stage_lineage(out_dir: str, stage: str) -> dict | None:
     return lin
 
 
-def _docs_count_digest(spark: SparkSession, docs_dir: str) -> tuple[int, str]:
-    """(row count, order-insensitive digest) over (url, text_sha) in ONE
-    column-pruned re-read of the rows just committed (2 thin columns; the
-    full text is scanned exactly once, by the stage that wrote it)."""
-    df = spark.read.parquet(docs_dir).select("url", "text_sha")
-    row = df.agg(
-        F.count("*").alias("n"),
-        sum_digest(
-            "sha2(concat_ws('|', url, coalesce(text_sha, '0')), 256)")
-        .alias("d")).collect()[0]
-    return row["n"], row["d"]
-
-
 def _empty_quarantine(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame([], QUAR_SCHEMA)
 
@@ -829,15 +817,20 @@ def run_corpus_prep(
     """
     t_job = time.monotonic()
 
+    # every stage marker, read once: the guards, the crash cleanup and the
+    # skip decisions below all use this dict (an unreadable marker aborts
+    # here, before anything is removed)
+    committed = {stage: _read_stage_lineage(out_dir, stage)
+                 for stage in STAGES}
+
     # flag-stability guards: committed state must agree with cut_spans
-    cut_lin = _read_stage_lineage(out_dir, "cut_spans")
-    if not cut_spans and cut_lin is not None:
+    if not cut_spans and committed["cut_spans"] is not None:
         raise RuntimeError(
             f"{out_dir} has a committed cut_spans stage but this run has "
             f"cut_spans=False; resume with cut_spans=True or use a fresh "
             f"--output directory")
-    if (cut_spans and cut_lin is None
-            and _read_stage_lineage(out_dir, "split") is not None):
+    if (cut_spans and committed["cut_spans"] is None
+            and committed["split"] is not None):
         raise RuntimeError(
             f"{out_dir} committed its split stage WITHOUT the cut_spans "
             f"stage; its downstream tables saw uncut text — re-run in a "
@@ -845,10 +838,9 @@ def run_corpus_prep(
 
     # crash cleanup: a stage directory without its commit marker is a
     # partial write (committer v2 exposes task files as tasks finish)
-    for stage in STAGES:
-        sdir = _stage_dir(out_dir, stage)
-        if os.path.isdir(sdir) and _read_stage_lineage(out_dir, stage) is None:
-            shutil.rmtree(sdir, ignore_errors=True)
+    for stage, lin in committed.items():
+        if lin is None:
+            shutil.rmtree(_stage_dir(out_dir, stage), ignore_errors=True)
     sweep_tmp(out_dir)
 
     def write_docs(stage: str, staged: DataFrame) -> tuple[int, int, str]:
@@ -858,7 +850,10 @@ def run_corpus_prep(
         stage plan executes exactly once per job. The task-local sort the
         dynamic writer inserts is over a 2-value column — noise next to a
         second full compute of the stage. Returns (n_out, n_quarantined,
-        digest) of the rows written."""
+        digest) of the rows written, from ONE groupBy(st) summary read of
+        two thin columns (the full text is scanned exactly once, by the
+        stage that wrote it); the digest covers the survivors only, and
+        is None when there are none."""
         data_dir = os.path.join(_stage_dir(out_dir, stage), "data")
         (staged.withColumn("st", F.when(F.col("error").isNull(),
                                         F.lit("ok")).otherwise(F.lit("err")))
@@ -872,10 +867,15 @@ def run_corpus_prep(
              .write.mode("overwrite").parquet(docs_dir))
         if fail_after == stage:
             raise CorpusJobInterrupted(stage)
-        qdir = _quarantine_dir(out_dir, stage)
-        n_quar = (spark.read.parquet(qdir).count()
-                  if os.path.isdir(qdir) else 0)
-        n_out, digest = _docs_count_digest(spark, docs_dir)
+        summary = {r["st"]: (r["n"], r["d"]) for r in (
+            spark.read.schema("url string, text_sha string").parquet(data_dir)
+            .groupBy("st").agg(
+                F.count("*").alias("n"),
+                sum_digest("sha2(concat_ws('|', url, "
+                           "coalesce(text_sha, '0')), 256)").alias("d"))
+            .collect())}
+        n_out, digest = summary.get("ok", (0, None))
+        n_quar, _ = summary.get("err", (0, None))
         return n_out, n_quar, digest
 
     def write_sequences(stage: str, seqs: DataFrame) -> tuple[int, int, str]:
@@ -953,7 +953,7 @@ def run_corpus_prep(
     # names the bottleneck, tools/scale_run.py --job corpus)
     t_stage = time.monotonic()
     for stage, build in builds.items():
-        lin = _read_stage_lineage(out_dir, stage)
+        lin = committed[stage]
         status = "skipped"
         if lin is None:
             status = "ran"

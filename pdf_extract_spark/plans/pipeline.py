@@ -203,20 +203,18 @@ def run_extraction(
         # always resolved: extract_text reads None as "no shuffle"
         num_partitions = derived_width(pages)
     todo = pages
-    snap_dir = None
     if committed:
-        # Snapshot the committed-url set to a staging dir: the extraction plan
-        # must NOT read the directory it appends to — Spark refreshes/invalidates
-        # cached plans on write-to-path, which would make post-append actions
-        # re-list the output and see their own writes. Explicit schema: a
-        # committed empty run leaves no data file to infer it from. A read
-        # error raises — taking it for "nothing committed" would decode
-        # and append every committed url a second time.
-        snap_dir = os.path.join(out_dir, "_resume_snapshots", run_id)
-        (spark.read.schema("url string").parquet(extracted_dir)
-         .select("url").write.mode("overwrite").parquet(snap_dir))
-        todo = pages.join(spark.read.schema("url string").parquet(snap_dir),
-                          "url", "left_anti")
+        # Anti-join against the committed urls in place. _cleanup_uncommitted
+        # has removed every crashed run, so only committed rows are listed;
+        # the scan's file listing is fixed when this DataFrame is built, the
+        # decode plan runs once (in write_run), and the run appends under a
+        # new run_id= directory — it never overwrites a file it reads.
+        # Explicit schema: a committed empty run leaves no data file to
+        # infer it from. A read error raises — taking it for "nothing
+        # committed" would decode and append every committed url twice.
+        todo = pages.join(
+            spark.read.schema("url string").parquet(extracted_dir)
+            .select("url"), "url", "left_anti")
 
     ext = (
         extract_text(todo, num_partitions=num_partitions)
@@ -226,9 +224,6 @@ def run_extraction(
                     F.when(F.col("error").isNull(), "ok").otherwise("err"))
     )
     writer.write_run(ext)
-    if snap_dir is not None:
-        # the resume snapshot is only needed while the plan above executes
-        shutil.rmtree(snap_dir, ignore_errors=True)
 
     # Lineage from a column-pruned re-read of what was just committed.
     # Split planning sizes tasks by FULL file bytes (the pruned sha column

@@ -400,7 +400,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hyperplane signs are a pure function of (component i, plane j) through
 # sha256 — identically computable in both engines, no RNG state to ship.
 
-N_PLANES = 8
 _DUCK_HP = """
 hp AS (
   SELECT CAST(i.range AS INT) AS i, CAST(j.range AS INT) AS j,

@@ -156,9 +156,6 @@ def embed_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- markdown extraction roundtrip ------------------------------------------
 
-_MD_LI = ("supporting point {g} for document {i} in the corpus",)
-
-
 def encode_md_page(doc_id: int, text: str) -> bytes:
     """encode_page plus document STRUCTURE: a (short) <h2> title the
     extractor must rescue via heading-adjacency, and a trailing two-item

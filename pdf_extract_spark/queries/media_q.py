@@ -272,7 +272,6 @@ def media_frames_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PNG_W, _PNG_H = "doc_id % 6 + 1", "doc_id % 4 + 1"
-_PNG_V = "doc_id % 200 + 20"
 # color types cycle over the four non-palette layouts (palette expansion
 # is pytest-covered; constant-value mode keeps indices non-constant)
 _PNG_CTS = (0, 2, 4, 6)

@@ -11,10 +11,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
-          "lineitem", "events", "documents", "embeddings")
-
 
 # Arrow batches handed to mapInPandas close at whichever cap they reach
 # first: 4096 rows bounds per-batch bookkeeping on small pages, 1 MB
@@ -31,6 +27,10 @@ TABLES = ("region", "nation", "customer", "supplier", "part", "orders",
 # re-reads the pyspark.zip directory 16 times per task. The url-hash
 # spread stays: decoding the scan splits in place leaves the split
 # holding a block of many-page PDFs a straggler.
+# These two caps are the only Arrow settings mapInPandas workers read.
+# arrow.pyspark.enabled and its selfDestruct flag steer only driver-side
+# toPandas / createDataFrame(pandas) / toArrow, which the jobs never call
+# on document data, so both stay at Spark's defaults.
 ARROW_MAX_RECORDS_PER_BATCH = 4096
 ARROW_MAX_BYTES_PER_BATCH = 1 << 20
 
@@ -46,21 +46,11 @@ def get_spark(master: str | None = None,
     builder = (
         SparkSession.builder.master(master).appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_MAX_RECORDS_PER_BATCH))
         .config("spark.sql.execution.arrow.maxBytesPerBatch",
                 str(ARROW_MAX_BYTES_PER_BATCH))
-        # free Arrow IPC buffers during the pandas conversion instead of
-        # holding both copies: ~8% on the decode phase (6.55s vs 7.11s on
-        # the 300k-page A/B) and lower worker peak memory. Arrow IPC
-        # compression (zstd/lz4) measured a wash on these payloads.
-        .config("spark.sql.execution.arrow.pyspark.selfDestruct.enabled",
-                "true")
         # let Python Data Source connectors receive pushed filters
         # (sources/synth_pages.py prunes rows before payload synthesis)
         .config("spark.sql.python.filterPushdown.enabled", "true")
@@ -91,7 +81,3 @@ def get_spark(master: str | None = None,
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str):
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

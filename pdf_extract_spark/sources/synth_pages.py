@@ -1,13 +1,12 @@
 """`synthpages` — a PySpark Python Data Source (DataSource V2 API) for the
 Common-Crawl-style pages table (url, warc_ts, html, text, lang).
 
-The round-1 engine generated bench/smoke inputs through a mapInPandas
-range expansion (fixtures/pages.pages_df). This is the same executor-side
-generation behind the idiomatic connector face (SURVEY S2/S7: sources as
-first-class plugs): each InputPartition owns an index range, workers
-synthesize their ranges independently (zero driver materialization, zero
-shuffle), and rows stream out as Arrow RecordBatches — the fast path the
-Python Data Source API offers over per-row tuples.
+It is the engine's one executor-side page generator, behind the idiomatic
+connector face (SURVEY S2/S7: sources as first-class plugs): each
+InputPartition owns an index range, workers synthesize their ranges
+independently (zero driver materialization, zero shuffle), and rows
+stream out as Arrow RecordBatches — the fast path the Python Data Source
+API offers over per-row tuples.
 
 Usage:
     spark.dataSource.register(SynthPagesDataSource)

@@ -598,3 +598,30 @@ def test_torn_stage_marker_reruns_but_unreadable_aborts(spark, tmp_path,
     # the aborted resume removed nothing
     assert os.path.exists(marker)
     assert os.path.isdir(os.path.join(out, "stages", "clean"))
+
+
+def test_all_quarantined_input_commits_empty_stages(spark, tmp_path):
+    """Every page has an empty payload, so extract quarantines all of
+    them and no survivor ever reaches a later stage: each stage still
+    commits, with zero counts and a null digest, and a rerun skips them
+    all."""
+    from pdf_extract_spark.fixtures.pages import PAGES_SCHEMA
+
+    rows = [(f"https://empty{i}.example.com/", TS, b"", None, "en")
+            for i in range(20)]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA)
+    out = str(tmp_path / "allquar")
+    stats = run_corpus_prep(spark, out, pages=pages, num_partitions=4)
+    got = {name: (s["status"], s["n_in"], s["n_out"], s["n_quarantined"],
+                  s["digest"]) for name, s in stats["stages"].items()}
+    assert got.pop("extract") == ("ran", 20, 0, 20, None)
+    assert got == {name: ("ran", 0, 0, 0, None) for name in (
+        "clean", "gate", "classify", "dedup_para", "dedup_doc", "split",
+        "pack")}
+    assert stats["n_docs"] == 0
+    assert job_digest(out) == "None:None"
+    assert {r["error"] for r in quarantine_all(spark, out).collect()} == {
+        "empty_payload"}
+
+    rerun = run_corpus_prep(spark, out, pages=None, num_partitions=4)
+    assert all(s["status"] == "skipped" for s in rerun["stages"].values())

@@ -16,10 +16,10 @@ N_PAGES = 200
 
 @pytest.fixture(scope="module")
 def pages_path(spark, tmp_path_factory):
-    from pdf_extract_spark.fixtures.pages import pages_df
+    from pdf_extract_spark.sources.synth_pages import synth_pages
 
     path = str(tmp_path_factory.mktemp("scale") / "pages.parquet")
-    pages_df(spark, N_PAGES, partitions=2).write.parquet(path)
+    synth_pages(spark, N_PAGES, partitions=2).write.parquet(path)
     return path
 
 
@@ -28,7 +28,7 @@ def test_scale_run_prints_docs(pages_path, tmp_path, job):
     res = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "scale_run.py"),
          "--job", job, "--pages", pages_path, "--cpus", "2",
-         "--out", str(tmp_path / "out"), "--no-warmup", "--parts", "4"],
+         "--out", str(tmp_path / "out"), "--no-warmup"],
         capture_output=True, text=True, timeout=900,
         env={**os.environ, "SPARK_DRIVER_MEM": "1g"})
     assert res.returncode == 0, res.stderr[-4000:]

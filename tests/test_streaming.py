@@ -162,9 +162,8 @@ def test_bloom_state_is_bounded():
 
 def test_synthpages_data_source(spark):
     """The Python Data Source connector generates the pages table on the
-    executors, partition-parallel, byte-identical to the mapInPandas
-    generator regardless of partitioning."""
-    from pdf_extract_spark.fixtures.pages import pages_df
+    executors, partition-parallel, byte-identical to the content contract
+    (fixtures.pages.make_rows) regardless of partitioning."""
     from pdf_extract_spark.sources.synth_pages import synth_pages
 
     ds = synth_pages(spark, 700, partitions=5)
@@ -172,7 +171,7 @@ def test_synthpages_data_source(spark):
     digest = ("sha2(concat_ws('|', url, cast(warc_ts as string), "
               "sha2(html, 256), coalesce(text, ''), lang), 256) AS h")
     a = ds.selectExpr(digest)
-    b = pages_df(spark, 700, partitions=3).selectExpr(digest)
+    b = spark.createDataFrame(make_rows(700), PAGES_SCHEMA).selectExpr(digest)
     assert a.count() == 700
     assert a.subtract(b).count() == 0 and b.subtract(a).count() == 0
 
@@ -183,7 +182,6 @@ def test_synthpages_pushdown_optin_and_default_safety(spark):
     prunes generation and matches ground truth per freshly-loaded plan."""
     import pyspark.sql.functions as F
 
-    from pdf_extract_spark.fixtures.pages import pages_df
     from pdf_extract_spark.sources.synth_pages import register
 
     register(spark)
@@ -192,7 +190,7 @@ def test_synthpages_pushdown_optin_and_default_safety(spark):
           .option("n", 600).option("numPartitions", 3).load())
     nz = df.filter(F.col("lang") == "zh").count()
     assert df.count() == 600  # reuse stays exact without pushdown
-    truth = pages_df(spark, 600, partitions=3)
+    truth = spark.createDataFrame(make_rows(600), PAGES_SCHEMA)
     assert nz == truth.filter(F.col("lang") == "zh").count()
 
     # opt-in: one load() per query (documented contract), rows identical

@@ -5,7 +5,7 @@ dedup -> document dedup -> split -> pack) in THIS process at a given
 parallelism and print one JSON line.
 
     python tools/scale_run.py --pages <pages.parquet> --cpus 8 --out <dir> \\
-        [--job corpus] [--no-warmup] [--parts N] [--shuffle-partitions N]
+        [--job corpus] [--no-warmup] [--shuffle-partitions N]
 
 Methodology (BASELINE.md sandbox protocol):
 - caller pins the process to N cores via `taskset -c 0-(N-1)` so local[N]
@@ -13,12 +13,13 @@ Methodology (BASELINE.md sandbox protocol):
   idle cores for JVM-side Arrow/parquet work and inflates the baseline;
 - a small warm-up job spawns+imports the Python workers before timing
   (cluster executors are warm; we measure throughput, not cold start);
-- decode partitions are FIXED (default 128) across parallelism levels:
-  on a real cluster the input-split count is data-determined, not
-  cluster-size-determined — scaling 4x executors over the same splits is
-  exactly what the N->4N criterion measures. (A per-cpu partition count
-  would hand the low run artificially coarse, overhead-free tasks and
-  deflate measured efficiency.)
+- both jobs size their decode as they do in production
+  (operators.extract.derived_width): one url-hash partition per input
+  split, never fewer than the cores. Once the input has at least as many
+  splits as the larger core count, that width is the input's split count
+  at every level — data-determined, as on a real cluster, so scaling 4x
+  cores over the same splits is exactly what the N->4N criterion
+  measures.
 
 The extraction job stresses the narrow decode path; the corpus job adds
 the shuffle-heavy dedup/split/pack stages, which scale differently — the
@@ -49,9 +50,9 @@ def _warm_up(spark, args) -> None:
                         num_partitions=args.cpus)
         shutil.rmtree(warm_dir, ignore_errors=True)
     else:
-        from pdf_extract_spark.fixtures.pages import pages_df
         from pdf_extract_spark.operators.extract import extract_text
-        extract_text(pages_df(spark, 2000, partitions=args.cpus)) \
+        from pdf_extract_spark.sources.synth_pages import synth_pages
+        extract_text(synth_pages(spark, 2000, partitions=args.cpus)) \
             .write.format("noop").mode("overwrite").save()
 
 
@@ -59,14 +60,12 @@ def _run(spark, args, pages) -> tuple[int, dict]:
     """The timed job: (docs in, extra fields of the printed line)."""
     if args.job == "corpus":
         from pdf_extract_spark.plans.corpus import run_corpus_prep
-        stats = run_corpus_prep(spark, args.out, pages=pages,
-                                num_partitions=args.parts)
+        stats = run_corpus_prep(spark, args.out, pages=pages)
         return stats["stages"]["extract"]["n_in"], {
             "stage_walls": {s: round(v.get("wall_s", 0.0), 2)
                             for s, v in stats["stages"].items()}}
     from pdf_extract_spark.plans.pipeline import run_extraction
-    stats = run_extraction(spark, pages, args.out, run_id=f"scale{args.cpus}",
-                           num_partitions=args.parts)
+    stats = run_extraction(spark, pages, args.out, run_id=f"scale{args.cpus}")
     return stats["n_in"], {}
 
 
@@ -77,9 +76,8 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--job", choices=("extract", "corpus"), default="extract")
     ap.add_argument("--no-warmup", action="store_true")
-    ap.add_argument("--parts", type=int, default=128)
-    # Like --parts, shuffle granularity is data-determined on a real
-    # cluster, not cluster-size-determined: fixing it across parallelism
+    # Like the decode width, shuffle granularity is data-determined on a
+    # real cluster, not cluster-size-determined: fixing it across parallelism
     # levels keeps per-partition shuffle volume (and spill behavior)
     # identical on both legs. AQE still coalesces small exchanges below
     # this ceiling the same way at either level. 0 = cpus-matched.
