@@ -232,7 +232,11 @@ def _unpredict(data: bytes, parms: dict) -> bytes:
     if pred == 2:
         # TIFF horizontal differencing (8-bit components): each byte is
         # a delta against the same component Colors bytes to the left,
-        # row-independent at Columns·Colors bytes per row
+        # row-independent at Columns·Colors bytes per row. Other
+        # component widths difference sub-byte or 16-bit samples, which
+        # this byte loop would turn into corrupt text.
+        if int(parms.get("BitsPerComponent", 8)) != 8:
+            raise _Unsupported("unsupported_stream_filter")
         cols = int(parms.get("Columns", 1)) * int(parms.get("Colors", 1))
         if cols <= 0 or len(data) % cols:
             raise _Malformed("predictor row size")

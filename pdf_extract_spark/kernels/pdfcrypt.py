@@ -417,6 +417,9 @@ class StandardDecryptor:
             return data
         if self.cfm == "rc4":
             return rc4(self._object_key(num, gen, False), data)
+        if not data:
+            # a /Length 0 stream is empty content, not a cut ciphertext
+            return b""
         key = self._object_key(num, gen, True)
         if len(data) < 32 or len(data) % 16:
             raise ValueError("aes stream length")

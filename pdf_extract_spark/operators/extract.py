@@ -32,11 +32,13 @@ def derived_width(df: DataFrame) -> int:
     input partition of ``df`` — for a file scan, one per byte-bounded
     split (``spark.sql.files.maxPartitionBytes``) — and never fewer than
     the cores (``defaultParallelism``, always >= 1). Each decode task pays
-    a fixed Python-worker cost whatever it holds, so a width that follows
-    the input's bytes instead of a constant keeps that cost proportional
-    to the data; the floor keeps inputs with few partitions (``synth:``'s
-    generator splits, one per unsplittable WARC file, an empty table's
-    zero) from leaving cores idle or asking for zero partitions.
+    a fixed cost whatever it holds, mostly on the JVM side once local
+    workers start from the installed pyspark (``worker_daemon``), so a
+    width that follows the input's bytes instead of a constant keeps that
+    cost proportional to the data; the floor keeps inputs with few
+    partitions (``synth:``'s generator splits, one per unsplittable WARC
+    file, an empty table's zero) from leaving cores idle or asking for
+    zero partitions.
 
     Call it before any join or aggregation enters ``df``'s plan: with AQE
     on, asking an exchange-bearing plan for its partitions runs its

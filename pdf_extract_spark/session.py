@@ -20,19 +20,22 @@ from pyspark.sql import SparkSession
 # rows at once. On the extraction benchmark (4 cores) worker peak RSS is
 # 147 MB with the row cap alone and 137.6 MB with 1 MB batches, against
 # 131.4 MB for the old 32-way layout.
-# Fewer tasks pay off because each Python task costs ~0.3 core-s whatever
-# it holds (a passthrough mapInPandas over 6,000 rows: 2.2 CPU-s at 4
-# tasks, 10.4 at 32). A cProfile of the worker puts that cost in
-# pyspark's worker_util.setup_spark_files: importlib.invalidate_caches()
-# re-reads the pyspark.zip directory 16 times per task. The url-hash
-# spread stays: decoding the scan splits in place leaves the split
-# holding a block of many-page PDFs a straggler.
+# Fewer tasks still pay off: a passthrough mapInPandas over 6,000 rows
+# at 4 cores costs 1.0-1.4 core-s at 4 tasks and 2.0-2.8 at 16, mostly
+# on the JVM side (the Python workers' share, 0.2 and 0.8, stays small
+# because worker_daemon keeps Spark's archives off their path). The
+# url-hash spread stays: decoding the scan splits in place leaves the
+# split holding a block of many-page PDFs a straggler.
 # These two caps are the only Arrow settings mapInPandas workers read.
 # arrow.pyspark.enabled and its selfDestruct flag steer only driver-side
 # toPandas / createDataFrame(pandas) / toArrow, which the jobs never call
 # on document data, so both stay at Spark's defaults.
 ARROW_MAX_RECORDS_PER_BATCH = 4096
 ARROW_MAX_BYTES_PER_BATCH = 1 << 20
+
+# The directory or archive holding this package: a source checkout, a
+# site-packages directory, or the zip shipped with --py-files.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(master: str | None = None,
@@ -78,6 +81,18 @@ def get_spark(master: str | None = None,
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"))
     )
+    if master == "local" or master.startswith("local["):
+        # Local workers run on this machine, so they can start from the
+        # installed pyspark (worker_daemon). The daemon module is imported
+        # before any task adds the --py-files archives, so the package root
+        # goes on the workers' path too. Other masters keep Spark's daemon:
+        # their executors need not have the package installed (SCALE.md).
+        builder = (
+            builder
+            .config("spark.python.daemon.module",
+                    "pdf_extract_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -435,6 +435,35 @@ def test_pdf_encrypted_unsigned_p_matches_signed():
             == ("unsigned permissions line", None), mode
 
 
+def test_pdf_aes_zero_length_stream_is_empty():
+    """A /Length 0 stream in an AESV2 document is empty content, as
+    readers treat it, not a cut ciphertext: the document extracts its
+    other page instead of quarantining as encrypted_malformed. A stream
+    of the IV alone (16 bytes) is still malformed."""
+    import re
+
+    pgs = [pdf_writer.page_ops_simple(["text beside an empty stream"]), []]
+    aes = pdf_writer.build_pdf2(pgs, encrypt="aesv2")
+    m = re.search(rb"6 0 obj\n<< /Length (\d+) >>\nstream\n", aes)
+    end = m.end() + int(m.group(1))
+
+    def with_stream(body: bytes) -> bytes:
+        pdf = (aes[:m.start(1)] + b"%d >>\nstream\n" % len(body) + body
+               + aes[end:])
+        shift = len(pdf) - len(aes)
+        pdf = re.sub(rb"(\d{10}) 00000 n", lambda x: b"%010d 00000 n" % (
+            int(x.group(1)) + (shift if int(x.group(1)) > m.start() else 0)),
+            pdf)
+        return re.sub(rb"startxref\n(\d+)", lambda x: b"startxref\n%d" % (
+            int(x.group(1)) + shift), pdf)
+
+    assert extract_pdf_text(aes) == ("text beside an empty stream", None)
+    assert extract_pdf_text(with_stream(b"")) \
+        == ("text beside an empty stream", None)
+    assert extract_pdf_text(with_stream(aes[m.end():m.end() + 16])) \
+        == (None, "encrypted_malformed")
+
+
 def test_pdf_literal_string_escapes():
     """_parse_value unescapes literal strings at the byte level (octal,
     named escapes, line continuations) — required for /O //U key
@@ -599,12 +628,15 @@ def test_pdf_text_state_operators():
 
 def test_pdf_tiff_predictor():
     """/Predictor 2 (TIFF horizontal differencing) reverses exactly for
-    1- and 3-component rows; bad row sizes stay typed malformed."""
+    1- and 3-component rows; bad row sizes stay typed malformed, and
+    components other than 8-bit (here 4-bit, whose nibble deltas a byte
+    reversal would corrupt) quarantine as unsupported_stream_filter."""
     import zlib as _z
 
     import pytest
 
     from pdf_extract_spark.kernels.pdf_extract import (_Malformed,
+                                                       _Unsupported,
                                                        _apply_filter)
     for colors, cols in ((1, 16), (3, 5)):
         width = colors * cols
@@ -620,6 +652,9 @@ def test_pdf_tiff_predictor():
     with pytest.raises(_Malformed):
         _apply_filter("/FlateDecode", _z.compress(b"xyz"),
                       {"Predictor": 2, "Columns": 2})
+    with pytest.raises(_Unsupported, match="unsupported_stream_filter"):
+        _apply_filter("/FlateDecode", _z.compress(bytes(8)),
+                      {"Predictor": 2, "Columns": 8, "BitsPerComponent": 4})
 
 
 def test_pdf_widths_table_advances():
