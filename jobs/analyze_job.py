@@ -1,7 +1,7 @@
 """spark-submit entry point for the analysis stage (M5): extracted table →
 per-document report table partitioned by lang + corpus rollup.
 
-Usage (cluster: swap master/conf; package ships via --py-files):
+Usage (master: spark-submit's --master; package ships via --py-files):
 
   spark-submit --master local[32] --py-files pdf_extract_spark.zip \
       jobs/analyze_job.py --input <extract_out_dir> --output /path/out
@@ -23,14 +23,13 @@ def main() -> None:
     ap.add_argument("--input", required=True,
                     help="extract_job output dir (reads status=ok rows)")
     ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from pdf_extract_spark.plans.analyze import run_analysis
     from pdf_extract_spark.plans.pipeline import extracted_ok
     from pdf_extract_spark.session import get_spark
 
-    spark = get_spark(master=args.master, app_name="analyze")
+    spark = get_spark(app_name="analyze")
     try:
         ok = extracted_ok(spark, args.input)
         t0 = time.monotonic()

@@ -3,7 +3,7 @@ extract -> clean (normalize+PII) -> quality/domain gate -> paragraph
 dedup -> document dedup -> train/val/test split + decontam flags ->
 sequence packing, each stage committed with lineage and resumable.
 
-Usage (cluster: swap master/conf; package ships via --py-files):
+Usage (master: spark-submit's --master; package ships via --py-files):
 
   spark-submit --master local[32] --py-files pdf_extract_spark.zip \
       jobs/corpus_prep_job.py --input <pages_parquet|synth:N> \
@@ -32,7 +32,6 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=None,
                     help="decode partitions and synth: splits (default: "
                          "one per input split, at least one per core)")
-    ap.add_argument("--master", default=None)
     ap.add_argument("--fail-after", default=None, choices=[None] + [
         "extract", "clean", "gate", "classify", "dedup_para", "dedup_doc",
         "cut_spans", "split", "pack"], help="crash-injection test hook")
@@ -43,21 +42,13 @@ def main() -> None:
                          "--output dir")
     args = ap.parse_args()
 
-    from pdf_extract_spark.session import get_spark
     from pdf_extract_spark.plans.corpus import run_corpus_prep
+    from pdf_extract_spark.session import get_spark
+    from pdf_extract_spark.sources import read_pages
 
-    spark = get_spark(master=args.master, app_name="corpus-prep")
+    spark = get_spark(app_name="corpus-prep")
     try:
-        if args.input.startswith("synth:"):
-            from pdf_extract_spark.sources.synth_pages import synth_pages
-            n = int(args.input.split(":", 1)[1])
-            pages = synth_pages(spark, n, partitions=args.partitions
-                                or spark.sparkContext.defaultParallelism)
-        elif args.input.startswith("warc:"):
-            from pdf_extract_spark.sources.warc import read_warc
-            pages = read_warc(spark, args.input.split(":", 1)[1])
-        else:
-            pages = spark.read.parquet(args.input)
+        pages = read_pages(spark, args.input, args.partitions)
 
         t0 = time.monotonic()
         stats = run_corpus_prep(spark, args.output, pages=pages,

@@ -27,7 +27,6 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--job", required=True,
                     help="a corpus_prep_job --output directory")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
     from pyspark.sql import functions as F
@@ -36,7 +35,7 @@ def main() -> None:
         STAGES, _read_stage_lineage, corpus, quarantine_all)
     from pdf_extract_spark.session import get_spark
 
-    spark = get_spark(master=args.master, app_name="corpus-report")
+    spark = get_spark(app_name="corpus-report")
     try:
         funnel = {}
         for stage in STAGES:

@@ -1,6 +1,6 @@
 """spark-submit entry point for the extraction pipeline.
 
-Usage (cluster: swap master/conf; package ships via --py-files):
+Usage (master: spark-submit's --master; package ships via --py-files):
 
   spark-submit --master local[32] --py-files pdf_extract_spark.zip \
       jobs/extract_job.py --input <pages_parquet|synth:N> \
@@ -27,24 +27,15 @@ def main() -> None:
     ap.add_argument("--partitions", type=int, default=None,
                     help="decode partitions and synth: splits (default: "
                          "one per input split, at least one per core)")
-    ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pdf_extract_spark.session import get_spark
     from pdf_extract_spark.plans.pipeline import run_extraction
+    from pdf_extract_spark.session import get_spark
+    from pdf_extract_spark.sources import read_pages
 
-    spark = get_spark(master=args.master, app_name=f"extract-{args.run_id}")
+    spark = get_spark(app_name=f"extract-{args.run_id}")
     try:
-        if args.input.startswith("synth:"):
-            from pdf_extract_spark.sources.synth_pages import synth_pages
-            n = int(args.input.split(":", 1)[1])
-            pages = synth_pages(spark, n, partitions=args.partitions
-                                or spark.sparkContext.defaultParallelism)
-        elif args.input.startswith("warc:"):
-            from pdf_extract_spark.sources.warc import read_warc
-            pages = read_warc(spark, args.input.split(":", 1)[1])
-        else:
-            pages = spark.read.parquet(args.input)
+        pages = read_pages(spark, args.input, args.partitions)
 
         t0 = time.monotonic()
         stats = run_extraction(spark, pages, args.output,

@@ -136,10 +136,13 @@ _FILTER_ENCODERS = {
 
 
 def _content_stream(ops: list[str], compress: bool = False,
-                    filters: list[str] | None = None) -> bytes:
+                    filters: list[str] | None = None,
+                    decode_parms: str | None = None) -> bytes:
     """Serialize ops; `filters` is the DECODE order (the /Filter array),
     so encoding applies them in reverse — e.g. ["/ASCII85Decode",
-    "/FlateDecode"] deflates first, then ascii85-wraps."""
+    "/FlateDecode"] deflates first, then ascii85-wraps. `decode_parms`
+    is written verbatim as the stream's /DecodeParms (encoding ignores
+    it)."""
     body = "\n".join(ops).encode("latin-1", errors="replace")
     if filters is None:
         filters = ["/FlateDecode"] if compress else []
@@ -150,6 +153,8 @@ def _content_stream(ops: list[str], compress: bool = False,
         d += b" /Filter " + filters[0].encode()
     elif filters:
         d += b" /Filter [" + " ".join(filters).encode() + b"]"
+    if decode_parms is not None:
+        d += b" /DecodeParms " + decode_parms.encode()
     return d + b" >>\nstream\n" + body + b"\nendstream"
 
 
@@ -413,7 +418,8 @@ def build_pdf2(pages_ops: list[list[str]], compress: bool = False,
                encrypt_user_pw: bytes = b"",
                encrypt_metadata: bool = True,
                f1_widths: tuple | None = None,
-               cid_w: tuple | None = None) -> bytes:
+               cid_w: tuple | None = None,
+               decode_parms: str | None = None) -> bytes:
     """PDF 1.5 assembler. Differences from build_pdf: optional cross-
     reference STREAM (W [1 3 1], type-1/2 entries, optional PNG Up
     predictor), optional /ObjStm packing of every non-stream object
@@ -497,7 +503,8 @@ def build_pdf2(pages_ops: list[list[str]], compress: bool = False,
             page_d += " " + res_str
         dicts[3 + 2 * i] = (page_d + " >>").encode()
         streams[4 + 2 * i] = _content_stream(ops, compress=compress,
-                                             filters=filters)
+                                             filters=filters,
+                                             decode_parms=decode_parms)
     if cid_font:
         f2_dict = (f"<< /Type /Font /Subtype /Type0 /BaseFont /Fixture-CID "
                    f"/Encoding /Identity-H /ToUnicode {cmap_num} 0 R")

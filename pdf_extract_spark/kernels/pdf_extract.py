@@ -579,10 +579,14 @@ class _Doc:
         filt = self.resolve(d.get("Filter"))
         filters = filt if isinstance(filt, list) else ([filt] if filt else [])
         # ISO 32000 §7.4: DecodeParms parallels Filter — a single dict for
-        # a single filter, an array (entries may be null) for a chain
+        # a single filter, an array (entries may be null) for a chain. A
+        # lone dict on a chain names no link, so no link gets it (as in
+        # pdf.js): a Flate /Predictor must not run after an LZW link too.
         parms = self.resolve(d.get("DecodeParms"))
-        parms_list = (parms if isinstance(parms, list)
-                      else [parms] * len(filters))
+        if isinstance(parms, list):
+            parms_list = parms
+        else:
+            parms_list = [] if isinstance(filt, list) else [parms]
         for i, f in enumerate(filters):
             p = parms_list[i] if i < len(parms_list) else None
             p = self.resolve(p)
@@ -752,14 +756,15 @@ class _Font:
     and table-column geometry EXACT instead of CHAR_W-estimated —
     with /MissingWidth (or the CHAR_W estimate) for undeclared codes.
     Composite (Type0) fonts carry CID widths instead: `cid_w` from the
-    descendant font's /W with `dw` = /DW (spec default 1000)."""
+    descendant font's /W with `dw` = /DW (spec default 1000), and
+    `composite` keeps word spacing off their multi-byte codes."""
 
-    __slots__ = ("dec", "wtab", "missing", "cid_w", "dw")
+    __slots__ = ("dec", "wtab", "missing", "cid_w", "dw", "composite")
 
     def __init__(self, dec=None, wtab=None, missing=None,
-                 cid_w=None, dw=1.0) -> None:
+                 cid_w=None, dw=1.0, composite=False) -> None:
         self.dec, self.wtab, self.missing = dec, wtab, missing
-        self.cid_w, self.dw = cid_w, dw
+        self.cid_w, self.dw, self.composite = cid_w, dw, composite
 
     @property
     def has_widths(self) -> bool:
@@ -820,8 +825,8 @@ def _fonts_from_res(doc: _Doc, res: object) -> dict[str, _Font]:
     /Differences, §9.6.6) builds a 256-entry byte table; fonts with
     neither decode as latin-1 (the font's built-in encoding, identity
     here). Simple (1-byte) fonts additionally carry /FirstChar +
-    /Widths advances; multi-byte CMap fonts keep the CHAR_W estimate
-    (CID /W ranges are out of scope)."""
+    /Widths advances; CMap fonts carry their descendant's CID /W, and
+    /Subtype /Type0 marks a font composite (no word spacing)."""
     from .pdfenc import SimpleEnc, build_encoding
     fonts: dict[str, _Font] = {}
     fdict = doc.resolve(res.get("Font")) if isinstance(res, dict) else None
@@ -832,6 +837,7 @@ def _fonts_from_res(doc: _Doc, res: object) -> dict[str, _Font]:
         if not isinstance(fobj, dict):
             continue
         dec = None
+        composite = doc.resolve(fobj.get("Subtype")) == "/Type0"
         tu = doc.resolve(fobj.get("ToUnicode"))
         if isinstance(tu, tuple):
             dec = _CMap(tu[1])
@@ -846,7 +852,8 @@ def _fonts_from_res(doc: _Doc, res: object) -> dict[str, _Font]:
                     dwv = doc.resolve(d0.get("DW"))
                     if isinstance(dwv, (int, float)):
                         dw = float(dwv) / 1000.0
-            fonts[name] = _Font(dec, cid_w=cid_w, dw=dw)
+            fonts[name] = _Font(dec, cid_w=cid_w, dw=dw,
+                                composite=composite)
             continue
         else:
             enc = doc.resolve(fobj.get("Encoding"))
@@ -873,7 +880,7 @@ def _fonts_from_res(doc: _Doc, res: object) -> dict[str, _Font]:
                     if isinstance(fd, dict) else None
                 if isinstance(mw, (int, float)):
                     missing = float(mw) / 1000.0
-        fonts[name] = _Font(dec, wtab, missing)
+        fonts[name] = _Font(dec, wtab, missing, composite=composite)
     return fonts
 
 
@@ -1067,8 +1074,12 @@ def _parse_spans(stream: bytes,
             frac = (font.advance(raw.encode("latin-1"), len(s))
                     if font is not None and font.has_widths
                     else CHAR_W * len(s))
+            # Tw applies to each single-byte code 32 shown (§9.3.3), not
+            # to decoded spaces: never in a composite font's codes
+            spaces = 0 if font is not None and font.composite \
+                else raw.count(" ")
             w = (frac * size + char_sp * len(s)
-                 + word_sp * s.count(" ")) * hscale
+                 + word_sp * spaces) * hscale
             spans.append(_Span(trm[4], trm[5], size * sc, s, w * sc))
             tm = _mat_translate(w, 0.0, tm)
 

@@ -1,14 +1,16 @@
 """SparkSession factory with the engine's standard configuration.
 
-Local-mode defaults tuned for the sandbox (local[N], single JVM); on a real
-cluster these same settings ride along via spark-submit --conf. UTC session
-timezone is pinned so timestamp results agree with the DuckDB oracle.
+The master is the caller's or the launcher's; local masters also get the
+shuffle width and worker start-up, which clusters take from --conf. UTC
+timezone is pinned so timestamps agree with the DuckDB oracle.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
@@ -20,12 +22,6 @@ from pyspark.sql import SparkSession
 # rows at once. On the extraction benchmark (4 cores) worker peak RSS is
 # 147 MB with the row cap alone and 137.6 MB with 1 MB batches, against
 # 131.4 MB for the old 32-way layout.
-# Fewer tasks still pay off: a passthrough mapInPandas over 6,000 rows
-# at 4 cores costs 1.0-1.4 core-s at 4 tasks and 2.0-2.8 at 16, mostly
-# on the JVM side (the Python workers' share, 0.2 and 0.8, stays small
-# because worker_daemon keeps Spark's archives off their path). The
-# url-hash spread stays: decoding the scan splits in place leaves the
-# split holding a block of many-page PDFs a straggler.
 # These two caps are the only Arrow settings mapInPandas workers read.
 # arrow.pyspark.enabled and its selfDestruct flag steer only driver-side
 # toPandas / createDataFrame(pandas) / toArrow, which the jobs never call
@@ -38,17 +34,26 @@ ARROW_MAX_BYTES_PER_BATCH = 1 << 20
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def _local_slots(master: str) -> int | None:
+    """Task slots of a local master, None for any other. local[*] counts
+    this process's CPU affinity, so unlike Spark it misses a cgroup quota."""
+    m = re.fullmatch(r"local(?:\[(\*|\d+)(?:,\d+)?\])?", master)
+    if m is None:
+        return None
+    return len(os.sched_getaffinity(0)) if m[1] == "*" else int(m[1] or 1)
+
+
 def get_spark(master: str | None = None,
-              app_name: str = "pdf-extract-spark",
-              shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        n = master[master.find("[") + 1:master.find("]")] if "[" in master else "8"
-        shuffle_partitions = cpus if n == "*" else max(int(n), 8)
+              app_name: str = "pdf-extract-spark") -> SparkSession:
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM", "16g")
+    if master is None:
+        # The launcher's master: spark-submit's, or local[*] in plain
+        # python. Its JVM starts here, so it takes the driver heap here.
+        SparkContext._ensure_initialized(
+            conf=SparkConf().set("spark.driver.memory", driver_memory))
+        master = SparkConf().get("spark.master", "local[*]")
     builder = (
         SparkSession.builder.master(master).appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_MAX_RECORDS_PER_BATCH))
@@ -57,15 +62,14 @@ def get_spark(master: str | None = None,
         # let Python Data Source connectors receive pushed filters
         # (sources/synth_pages.py prunes rows before payload synthesis)
         .config("spark.sql.python.filterPushdown.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Input-split sizing: default 128 MB splits + 4 MB open-cost starve a
         # 32-core box of parallelism on the small sandbox fixtures (a 60 MB
         # table becomes 2 splits). At 100 TB the cluster default is right;
         # here we size splits so the scan saturates the cores.
-        .config("spark.sql.files.maxPartitionBytes",
-                os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "4m"))
+        .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", str(256 * 1024))
         # Output path: task-side commit (v1 renames every file serially on
         # the driver — seconds per job at 100s of files), and no parquet
@@ -81,7 +85,10 @@ def get_spark(master: str | None = None,
         .config("spark.sql.warehouse.dir",
                 os.environ.get("SPARK_GRAFT_WAREHOUSE", "/tmp/spark-warehouse"))
     )
-    if master == "local" or master.startswith("local["):
+    slots = _local_slots(master)
+    if slots is not None:
+        # Shuffle width: the slots, at least 8. A builder conf, so sessions
+        # cloned with newSession (the lineage re-read) keep it.
         # Local workers run on this machine, so they can start from the
         # installed pyspark (worker_daemon). The daemon module is imported
         # before any task adds the --py-files archives, so the package root
@@ -89,6 +96,7 @@ def get_spark(master: str | None = None,
         # their executors need not have the package installed (SCALE.md).
         builder = (
             builder
+            .config("spark.sql.shuffle.partitions", str(max(slots, 8)))
             .config("spark.python.daemon.module",
                     "pdf_extract_spark.worker_daemon")
             .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)

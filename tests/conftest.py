@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 
@@ -7,7 +9,9 @@ import pytest
 def spark():
     from pdf_extract_spark.session import get_spark
 
-    s = get_spark(master="local[8]", app_name="pdf-extract-tests",
-                  shuffle_partitions=8)
+    # The suite's JVM fits in 4 GB; the library's 16 GB default heap lets
+    # it grow past half of a small host's memory.
+    os.environ.setdefault("SPARK_DRIVER_MEM", "4g")
+    s = get_spark(master="local[8]", app_name="pdf-extract-tests")
     yield s
     s.stop()

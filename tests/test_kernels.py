@@ -657,6 +657,39 @@ def test_pdf_tiff_predictor():
                       {"Predictor": 2, "Columns": 8, "BitsPerComponent": 4})
 
 
+def test_pdf_scalar_decode_parms_on_a_filter_chain():
+    """A lone /DecodeParms dict on a /Filter chain names no link, so no
+    link gets it (pdf.js): the Flate link of [/ASCIIHexDecode
+    /FlateDecode] must not run the dict's PNG predictor over plain
+    content. Checked on the structured path, which salvage would mask."""
+    from pdf_extract_spark.kernels.pdf_extract import _extract_structured
+    pgs = [pdf_writer.page_ops_simple(["scalar parms on a chain", "line 2"])]
+    want, err = extract_pdf_text(pdf_writer.build_pdf2(pgs))
+    assert err is None and want
+    chained = pdf_writer.build_pdf2(
+        pgs, filters=["/ASCIIHexDecode", "/FlateDecode"],
+        decode_parms="<< /Predictor 12 /Columns 4 >>")
+    assert _extract_structured(chained) == want
+    assert extract_pdf_text(chained) == (want, None)
+
+
+def test_pdf_word_spacing_counts_single_byte_code_32():
+    """Tw (§9.3.3) advances each single-byte code 32 shown, not each
+    decoded space: a Type0 font's two-byte code mapped to U+0020 gets no
+    Tw, so the next show (placed where the plain advance ends) stays in
+    the same word; the single-byte /F1 twin still gets it, and its -6 Tw
+    opens a word gap."""
+    def text(font: str, first: str, second: str) -> str:
+        ops = ["BT", f"/{font} 12 Tf", "-6 Tw", "72 720 Td",
+               f"{first} Tj", "ET",
+               "BT", f"/{font} 12 Tf", "90 720 Td", f"{second} Tj", "ET"]
+        t, e = extract_pdf_text(pdf_writer.build_pdf2([ops], cid_font=True))
+        assert e is None
+        return t
+    assert text("F2", "<004100200042>", "<00430044>") == "A BCD"
+    assert text("F1", "(A B)", "(CD)") == "A B CD"
+
+
 def test_pdf_widths_table_advances():
     """A declared /FirstChar + /Widths table makes advances exact:
     narrow glyphs (width 250) pull consecutive shows together where the

@@ -89,8 +89,7 @@ def test_py_files_submit_from_another_directory(tmp_path):
                       "bin", "spark-submit"),
          "--master", "local[2]", "--py-files", package,
          os.path.join(REPO, "jobs", "extract_job.py"),
-         "--input", "synth:200", "--output", str(tmp_path / "out"),
-         "--master", "local[2]"],
+         "--input", "synth:200", "--output", str(tmp_path / "out")],
         cwd=tmp_path, capture_output=True, text=True, timeout=900, env=env)
     assert res.returncode == 0, res.stderr[-4000:]
     assert json.loads(res.stdout.strip().splitlines()[-1])["n_in"] == 200

@@ -5,7 +5,7 @@ dedup -> document dedup -> split -> pack) in THIS process at a given
 parallelism and print one JSON line.
 
     python tools/scale_run.py --pages <pages.parquet> --cpus 8 --out <dir> \\
-        [--job corpus] [--no-warmup] [--shuffle-partitions N]
+        [--job corpus] [--no-warmup]
 
 Methodology (BASELINE.md sandbox protocol):
 - caller pins the process to N cores via `taskset -c 0-(N-1)` so local[N]
@@ -76,23 +76,18 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--job", choices=("extract", "corpus"), default="extract")
     ap.add_argument("--no-warmup", action="store_true")
-    # Like the decode width, shuffle granularity is data-determined on a
-    # real cluster, not cluster-size-determined: fixing it across parallelism
-    # levels keeps per-partition shuffle volume (and spill behavior)
-    # identical on both legs. AQE still coalesces small exchanges below
-    # this ceiling the same way at either level. 0 = cpus-matched.
-    ap.add_argument("--shuffle-partitions", type=int, default=None,
-                    help="default: --cpus for extract, 64 for corpus")
     args = ap.parse_args()
-    shuffle = args.shuffle_partitions
-    if shuffle is None:
-        shuffle = 64 if args.job == "corpus" else args.cpus
 
     from pdf_extract_spark.session import get_spark
 
     spark = get_spark(master=f"local[{args.cpus}]",
-                      app_name=f"{args.job}-scale-{args.cpus}",
-                      shuffle_partitions=shuffle or args.cpus)
+                      app_name=f"{args.job}-scale-{args.cpus}")
+    if args.job == "corpus":
+        # Fixed corpus width: per-partition volume stays the same on both
+        # legs, as on a cluster where it follows the data. The extract leg
+        # needs none: its decode width is explicit, and only the lineage
+        # groupBy (a few rows per decode partition) reads this conf.
+        spark.conf.set("spark.sql.shuffle.partitions", "64")
     try:
         if not args.no_warmup:
             _warm_up(spark, args)
