@@ -31,7 +31,8 @@ garbage → `encrypted_malformed`); the quarantine taxonomy distinguishes
 unsupported features (`unsupported_encrypted_pdf` for non-Standard
 handlers or unknown V/R/CFM, `encrypted_password_protected` for a
 non-empty user password, `unsupported_stream_filter`) from malformed
-bytes (`bad_xref`/`bad_flate_stream`/`content_stream_parse_error`).
+bytes (`bad_xref`/`bad_flate_stream`/`content_stream_parse_error`), and
+a Flate stream inflating past MAX_INFLATED_BYTES is `resource_limit`.
 
 Bounded scope: content streams (raw or filtered by any chain of the five
 ISO 32000 §7.4 data filters — FlateDecode, LZWDecode, ASCIIHexDecode,
@@ -54,6 +55,9 @@ import zlib
 
 _STREAM_HDR_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n", re.DOTALL)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)")
+# one inflated Flate stream's byte cap: past it the document quarantines
+# as `resource_limit` instead of holding a decompression bomb in memory
+MAX_INFLATED_BYTES = 64 << 20
 _SCAN_FILTER_RE = re.compile(
     rb"/(FlateDecode|LZWDecode|ASCIIHexDecode|ASCII85Decode|RunLengthDecode)"
     rb"\b")
@@ -88,10 +92,11 @@ def _iter_streams(payload: bytes):
         try:
             for name in names:
                 body = _apply_filter("/" + name.decode("ascii"), body, {})
-        except (_Malformed, _Unsupported):
-            yield None  # signals corrupt/undecodable stream
-            continue
-        yield body
+        except _Malformed:
+            body = "bad_flate_stream"
+        except _Unsupported as e:
+            body = e.args[0]
+        yield body  # the decoded bytes, or a typed error string
 
 # --------------------------------------------------------------------
 # Document structure: object grammar, xref (table + stream), ObjStm,
@@ -114,25 +119,41 @@ class _Ref:
 
 
 _WS = b"\x00\t\n\x0c\r "
+_ASCII_WS = b" \t\n\r\x0b\x0c"  # what a bytes regex's \s matches
+# whitespace and '%' comments (each runs to EOL), §7.2.2-3
+_WS_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]+|%[^\r\n]*)+")
+_LIT_SPECIAL_RE = re.compile(rb"[()\\]")
 
 
 def _skip_ws(p: bytes, pos: int) -> int:
-    n = len(p)
-    while pos < n:
-        c = p[pos]
-        if c in _WS:
-            pos += 1
-        elif c == 0x25:  # '%' comment runs to EOL
-            while pos < n and p[pos] not in b"\r\n":
-                pos += 1
+    m = _WS_RE.match(p, pos)
+    return m.end() if m else pos
+
+
+def _scan_literal(stream: bytes, start: int) -> int:
+    """End index (past the closing paren) of the literal string whose
+    '(' is at start-1: depth-counted, a backslash skips the byte after
+    it. Unterminated ⇒ end of stream (one past it after a trailing
+    backslash)."""
+    depth, i = 1, start
+    while depth:
+        m = _LIT_SPECIAL_RE.search(stream, i)
+        if m is None:
+            return max(i, len(stream))
+        i = m.end()
+        c = stream[i - 1]
+        if c == 0x5C:
+            i += 1
         else:
-            break
-    return pos
+            depth += 1 if c == 0x28 else -1
+    return i
 
 
 _NAME_RE = re.compile(rb"/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 _NUM_RE = re.compile(rb"[-+]?\d*\.?\d+")
 _REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R\b")
+_XREF_SUBSECTION_RE = re.compile(rb"(\d+)\s+(\d+)")
+_STREAM_KW_RE = re.compile(rb"\s*stream\r?\n")
 
 _STR_ESC_RE = re.compile(rb"\\(\r\n|\r|\n|[0-7]{1,3}|.)", re.DOTALL)
 _STR_ESC_MAP = {b"n": b"\n", b"r": b"\r", b"t": b"\t", b"b": b"\b",
@@ -188,24 +209,14 @@ def _parse_value(p: bytes, pos: int):
     if c == 0x2F:  # name
         m = _NAME_RE.match(p, pos)
         return "/" + m.group(0)[1:].decode("latin-1"), m.end()
-    if c == 0x28:  # literal string: track nesting
-        depth, i = 1, pos + 1
-        while i < len(p) and depth:
-            b = p[i]
-            if b == 0x5C:
-                i += 2
-                continue
-            if b == 0x28:
-                depth += 1
-            elif b == 0x29:
-                depth -= 1
-            i += 1
+    if c == 0x28:  # literal string
+        i = _scan_literal(p, pos + 1)
         return _unescape_str_bytes(p[pos + 1:i - 1]), i
     if c == 0x3C:  # hex string (not <<, handled above)
         end = p.find(b">", pos)
         if end < 0:
             raise _Malformed("hex string")
-        hx = re.sub(rb"\s", b"", p[pos + 1:end])
+        hx = p[pos + 1:end].translate(None, _ASCII_WS)
         if len(hx) % 2:
             hx += b"0"
         return bytes.fromhex(hx.decode("ascii")), end + 1
@@ -299,7 +310,7 @@ def _asciihex_decode(data: bytes) -> bytes:
     end = data.find(b">")
     if end >= 0:
         data = data[:end]
-    hx = re.sub(rb"[\x00\t\n\x0c\r ]", b"", data)
+    hx = data.translate(None, _WS)
     if len(hx) % 2:
         hx += b"0"
     try:
@@ -316,7 +327,7 @@ def _ascii85_decode(data: bytes) -> bytes:
     end = data.find(b"~>")
     if end >= 0:
         data = data[:end]
-    s = re.sub(rb"[\x00\t\n\x0c\r ]", b"", data)
+    s = data.translate(None, _WS)
     if s.startswith(b"<~"):
         s = s[2:]
     out = bytearray()
@@ -429,10 +440,15 @@ def _apply_filter(name: object, raw: bytes, parms: dict) -> bytes:
             return raw
         raise _Unsupported("unsupported_stream_filter")
     if name == "/FlateDecode":
+        inflater = zlib.decompressobj()
         try:
-            raw = zlib.decompress(raw)
+            raw = inflater.decompress(raw, MAX_INFLATED_BYTES + 1)
         except zlib.error as e:
             raise _Malformed("flate") from e
+        if len(raw) > MAX_INFLATED_BYTES:
+            raise _Unsupported("resource_limit")
+        if not inflater.eof:
+            raise _Malformed("flate")
     elif name == "/LZWDecode":
         raw = _lzw_decode(raw, int(parms.get("EarlyChange", 1)))
     elif name == "/ASCIIHexDecode":
@@ -527,7 +543,7 @@ class _Doc:
                 if not isinstance(val, dict):
                     raise _Malformed("trailer")
                 return val
-            m = re.compile(rb"(\d+)\s+(\d+)").match(p, pos)
+            m = _XREF_SUBSECTION_RE.match(p, pos)
             if not m:
                 raise _Malformed("xref subsection header")
             start, count = int(m.group(1)), int(m.group(2))
@@ -604,7 +620,7 @@ class _Doc:
         d, after = _parse_value(p, start)
         if not isinstance(d, dict):
             raise _Malformed("stream dict")
-        sm = re.compile(rb"\s*stream\r?\n").match(p, after)
+        sm = _STREAM_KW_RE.match(p, after)
         if not sm:
             raise _Malformed("stream keyword")
         length = self.resolve(d.get("Length"))
@@ -636,8 +652,7 @@ class _Doc:
                 raise _Malformed("object header")
             val, after = _parse_value(self.p, m.end())
             # a stream object resolves to its (dict, body) pair
-            if isinstance(val, dict) and re.compile(
-                    rb"\s*stream\r?\n").match(self.p, after):
+            if isinstance(val, dict) and _STREAM_KW_RE.match(self.p, after):
                 val = (val, self._parse_stream_at(self.offsets[num])[1])
         elif num in self.in_stm:
             stm_num, idx = self.in_stm[num]
@@ -947,31 +962,17 @@ class _Span:
 
 
 _TOKEN_RE = re.compile(
-    rb"\("                        # literal string opener — balanced
-    rb"|<[0-9A-Fa-f\s]*>"         # parens are depth-scanned in the loop
-    rb"|\[|\]"                    # (§7.3.4.2 allows nested unescaped ())
+    # a literal string that closes before any unescaped '(' is one token;
+    # otherwise the token is its '(' and the loop depth-scans the rest
+    # (§7.3.4.2 allows nested unescaped parens)
+    rb"\((?:[^()\\]*(?:\\.[^()\\]*)*\))?"
+    rb"|<[0-9A-Fa-f\s]*>"
+    rb"|\[|\]"
     rb"|/[A-Za-z0-9]+"
     rb"|[-+]?\d*\.?\d+"
-    rb"|[A-Za-z'\"*]+"
-)
-
-
-def _scan_literal(stream: bytes, start: int) -> int:
-    """End index (past the closing paren) of the literal string whose
-    '(' is at start-1: depth-counted with escape skipping, exactly the
-    _parse_value discipline. Unterminated ⇒ end of stream."""
-    depth, i, n = 1, start, len(stream)
-    while i < n and depth:
-        b = stream[i]
-        if b == 0x5C:
-            i += 2
-            continue
-        if b == 0x28:
-            depth += 1
-        elif b == 0x29:
-            depth -= 1
-        i += 1
-    return i
+    rb"|[A-Za-z'\"*]+",
+    re.DOTALL)
+_NUM_FIRST = b"+-.0123456789"  # first bytes of the number alternative
 
 _INLINE_ID_RE = re.compile(rb"\bID[\x00\t\n\x0c\r ]")
 _INLINE_EOD_RE = re.compile(
@@ -1052,12 +1053,9 @@ def _parse_spans(stream: bytes,
     array_items: list = []
     font: _Font | None = None
 
-    def show(s: str) -> str:
-        if font is not None and font.dec is not None:
-            return font.dec.decode(s.encode("latin-1"))
-        return s
+    sc = None  # √|det| of Tm·CTM; only BT, Tm, cm and Q change it
 
-    def emit(s: str) -> None:
+    def emit(raw: str) -> None:
         # advance model (§9.4.4): w = (Σ glyph widths + Tc·n +
         # Tw·spaces) · Tz, where glyph widths come from the font's
         # /Widths table when declared and the CHAR_W estimate
@@ -1065,12 +1063,13 @@ def _parse_spans(stream: bytes,
         # not the advance. Defaults (0/0/100%/0) reduce to the plain
         # estimate, and the exact width rides on the span so word-gap
         # and table geometry use it too.
-        nonlocal tm
-        raw = s
-        s = show(s)
+        nonlocal tm, sc
+        s = raw if font is None or font.dec is None \
+            else font.dec.decode(raw.encode("latin-1"))
         if s:
             trm = _mat_mul(_mat_translate(0.0, rise, tm), ctm)
-            sc = _mat_scale(trm)
+            if sc is None:
+                sc = _mat_scale(trm)
             frac = (font.advance(raw.encode("latin-1"), len(s))
                     if font is not None and font.has_widths
                     else CHAR_W * len(s))
@@ -1084,123 +1083,55 @@ def _parse_spans(stream: bytes,
             tm = _mat_translate(w, 0.0, tm)
 
     pos = 0
-    while True:
-        m = _TOKEN_RE.search(stream, pos)
-        if m is None:
-            break
+    while (m := _TOKEN_RE.search(stream, pos)) is not None:
         pos = m.end()
-        tok = m.group(0)
-        if tok == b"BI":
-            # inline image (§8.9.7): skip the dict, the binary data after
-            # ID, and the whitespace-delimited EI EOD. The raw bytes can
-            # contain anything — parens, "Tj", digits — so they must
-            # never reach the token stream. Done here (not as a pre-strip
-            # regex) so a "(BI" inside a string, already consumed as one
-            # string token, can't false-positive.
-            idm = _INLINE_ID_RE.search(stream, pos)
-            if idm is None:
-                raise _Malformed("inline image: no ID")
-            eod = _INLINE_EOD_RE.search(stream, idm.end())
-            if eod is None:
-                raise _Malformed("inline image: no EI")
-            pos = eod.end()
-            stack = []
-            continue
-        if tok == b"[":
-            in_array, array_items = True, []
-        elif tok == b"]":
-            in_array = False
-            stack.append(array_items)
-        elif tok == b"(":
-            end = _scan_literal(stream, pos)
-            body = stream[pos:end]
-            if body.endswith(b")"):
-                body = body[:-1]
-            s = _unescape(body)
-            pos = end
-            if in_array:
-                array_items.append(s)
-            else:
-                stack.append(s)
-        elif tok.startswith(b"<"):
-            hx = re.sub(rb"\s", b"", tok[1:-1])
+        tok = m.group()
+        c = tok[0]  # the first byte fixes the token regex's alternative
+        if c in _NUM_FIRST:
+            (array_items if in_array else stack).append(float(tok))
+        elif c == 0x28:  # '(' literal string
+            if len(tok) == 1:  # nested parens or unterminated
+                pos = _scan_literal(stream, pos)
+                tok = stream[m.start():pos]
+            s = _unescape(tok[1:-1] if tok[-1] == 0x29 else tok[1:])
+            (array_items if in_array else stack).append(s)
+        elif c == 0x3C:  # '<' hex string
+            hx = tok[1:-1].translate(None, _ASCII_WS)
             if len(hx) % 2:
                 hx += b"0"  # PDF spec: odd-length hex pads with 0
             s = bytes.fromhex(hx.decode("ascii")).decode("latin-1")
-            if in_array:
-                array_items.append(s)
-            else:
-                stack.append(s)
-        elif tok.startswith(b"/"):
+            (array_items if in_array else stack).append(s)
+        elif c == 0x2F:  # '/' name
             stack.append(tok.decode("latin-1"))
-        elif re.fullmatch(rb"[-+]?\d*\.?\d+", tok):
-            v = float(tok)
-            if in_array:
-                array_items.append(v)
-            else:
-                stack.append(v)
-        else:
-            op = tok.decode("latin-1")
-            if op == "BT":
-                tm = lm = _ID6
-                stack = []
-            elif op == "Tf" and len(stack) >= 1:
+        elif c == 0x5B:  # '['
+            in_array, array_items = True, []
+        elif c == 0x5D:  # ']'
+            in_array = False
+            stack.append(array_items)
+        else:  # operator (frequent ones first): act on its operands, drop them
+            if tok == b"Tj" and stack:
+                if isinstance(stack[-1], str):
+                    emit(stack[-1])
+            elif tok == b"TD" and len(stack) >= 2:
+                leading = -float(stack[-1])
+                lm = _mat_translate(float(stack[-2]), float(stack[-1]), lm)
+                tm = lm
+            elif tok == b"Tm" and len(stack) >= 6:
+                lm = tm = tuple(float(v) for v in stack[-6:])
+                sc = None
+            elif tok == b"Td" and len(stack) >= 2:
+                lm = _mat_translate(float(stack[-2]), float(stack[-1]), lm)
+                tm = lm
+            elif tok == b"Tf" and len(stack) >= 1:
                 size = float(stack[-1])
                 if (fonts and len(stack) >= 2
                         and isinstance(stack[-2], str)
                         and stack[-2].startswith("/")):
                     font = fonts.get(stack[-2][1:])
-                stack = []
-            elif op == "Td" and len(stack) >= 2:
-                lm = _mat_translate(float(stack[-2]), float(stack[-1]), lm)
-                tm = lm
-                stack = []
-            elif op == "TD" and len(stack) >= 2:
-                leading = -float(stack[-1])
-                lm = _mat_translate(float(stack[-2]), float(stack[-1]), lm)
-                tm = lm
-                stack = []
-            elif op == "Tm" and len(stack) >= 6:
-                lm = tm = tuple(float(v) for v in stack[-6:])
-                stack = []
-            elif op == "TL" and stack:
-                leading = float(stack[-1])
-                stack = []
-            elif op == "Tc" and stack:
-                char_sp = float(stack[-1])
-                stack = []
-            elif op == "Tw" and stack:
-                word_sp = float(stack[-1])
-                stack = []
-            elif op == "Tz" and stack:
-                hscale = float(stack[-1]) / 100.0
-                stack = []
-            elif op == "Ts" and stack:
-                rise = float(stack[-1])
-                stack = []
-            elif op == "T*":
-                lm = _mat_translate(0.0, -leading, lm)
-                tm = lm
-                stack = []
-            elif op == "'" and stack:  # next line + show
-                lm = _mat_translate(0.0, -leading, lm)
-                tm = lm
-                if isinstance(stack[-1], str):
-                    emit(stack[-1])
-                stack = []
-            elif op == '"' and len(stack) >= 3:  # aw ac string "
-                word_sp = float(stack[-3])
-                char_sp = float(stack[-2])
-                lm = _mat_translate(0.0, -leading, lm)
-                tm = lm
-                if isinstance(stack[-1], str):
-                    emit(stack[-1])
-                stack = []
-            elif op == "Tj" and stack:
-                if isinstance(stack[-1], str):
-                    emit(stack[-1])
-                stack = []
-            elif op == "TJ" and stack:
+            elif tok == b"BT":
+                tm = lm = _ID6
+                sc = None
+            elif tok == b"TJ" and stack:
                 arr = stack[-1]
                 if isinstance(arr, list):
                     for item in arr:
@@ -1210,22 +1141,44 @@ def _parse_spans(stream: bytes,
                             tm = _mat_translate(
                                 -float(item) / 1000.0 * size * hscale,
                                 0.0, tm)
-                stack = []
-            elif op == "cm" and len(stack) >= 6:
+            elif tok == b"TL" and stack:
+                leading = float(stack[-1])
+            elif tok == b"Tc" and stack:
+                char_sp = float(stack[-1])
+            elif tok == b"Tw" and stack:
+                word_sp = float(stack[-1])
+            elif tok == b"Tz" and stack:
+                hscale = float(stack[-1]) / 100.0
+            elif tok == b"Ts" and stack:
+                rise = float(stack[-1])
+            elif tok == b"T*":
+                lm = _mat_translate(0.0, -leading, lm)
+                tm = lm
+            elif tok == b"'" and stack:  # next line + show
+                lm = _mat_translate(0.0, -leading, lm)
+                tm = lm
+                if isinstance(stack[-1], str):
+                    emit(stack[-1])
+            elif tok == b'"' and len(stack) >= 3:  # aw ac string "
+                word_sp = float(stack[-3])
+                char_sp = float(stack[-2])
+                lm = _mat_translate(0.0, -leading, lm)
+                tm = lm
+                if isinstance(stack[-1], str):
+                    emit(stack[-1])
+            elif tok == b"cm" and len(stack) >= 6:
                 try:
                     ctm = _mat_mul(tuple(float(v) for v in stack[-6:]),
                                    ctm)
+                    sc = None
                 except (TypeError, ValueError):
                     pass  # malformed operands: keep the current CTM
-                stack = []
-            elif op == "q":
+            elif tok == b"q":
                 ctm_stack.append(ctm)
-                stack = []
-            elif op == "Q":
+            elif tok == b"Q":
                 if ctm_stack:
-                    ctm = ctm_stack.pop()
-                stack = []
-            elif op == "Do" and stack:
+                    ctm, sc = ctm_stack.pop(), None
+            elif tok == b"Do" and stack:
                 name = stack[-1]
                 if (doc is not None and isinstance(res, dict)
                         and isinstance(name, str) and name.startswith("/")
@@ -1245,11 +1198,22 @@ def _parse_spans(stream: bytes,
                         _parse_spans(body, _fonts_from_res(doc, fres),
                                      doc, fres, _mat_mul(m6, ctm),
                                      depth + 1, spans)
-                stack = []
-            elif op == "ET":
-                stack = []
-            else:
-                stack = []
+            elif tok == b"BI":
+                # inline image (§8.9.7): skip the dict, the binary data
+                # after ID, and the whitespace-delimited EI EOD. The raw
+                # bytes can contain anything — parens, "Tj", digits — so
+                # they must never reach the token stream. Done here (not
+                # as a pre-strip regex) so a "(BI" inside a string,
+                # already consumed as one string token, can't
+                # false-positive.
+                idm = _INLINE_ID_RE.search(stream, pos)
+                if idm is None:
+                    raise _Malformed("inline image: no ID")
+                eod = _INLINE_EOD_RE.search(stream, idm.end())
+                if eod is None:
+                    raise _Malformed("inline image: no EI")
+                pos = eod.end()
+            stack = []
     return spans
 
 
@@ -1352,8 +1316,8 @@ def _extract_scan(payload: bytes) -> tuple[str | None, str | None]:
     before round 5) and the only streams are content streams."""
     pages = []
     for body in _iter_streams(payload):
-        if body is None:
-            return None, "bad_flate_stream"
+        if isinstance(body, str):
+            return None, body
         try:
             spans = _parse_spans(body)
         except Exception:

@@ -9,7 +9,7 @@ max_examples locally when hunting.
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 # tag soup alphabet: words, whitespace, angle brackets, real tags (incl.
 # rawtext and self-closing), comments, entities, attribute junk
@@ -200,6 +200,72 @@ def test_media_writer_roundtrip_and_truncation(w, h, seed, cut):
             trunc = payload[:-cut]
             m2, e2 = decode_payload_media(trunc)  # must not raise
             assert (m2 is None) != (e2 is None)
+
+
+# --- PDF scanners: regex jumps against per-byte reference loops -----------
+# `_scan_literal`, `_skip_ws` and `_parse_value`'s literal branch jump with
+# compiled regexes; they must land where these per-byte loops land.
+
+def _scan_literal_reference(stream: bytes, start: int) -> int:
+    depth, i, n = 1, start, len(stream)
+    while i < n and depth:
+        b = stream[i]
+        if b == 0x5C:
+            i += 2
+            continue
+        if b == 0x28:
+            depth += 1
+        elif b == 0x29:
+            depth -= 1
+        i += 1
+    return i
+
+
+def _skip_ws_reference(p: bytes, pos: int) -> int:
+    n = len(p)
+    while pos < n:
+        c = p[pos]
+        if c in b"\x00\t\n\x0c\r ":
+            pos += 1
+        elif c == 0x25:  # '%' comment runs to EOL
+            while pos < n and p[pos] not in b"\r\n":
+                pos += 1
+        else:
+            break
+    return pos
+
+
+_SCAN_BYTES = st.lists(st.sampled_from([
+    b"(", b")", b"\\", b"\\(", b"\\)", b"%", b"%%", b"\r", b"\n", b"\r\n",
+    b" ", b"\t", b"\x00", b"\x0c", b"\x0b", b"a", b"Tj", b"\\n", b"\\053",
+    b"\xff",
+]), max_size=30).map(b"".join) | st.binary(max_size=40)
+
+
+@given(_SCAN_BYTES, st.integers(0, 41))
+@example(b"a(b)c) tail", 0)        # nesting
+@example(b"a\\(b\\)c) tail", 0)    # escaped parens
+@example(b"abc\\", 0)              # trailing backslash: one past the end
+@example(b"abc(", 0)               # unterminated
+@example(b"  % comment to EOF", 0)
+@example(b"%a\r\n %b\n\t x", 0)
+@settings(max_examples=600, derandomize=True, deadline=None)
+def test_pdf_scanners_match_byte_loop_references(p, pos):
+    """Arbitrary bytes and start offsets, up to one past the end."""
+    from pdf_extract_spark.kernels.pdf_extract import (
+        _TOKEN_RE, _parse_value, _scan_literal, _skip_ws,
+        _unescape_str_bytes)
+
+    pos = min(pos, len(p) + 1)
+    assert _scan_literal(p, pos) == _scan_literal_reference(p, pos)
+    assert _skip_ws(p, pos) == _skip_ws_reference(p, pos)
+    lit = b"(" + p
+    end = _scan_literal_reference(lit, 1)
+    assert _parse_value(lit, 0) == (_unescape_str_bytes(lit[1:end - 1]), end)
+    # the content tokenizer takes a literal whole only where the depth
+    # scan would end it
+    tok = _TOKEN_RE.match(lit).group()
+    assert tok == b"(" or len(tok) == end
 
 
 # --- BPE replace-chain encoding (queries/model_q.py) -----------------------

@@ -826,6 +826,93 @@ def test_pdf_flate_compressed_stream():
     assert t_bad is None and e_bad == "bad_flate_stream"
 
 
+def _bomb_pdf(inflated_mb: int) -> bytes:
+    """A one-page PDF whose Flate content stream inflates to
+    `inflated_mb` MB of spaces (about 1 KB of deflate data per MB)."""
+    import zlib
+
+    z = zlib.compressobj(9)
+    mb = b" " * (1 << 20)
+    body = b"".join(z.compress(mb) for _ in range(inflated_mb)) + z.flush()
+    objs = [b"<< /Type /Catalog /Pages 2 0 R >>",
+            b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
+            b"<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>",
+            b"<< /Length %d /Filter /FlateDecode >>\nstream\n%s\nendstream"
+            % (len(body), body)]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets = []
+    for num, obj in enumerate(objs, start=1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n%s\nendobj\n" % (num, obj)
+    xref_at = len(out)
+    out += b"xref\n0 5\n0000000000 65535 f \n"
+    out += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    out += b"trailer\n<< /Size 5 /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n" \
+        % xref_at
+    return bytes(out)
+
+
+def test_pdf_flate_bomb_is_a_resource_limit():
+    """A Flate stream inflating past MAX_INFLATED_BYTES quarantines as
+    `resource_limit` on the structured and the salvage path alike, in
+    bounded time, instead of being inflated whole."""
+    import time
+    import zlib
+
+    import pytest
+
+    from pdf_extract_spark.kernels import pdf_extract as P
+
+    bomb = _bomb_pdf(100)
+    assert len(bomb) < 150_000
+    salvage = bomb.replace(b"startxref", b"startxrex")  # no xref: salvage
+    for payload in (bomb, salvage):
+        t0 = time.perf_counter()
+        assert extract_pdf_text(payload) == (None, "resource_limit")
+        assert time.perf_counter() - t0 < 2.0
+    # under the cap the same stream decodes (to no text); a truncated
+    # deflate body is still malformed
+    assert extract_pdf_text(_bomb_pdf(1)) == (None, "no_text_content")
+    with pytest.raises(P._Malformed):
+        P._apply_filter("/FlateDecode", zlib.compress(b"x" * 100)[:-3], {})
+
+
+def _pinned_corpus() -> list[bytes]:
+    """make_rows(2000) payloads plus four many-page PDFs (20-50 pages of
+    40 lines each) from a fixed-seed word list."""
+    import random
+
+    rng = random.Random("pinned-multipage")
+    words = ("data spark engine query table column partition shuffle join "
+             "filter aggregate window stream batch vector index").split()
+    docs = [row[2] for row in pages.make_rows(2000)]
+    for k in range(4):
+        docs.append(pdf_writer.build_pdf([
+            pdf_writer.page_ops_simple(
+                [" ".join(rng.choice(words) for _ in range(10))
+                 for _ in range(40)])
+            for _ in range(20 + 10 * k)]))
+    return docs
+
+
+# sha256 over decode_payload's (text, error) for _pinned_corpus(), one
+# JSON line per document. Recorded once, never recomputed: the other
+# goldens are computed by the kernel under test, so only this digest
+# catches a kernel rewrite that changes its output bytes.
+PINNED_DECODE_SHA256 = \
+    "e45efe891c4aaef303ad2674a8d87463eea6fabb67bc2e0742c53ced1026ff44"
+
+
+def test_pinned_decode_output_digest():
+    import hashlib
+    import json
+
+    h = hashlib.sha256()
+    for payload in _pinned_corpus():
+        h.update(json.dumps(decode_payload(payload)).encode() + b"\n")
+    assert h.hexdigest() == PINNED_DECODE_SHA256
+
+
 def test_pdf_escape_property():
     """Property: writer-escape → parser-unescape is identity for lines with
     parens, backslashes, and latin-1 glyphs (the PDF string escape path)."""
