@@ -58,7 +58,8 @@ Scale notes (the 100 TB shapes, per stage, all verified on .explain):
 - dedup_doc: exact pass is one groupBy(fullhash); near-dup pass is
   banded MinHash with the MAX_BUCKET degenerate-bucket cap, Jaccard
   verify only on candidate pairs, then O(log n)-round large/small-star
-  contraction (the 10^12-node component path) — never all-pairs.
+  contraction that stops on the first star forest (the 10^12-node
+  component path) — never all-pairs.
 - split: pure narrow hash map; decontamination is the strictly linear
   inverted-index shape (train grams distinct-ed BEFORE the semi-join).
 - pack: two-level distributed prefix sum — the only unpartitioned window
@@ -492,12 +493,14 @@ def near_dup_pairs(docs: DataFrame) -> DataFrame:
         sig.unpersist()
 
 
-def dedup_documents(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+def dedup_documents(
+        docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Document-level dedup: exact pass (128-bit text hash groupBy, one
     shuffle, winner = min doc_key) then MinHash-LSH near-dup pairs over
     the exact survivors, contracted to clusters by alternating
     large/small-star (dedup_q.connected_components_star — O(log n)
-    rounds, the 10^12-node path; property-tested equal to hash-to-min).
+    rounds, the 10^12-node path, stopping on the first star forest;
+    property-tested equal to a union-find).
     Returns (kept_docs, dropped, cached) with dropped = (url, error)
     naming each drop's canonical survivor — the quarantine row a user
     audits — and cached the persisted frame the CALLER must unpersist

@@ -36,7 +36,11 @@ Determinism contract shared by every query here (SURVEY.md §7.3 item 1):
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -61,6 +65,40 @@ def register(name: str, oracle: str | None = None):
 
 def tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def cached_index_dir(spark: SparkSession, sf_dir: str, name: str,
+                     prefix: str, marker: str,
+                     build: Callable[[DataFrame, str], object]) -> str:
+    """Build-once disk cache for an index over the source table ``name``:
+    ``<tmpdir>/<prefix>_<tag>``, tagged with the table file's size+mtime
+    fingerprint so a regenerated table never silently reuses a stale
+    index. ``build(table, dir)`` writes into a staging dir that is then
+    atomically renamed into place, and ``marker`` (a path inside the
+    index dir) is the completion probe, so concurrent sessions race
+    safely: the loser discards its staging."""
+    src = os.path.join(sf_dir, f"{name}.parquet")
+    st = os.stat(src)
+    tag = hashlib.sha256(
+        f"{src}|{st.st_size}|{st.st_mtime_ns}".encode()).hexdigest()[:16]
+    d = os.path.join(tempfile.gettempdir(), f"{prefix}_{tag}")
+    done = os.path.join(d, marker)
+    if os.path.exists(done):
+        return d
+    staging = f"{d}.build-{uuid.uuid4().hex[:8]}"
+    build(tbl(spark, sf_dir, name), staging)
+    try:
+        os.rename(staging, d)
+    except OSError as exc:
+        shutil.rmtree(staging, ignore_errors=True)
+        # rename fails either because a concurrent builder won the race
+        # (d now complete — reuse it) or for an unrelated reason (EXDEV,
+        # permissions): verify before declaring victory by proxy, else
+        # callers would fail later on a path that never materialized
+        if not os.path.exists(done):
+            raise RuntimeError(
+                f"index publish failed: {staging} -> {d}") from exc
+    return d
 
 
 def load_all() -> dict[str, Query]:

@@ -494,54 +494,15 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("cos_sim") >= 0.99))
 
 
-
-
-def connected_components(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
-    """(a_id, b_id) undirected pair table → (node, label) with label = min
-    node id in the component. Iterative hash-to-min propagation; each round
-    is one join + one min-aggregate, localCheckpoint truncates lineage.
-
-    Convergence = a round that changes nothing, so a diameter-D graph
-    needs D propagation rounds plus one no-op probe round: the loop runs
-    max_rounds + 1 times and only raises if the LAST round still changed
-    labels (usable diameter = max_rounds exactly)."""
-    edges = (pairs.unionByName(
-        pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")))
-        .withColumnRenamed("a_id", "src").withColumnRenamed("b_id", "dst")
-        .persist())
-    try:
-        labels = (edges.select(F.col("src").alias("node")).distinct()
-                  .withColumn("label", F.col("node"))
-                  .localCheckpoint())
-        for _ in range(max_rounds + 1):
-            prop = (edges.join(labels, edges.src == labels.node)
-                    .select(F.col("dst").alias("node"), "label"))
-            new_labels = (labels.unionByName(prop)
-                          .groupBy("node").agg(F.min("label").alias("label"))
-                          .localCheckpoint())
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), "node")
-                       .filter(F.expr("n.label < o.label")).count())
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"label propagation did not converge in {max_rounds} rounds")
-        return labels
-    finally:
-        edges.unpersist()
-
-
 def connected_components_star(pairs: DataFrame,
                               max_rounds: int = 50) -> DataFrame:
-    """(a_id, b_id) pair table → (node, label): alternating
+    """(a_id, b_id) undirected pair table → (node, label) with label = min
+    node id in the component; self-loops are dropped. Alternating
     large-star/small-star (Kiveris et al., "Connected Components in
-    MapReduce and Beyond", SoCC'14) — the 10^12-node upgrade of
-    `connected_components`. Hash-to-min needs one round per graph
-    DIAMETER; star rounds contract any graph in O(log n) rounds, so a
+    MapReduce and Beyond", SoCC'14): O(log n) rounds on any graph, so a
     pathological chain-shaped near-dup component (doc A ~ B ~ C ~ ...
-    from chained shingle overlaps) cannot stall the job.
+    from chained shingle overlaps) cannot stall the job the way
+    diameter-bound label propagation would.
 
     Representation: a parent pointer per node (edges toward each node's
     current minimum). Each round is two groupBy-min + join steps:
@@ -550,9 +511,15 @@ def connected_components_star(pairs: DataFrame,
       small-star: every neighbor v <= u (and u) re-points to m
 
     Both steps keep edge count bounded by the input (no quadratic
-    blow-up), converge to 1-level stars rooted at component minima, and
-    localCheckpoint truncates lineage per round — same discipline as the
-    hash-to-min loop. Convergence probe = a tiny changed-edge count."""
+    blow-up), and localCheckpoint truncates lineage per round.
+
+    Stop test, run BEFORE each round: the edges are a star forest —
+    every child u has exactly one edge and no child is any edge's
+    parent v. A star forest is a fixed point of a round and every fixed
+    point is a star forest (Kiveris et al.), so the loop stops on the
+    first fixed point without running a round to confirm it, and the
+    roots are simply the distinct parents. Raises if none of the
+    max_rounds tests passes."""
     # canonical form: (u, v) with v < u, self-loops dropped
     edges = (pairs.filter(F.col("a_id") != F.col("b_id"))
              .select(F.greatest("a_id", "b_id").alias("u"),
@@ -561,6 +528,16 @@ def connected_components_star(pairs: DataFrame,
              .localCheckpoint())
 
     for _ in range(max_rounds):
+        # not a star forest iff some node is in two or more edges and a
+        # child in at least one of them
+        roles = (edges.select(F.col("u").alias("n"), F.lit(1).alias("child"))
+                 .unionByName(edges.select(F.col("v").alias("n"),
+                                           F.lit(0).alias("child"))))
+        if (roles.groupBy("n")
+                .agg(F.count("*").alias("k"), F.max("child").alias("child"))
+                .filter((F.col("k") > 1) & (F.col("child") == 1))
+                .isEmpty()):
+            break
         # LARGE-STAR: full undirected neighborhoods; every neighbor
         # dst > src re-points to m = min(N(src) ∪ {src}). Output edges all
         # satisfy small < big, i.e. arrive canonical.
@@ -580,31 +557,23 @@ def connected_components_star(pairs: DataFrame,
                  .select(F.col("v").alias("a"), F.col("m").alias("b"))
                  .unionByName(mins2.select(F.col("u").alias("a"),
                                            F.col("m").alias("b"))))
-        nxt = (small.filter(F.col("a") != F.col("b"))
-               .select(F.greatest("a", "b").alias("u"),
-                       F.least("a", "b").alias("v"))
-               .distinct()
-               .localCheckpoint())
-        changed = (nxt.join(edges, ["u", "v"], "left_anti").count()
-                   + edges.join(nxt, ["u", "v"], "left_anti").count())
-        edges = nxt
-        if changed == 0:
-            break
+        edges = (small.filter(F.col("a") != F.col("b"))
+                 .select(F.greatest("a", "b").alias("u"),
+                         F.least("a", "b").alias("v"))
+                 .distinct()
+                 .localCheckpoint())
     else:
         raise RuntimeError(
             f"star contraction did not converge in {max_rounds} rounds")
-    # converged: edges are 1-level stars (u -> component min v); every
-    # non-root u appears exactly once, roots label themselves
     labels = edges.select(F.col("u").alias("node"), F.col("v").alias("label"))
     roots = (edges.select(F.col("v").alias("node")).distinct()
-             .join(labels, "node", "left_anti")
              .withColumn("label", F.col("node")))
     return labels.unionByName(roots)
 
 
-@register(
-    "dedup_clusters",
-    oracle=f"""
+# connected components as a recursive-CTE min-label closure over the
+# minhash pairs: the DuckDB oracle of both cluster-map registrations
+_CLUSTERS_ORACLE_SQL = f"""
     WITH RECURSIVE
     p AS (SELECT a_id, b_id FROM ({_MINHASH_ORACLE_SQL}) mh),
     e AS (SELECT a_id AS src, b_id AS dst FROM p
@@ -619,8 +588,13 @@ def connected_components_star(pairs: DataFrame,
            node = cluster_id AS is_canonical,
            COUNT(*) OVER (PARTITION BY cluster_id) AS n_members
     FROM comp
-    """,
-)
+    """
+
+
+# dedup_clusters_star: an alias of the same query under its older name,
+# kept so the registry's name list stays stable
+@register("dedup_clusters_star", oracle=_CLUSTERS_ORACLE_SQL)
+@register("dedup_clusters", oracle=_CLUSTERS_ORACLE_SQL)
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTERING: connected components over the minhash pair
     graph, canonical doc = min doc_id per component — the transitive-
@@ -628,58 +602,18 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and B~C must collapse into one cluster even when A~C was never a
     candidate pair).
 
-    Spark shape: iterative hash-to-min label propagation — each round
-    joins edges to current labels and takes the per-node MIN; converges
-    in ≤ graph-diameter rounds (localCheckpoint truncates the growing
-    lineage each round; the convergence probe is a tiny count) — the
-    right shape for near-dup graphs, whose components have tiny
-    diameter. For high-diameter graphs at 10^12-doc scale the
-    alternating large-star/small-star contraction is implemented as
-    `connected_components_star` (O(log n) rounds; equality with this
-    loop is property-tested on chains/stars/random graphs in
-    tests/test_plans.py). The oracle is a recursive-CTE min-label
-    closure over the same pairs."""
+    Spark shape: `connected_components_star`, alternating
+    large-star/small-star contraction that stops on the first star
+    forest — O(log n) rounds whatever the component diameter, each a
+    few bounded shuffles with lineage cut by localCheckpoint. The oracle
+    is a recursive-CTE min-label closure over the same pairs."""
     pairs = dedup_minhash_lsh(spark, sf_dir).select("a_id", "b_id")
-    labels = connected_components(pairs, max_rounds=20)
-    return _cluster_table(labels)
-
-
-def _cluster_table(labels: DataFrame) -> DataFrame:
+    labels = connected_components_star(pairs)
     w = Window.partitionBy("cluster_id")
     return (labels.select(F.col("node").alias("doc_id"),
                           F.col("label").alias("cluster_id"))
             .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
             .withColumn("n_members", F.count("*").over(w)))
-
-
-@register(
-    "dedup_clusters_star",
-    oracle=f"""
-    WITH RECURSIVE
-    p AS (SELECT a_id, b_id FROM ({_MINHASH_ORACLE_SQL}) mh),
-    e AS (SELECT a_id AS src, b_id AS dst FROM p
-          UNION ALL SELECT b_id, a_id FROM p),
-    n AS (SELECT DISTINCT src AS node FROM e),
-    reach(node, label) AS (
-      SELECT node, node FROM n
-      UNION
-      SELECT e.dst, r.label FROM reach r JOIN e ON e.src = r.node),
-    comp AS (SELECT node, MIN(label) AS cluster_id FROM reach GROUP BY node)
-    SELECT node AS doc_id, CAST(cluster_id AS BIGINT) AS cluster_id,
-           node = cluster_id AS is_canonical,
-           COUNT(*) OVER (PARTITION BY cluster_id) AS n_members
-    FROM comp
-    """,
-)
-def dedup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """`dedup_clusters` computed by the alternating large-star/small-star
-    contraction instead of hash-to-min — SAME oracle, so the driver's
-    value hash proves the O(log n)-round algorithm (the 10^12-node path,
-    Kiveris et al. SoCC'14) produces the identical cluster map, not just
-    the property tests."""
-    pairs = dedup_minhash_lsh(spark, sf_dir).select("a_id", "b_id")
-    labels = connected_components_star(pairs, max_rounds=20)
-    return _cluster_table(labels)
 
 
 # --- paragraph-level dedup (CCNet / C4 discipline) ---------------------------

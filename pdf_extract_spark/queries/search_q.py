@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from . import register, tbl
+from . import cached_index_dir, register, tbl
 from .text_q import _INJECT, _SPARK_INJECT
 from .vectors_q import _duck_l2, _spark_l2
 
@@ -450,36 +450,13 @@ def lexical_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lexical_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build-once disk cache for the persisted lexical index, keyed by the
-    source table's size+mtime fingerprint with an atomic-rename publish —
-    the same protocol as the IVF index (vectors_q._ivf_index_dir)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+    """The persisted lexical index (plans/lexical.py), built once per
+    documents-table content."""
     from ..plans.lexical import write_lexical_index
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}".encode()).hexdigest()[:16]
-    d = os.path.join(tempfile.gettempdir(), f"pdfx_lex_{tag}")
-    done = os.path.join(d, "meta", "_SUCCESS")
-    if os.path.exists(done):
-        return d
-    staging = f"{d}.build-{uuid.uuid4().hex[:8]}"
-    write_lexical_index(
-        tbl(spark, sf_dir, "documents").select("doc_id", "text"), staging)
-    try:
-        os.rename(staging, d)
-    except OSError as exc:
-        shutil.rmtree(staging, ignore_errors=True)
-        if not os.path.exists(done):
-            raise RuntimeError(
-                f"lexical index publish failed: {staging} -> {d}") from exc
-    return d
+    return cached_index_dir(
+        spark, sf_dir, "documents", "pdfx_lex", "meta/_SUCCESS",
+        lambda docs, d: write_lexical_index(docs.select("doc_id", "text"), d))
 
 
 @register("lexical_topk_indexed", oracle=_LEXICAL_ORACLE)

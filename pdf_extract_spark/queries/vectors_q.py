@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
-from . import register, tbl
+from . import cached_index_dir, register, tbl
 
 N_QUERIES = 5
 K = 10
@@ -383,42 +383,12 @@ def ann_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
-    """Build (once per source-table content, cached on disk) the persisted
-    IVF index: ivf_vectors partitioned by label + ivf_centroids.
-
-    Cache key includes the embeddings file's size+mtime fingerprint, so a
-    regenerated fixture table never silently reuses a stale index; the
-    build goes to a staging dir atomically renamed into place, so
-    concurrent sessions race safely (the loser discards its staging)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
+    """The persisted IVF index (ivf_vectors partitioned by label +
+    ivf_centroids), built once per embeddings-table content."""
     from ..plans.index import write_ivf_index
 
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}".encode()).hexdigest()[:16]
-    d = os.path.join(tempfile.gettempdir(), f"pdfx_ivf_{tag}")
-    if os.path.exists(os.path.join(d, "ivf_centroids", "_SUCCESS")):
-        return d
-    staging = f"{d}.build-{uuid.uuid4().hex[:8]}"
-    write_ivf_index(tbl(spark, sf_dir, "embeddings"), staging)
-    try:
-        os.rename(staging, d)
-    except OSError as exc:
-        shutil.rmtree(staging, ignore_errors=True)
-        # rename fails either because a concurrent builder won the race
-        # (d now complete — reuse it) or for an unrelated reason (EXDEV,
-        # permissions): verify before declaring victory by proxy, else
-        # callers would fail later on a path that never materialized
-        if not os.path.exists(os.path.join(d, "ivf_centroids", "_SUCCESS")):
-            raise RuntimeError(
-                f"IVF index publish failed: {staging} -> {d}") from exc
-    return d
+    return cached_index_dir(spark, sf_dir, "embeddings", "pdfx_ivf",
+                            "ivf_centroids/_SUCCESS", write_ivf_index)
 
 
 @register(

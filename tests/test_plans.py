@@ -250,38 +250,59 @@ def test_ivf_fine_scan_partition_prunes(spark):
     assert 0 < len(probed) < n_labels
 
 
-def test_star_contraction_matches_hash_to_min(spark):
-    """Alternating large-star/small-star must produce exactly the same
-    (node, label) map as hash-to-min on random graphs, long chains
-    (the diameter case star contraction exists for), and star+bridge
-    shapes — and converge on a 64-chain within far fewer than 64 rounds."""
+def _union_find_labels(pairs):
+    """Reference connected components: node -> component minimum, self-
+    loops dropped (a self-loop-only node is in no edge)."""
+    parent = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        if a != b:
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            parent[max(ra, rb)] = min(ra, rb)
+    return {(n, find(n)) for n in parent}
+
+
+def test_star_contraction_matches_union_find(spark):
+    """Alternating large-star/small-star with the star-forest stop must
+    give exactly the union-find (node, component-min) map on random
+    graphs, long chains (the diameter case star contraction exists for),
+    star+bridge shapes, empty input, graphs that are stars from the
+    start, and reversed/duplicate pairs — and converge on a 64-chain
+    within far fewer than 64 rounds."""
     import random
 
-    from pdf_extract_spark.queries.dedup_q import (
-        connected_components,
-        connected_components_star,
-    )
+    from pdf_extract_spark.queries.dedup_q import connected_components_star
 
     rng = random.Random(7)
-    pairs = [(100 + i, 101 + i) for i in range(64)]          # long chain
-    pairs += [(500, 500 + i) for i in range(1, 9)]           # star
-    pairs += [(508, 600), (600, 601)]                        # bridge
+    mixed = [(100 + i, 101 + i) for i in range(64)]          # long chain
+    mixed += [(500, 500 + i) for i in range(1, 9)]           # star
+    mixed += [(508, 600), (600, 601)]                        # bridge
     nodes = list(range(1000, 1040))
-    pairs += [tuple(rng.sample(nodes, 2)) for _ in range(30)]  # random
-    pairs += [(2000, 2001), (2001, 2000), (2002, 2002)]      # dup/self
-    df = spark.createDataFrame(pairs, "a_id long, b_id long")
-
-    want = {(r["node"], r["label"])
-            for r in connected_components(df, max_rounds=70).collect()
-            if r["node"] != 2002 or True}
-    got = {(r["node"], r["label"])
-           for r in connected_components_star(df, max_rounds=12).collect()}
-    # hash-to-min also emits the self-loop node 2002; star drops
-    # self-loops entirely, so align on the shared node set
-    want = {(n, l) for n, l in want if n != 2002}
-    assert got == want
-    # the 64-chain converged within max_rounds=12 (vs 64+ for hash-to-min)
-    # or connected_components_star would have raised
+    mixed += [tuple(rng.sample(nodes, 2)) for _ in range(30)]  # random
+    mixed += [(2000, 2001), (2001, 2000), (2002, 2002)]      # dup/self
+    graphs = [
+        mixed,
+        [],                                                  # empty
+        [(2 * i, 2 * i + 1) for i in range(20)],             # disjoint pairs
+        [(7, 3), (7, 5), (7, 9), (7, 11), (7, 4)],           # non-min centre
+        [(3, 1), (1, 3), (2, 3), (3, 2), (2, 3), (5, 4), (4, 5)],  # rev/dup
+    ]
+    for pairs in graphs:
+        df = spark.createDataFrame(pairs, "a_id long, b_id long")
+        # max_rounds=12: the 64-chain must contract in O(log n) rounds
+        # (label propagation would need 64+), or this raises
+        got = {(r["node"], r["label"])
+               for r in connected_components_star(df, max_rounds=12)
+               .collect()}
+        assert got == _union_find_labels(pairs), pairs
 
 
 def test_lexical_index_scan_partition_prunes(spark):
@@ -311,14 +332,14 @@ def test_connected_components_transitive_chain(spark):
     """A~B, B~C without A~C must collapse into ONE cluster (the closure
     step pair generation alone cannot give); two disjoint chains stay
     separate and a long chain converges within the round cap."""
-    from pdf_extract_spark.queries.dedup_q import connected_components
+    from pdf_extract_spark.queries.dedup_q import connected_components_star
 
     pairs = [(1, 2), (2, 3), (3, 4),          # chain: component min 1
              (10, 11), (12, 11),              # component min 10
              *[(100 + i, 101 + i) for i in range(15)]]  # long chain, min 100
     df = spark.createDataFrame(pairs, "a_id long, b_id long")
     got = {r["node"]: r["label"]
-           for r in connected_components(df, max_rounds=20).collect()}
+           for r in connected_components_star(df).collect()}
     assert {got[n] for n in (1, 2, 3, 4)} == {1}
     assert {got[n] for n in (10, 11, 12)} == {10}
     assert {got[100 + i] for i in range(16)} == {100}
