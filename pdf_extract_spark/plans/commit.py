@@ -48,6 +48,17 @@ def sum_digest(row_hex_expr: str) -> Column:
         f" AS BIGINT)), 15, '0')")
 
 
+# The same rule in Python, for counts a task keeps itself: a row's term is
+# digest_term(its hex, '0' for a null), and format_digest(sum of the terms)
+# equals sum_digest over the same rows.
+def digest_term(row_hex: str) -> int:
+    return int(row_hex[:15], 16)
+
+
+def format_digest(total: int) -> str:
+    return format(total % (1 << 60), "015X")
+
+
 def _is_torn(path: str) -> bool:
     """True iff the file is provably NOT a complete parquet file (missing
     the trailing PAR1 magic). False when the file cannot even be read:

@@ -40,7 +40,7 @@ where a collision only perturbs a sketch (minhash permutations, band
 keys, contamination grams) a single hash is the standard construction.
 
 Scale notes (the 100 TB shapes, per stage, all verified on .explain):
-- extract: Arrow-batched mapInPandas decode after a salted url-hash
+- extract: Arrow-batched mapInArrow decode after a salted url-hash
   repartition (the north rule's skew clause) — the only Python in the job.
 - clean: one narrow whole-stage-codegen projection (regex passes fused).
 - gate: per-doc signals are narrow; the domain table is one

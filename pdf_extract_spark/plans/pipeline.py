@@ -17,10 +17,13 @@ second full-table action):
 ok/err are directory partitions of ONE write (Catalyst routes rows by the
 status column), so the quarantine table (reference error_final analog,
 /root/reference/modules/graphs.py:22-30) is a partition filter, not a
-second job. Lineage is derived from a column-pruned re-read of the rows
-just written (3 thin columns), and run counters come from the lineage
-table itself — the full extracted text is scanned exactly once and
-written exactly once.
+second job. Lineage is counted by the decode tasks themselves
+(operators.extract.partition_tally): each task sums its rows, shas,
+errors and digest terms in the pass that decodes them and hands the
+driver one entry keyed by its partition id, the same id its rows carry
+in `partition_id`. So nothing is read back: a run is the write's Spark
+jobs plus one marker file, the counters hold wherever the writer puts
+the rows, and run counters come from the same entries.
 
 Crash safety (run-level commit protocol, plans/commit.py): lineage is
 written LAST and published as ONE atomically-renamed parquet file per
@@ -41,10 +44,24 @@ import os
 import shutil
 from urllib.parse import quote, unquote
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..operators.extract import derived_width, extract_text
-from .commit import publish_marker, read_marker, sum_digest, sweep_tmp
+from ..operators.extract import derived_width, extract_text, partition_tally
+from .commit import (format_digest, publish_marker, read_marker, sum_digest,
+                     sweep_tmp)
+
+# the Arrow schema lineage_rows(...).toArrow() gives: the marker's rows are
+# the same whichever builds them
+LINEAGE_SCHEMA = pa.schema([
+    pa.field("run_id", pa.string(), nullable=False),
+    pa.field("partition_id", pa.int32()),
+    pa.field("n_in", pa.int64(), nullable=False),
+    pa.field("n_out", pa.int64(), nullable=False),
+    pa.field("n_err", pa.int64()),
+    pa.field("digest", pa.string()),
+])
+
 
 def _committed_run_ids(lineage_dir: str) -> set[str]:
     """Runs whose lineage exists are committed: lineage is the LAST write
@@ -94,7 +111,10 @@ def _cleanup_uncommitted(extracted_dir: str, committed: set[str]) -> list[str]:
 
 def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     """One row per task partition: counts + order-insensitive checksum
-    (modular sum of per-row text digests — constant agg state)."""
+    (modular sum of per-row text digests — constant agg state). The SQL
+    form of the marker run_extraction builds from the decode's tallies,
+    derived from written rows: the reference the marker is tested
+    against."""
     return (
         extracted
         .groupBy("partition_id")
@@ -109,11 +129,6 @@ def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
     )
 
 
-# the columns of the extracted table the lineage re-read needs
-_STAGED_SCHEMA = ("partition_id int, text_sha256 string, error string, "
-                  "run_id string")
-
-
 class ParquetRunWriter:
     """Default output writer: directory-partitioned parquet append. Run
     atomicity comes from the surrounding run-level commit protocol
@@ -124,8 +139,8 @@ class ParquetRunWriter:
         self.extracted_dir = extracted_dir
 
     def write_run(self, ext: DataFrame) -> None:
-        # run_id is a directory partition too: the lineage re-read and any
-        # later per-run audit prune straight to this run's files
+        # run_id is a directory partition too: a per-run audit prunes
+        # straight to this run's files
         (ext.write.partitionBy("run_id", "status")
          .mode("append").parquet(self.extracted_dir))
 
@@ -141,6 +156,9 @@ class IcebergRunWriter:
     verifies the catalog is actually configured and fails with the exact
     spark-submit flags a real cluster needs. Swapping this writer into
     run_extraction is the ONLY change required — the seam is the point.
+    The lineage marker counts what the writer is handed, wherever the rows
+    land; resume, however, still anti-joins the input against the parquet
+    layout under ``<out>/extracted``.
     """
 
     def __init__(self, spark: SparkSession, table: str):
@@ -216,8 +234,9 @@ def run_extraction(
             spark.read.schema("url string").parquet(extracted_dir)
             .select("url"), "url", "left_anti")
 
+    tally = partition_tally(spark)
     ext = (
-        extract_text(todo, num_partitions=num_partitions)
+        extract_text(todo, num_partitions=num_partitions, tally=tally)
         .withColumn("partition_id", F.spark_partition_id())
         .withColumn("run_id", F.lit(run_id))
         .withColumn("status",
@@ -225,36 +244,27 @@ def run_extraction(
     )
     writer.write_run(ext)
 
-    # Lineage from a column-pruned re-read of what was just committed.
-    # Split planning sizes tasks by FULL file bytes (the pruned sha column
-    # is a fraction of that), so under the session's small decode-oriented
-    # maxPartitionBytes this tiny job would fan out into hundreds of tasks
-    # — widen splits for its duration (scheduling overhead is a FIXED
-    # driver cost that would otherwise eat into high-parallelism scaling).
-    # The wide-split conf lives on a CLONED session (same SparkContext and
-    # cached data, separate SQLConf), so concurrent queries planned on the
-    # caller's session never see it.
-    lineage_spark = spark.newSession()
-    lineage_spark.conf.set("spark.sql.files.maxPartitionBytes",
-                           str(512 * 1024 * 1024))
-    # explicit schema: an empty run writes no data files to infer it from
-    staged = (lineage_spark.read.schema(_STAGED_SCHEMA).parquet(extracted_dir)
-              .filter(F.col("run_id") == run_id)
-              .select("partition_id", "text_sha256", "error"))
-    # ONE marker file, not a Spark append: a multi-file append under
-    # committer v2 can crash having committed a subset of its part files,
-    # leaving a run that looks committed with under-reported counters.
-    # Lineage is one row per task partition, so it comes to the driver.
-    tab = lineage_rows(staged, run_id).toArrow()
+    # The lineage marker from the decode's own tallies, one row per task
+    # that decoded rows. ONE marker file, not a Spark append: a multi-file
+    # append under committer v2 can crash having committed a subset of its
+    # part files, leaving a run that looks committed with under-reported
+    # counters.
+    parts = sorted(tally.value.items())
+    tab = pa.Table.from_pydict({
+        "run_id": [run_id] * len(parts),
+        "partition_id": [p for p, _ in parts],
+        "n_in": [t[0] for _, t in parts],
+        "n_out": [t[1] for _, t in parts],
+        "n_err": [t[2] for _, t in parts],
+        "digest": [format_digest(t[3]) for _, t in parts],
+    }, schema=LINEAGE_SCHEMA)
     publish_marker(tab, out_dir, os.path.join(
         lineage_dir, f"run-{quote(run_id, safe='')}.parquet"))
 
-    # run counters from the just-published lineage table (same rows that
-    # landed in the commit marker — no extra Spark job)
-    n_in = sum(tab.column("n_in").to_pylist()) if tab.num_rows else 0
-    n_err = sum(tab.column("n_err").to_pylist()) if tab.num_rows else 0
-    return {"run_id": run_id, "n_in": int(n_in), "n_ok": int(n_in - n_err),
-            "n_err": int(n_err)}
+    n_in = sum(t[0] for _, t in parts)
+    n_err = sum(t[2] for _, t in parts)
+    return {"run_id": run_id, "n_in": n_in, "n_ok": n_in - n_err,
+            "n_err": n_err}
 
 
 def extracted_ok(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -14,15 +14,16 @@ from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 
-# Arrow batches handed to mapInPandas close at whichever cap they reach
-# first: 4096 rows bounds per-batch bookkeeping on small pages, 1 MB
-# bounds worker memory on large ones. The byte cap came with one decode
-# task per input split, at least one per core (operators.extract.
-# derived_width, in place of a fixed 32): fuller tasks hold more
-# rows at once. On the extraction benchmark (4 cores) worker peak RSS is
-# 147 MB with the row cap alone and 137.6 MB with 1 MB batches, against
-# 131.4 MB for the old 32-way layout.
-# These two caps are the only Arrow settings mapInPandas workers read.
+# Arrow batches handed to mapInArrow (the decode) and mapInPandas (the
+# other kernels) close at whichever cap they reach first: 4096 rows bounds
+# per-batch bookkeeping on small pages, 1 MB bounds worker memory on large
+# ones. The byte cap came with one decode task per input split, at least
+# one per core (operators.extract.derived_width, in place of a fixed 32):
+# fuller tasks hold more rows at once. On the extraction benchmark (4
+# cores) worker peak RSS was 147 MB with the row cap alone and 137.6 MB
+# with 1 MB batches, against 131.4 MB for the old 32-way layout (all
+# measured under mapInPandas).
+# These two caps are the only Arrow settings those workers read.
 # arrow.pyspark.enabled and its selfDestruct flag steer only driver-side
 # toPandas / createDataFrame(pandas) / toArrow, which the jobs never call
 # on document data, so both stay at Spark's defaults.
@@ -88,7 +89,7 @@ def get_spark(master: str | None = None,
     slots = _local_slots(master)
     if slots is not None:
         # Shuffle width: the slots, at least 8. A builder conf, so sessions
-        # cloned with newSession (the lineage re-read) keep it.
+        # cloned with newSession keep it.
         # Local workers run on this machine, so they can start from the
         # installed pyspark (worker_daemon). The daemon module is imported
         # before any task adds the --py-files archives, so the package root

@@ -6,7 +6,7 @@ batch); its closest analog is re-invoking the pipeline per uploaded file
 (/root/reference/streamlit_app.py:174-211). This module is that capability
 done Spark-native: a file-source stream over the pages directory runs the
 SAME extraction operator (operators/extract.extract_text works unchanged
-under readStream — mapInPandas is streaming-compatible), checkpointed so
+under readStream — mapInArrow is streaming-compatible), checkpointed so
 each file is processed exactly once across restarts — the streaming twin
 of the batch pipeline's lineage/anti-join resume.
 

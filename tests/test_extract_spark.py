@@ -6,10 +6,15 @@ and the job must be checkpoint-resumable without duplicates.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
+import subprocess
+from urllib.parse import quote
 
+import pyspark
 import pytest
+from pyspark.sql import functions as F
 
 from pdf_extract_spark.fixtures import pages
 from pdf_extract_spark.kernels.decode import decode_payload, text_sha256
@@ -17,11 +22,13 @@ from pdf_extract_spark.operators.extract import extract_text
 from pdf_extract_spark.plans.pipeline import (
     extracted_ok,
     final_digest,
+    lineage_rows,
     quarantine,
     run_extraction,
 )
 
 N_PAGES = 400
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -44,6 +51,22 @@ def pages_sdf(spark):
 def _collect_shas(df):
     return {r["url"]: (r["text_sha256"], r["error"])
             for r in df.select("url", "text_sha256", "error").collect()}
+
+
+def _marker_and_reference(spark, base, run_id, data_dir=None):
+    """The run's published lineage marker, and lineage_rows over a re-read
+    of the rows the run wrote (`data_dir`, default <base>/extracted)."""
+    import pyarrow.parquet as pq
+
+    marker = pq.read_table(
+        f"{base}/lineage/run-{quote(run_id, safe='')}.parquet")
+    # explicit schema: an empty run writes no data file to infer it from
+    staged = (spark.read.schema("partition_id int, text_sha256 string, "
+                                "error string, run_id string")
+              .parquet(data_dir or f"{base}/extracted")
+              .filter(F.col("run_id") == run_id))
+    ref = lineage_rows(staged, run_id).toArrow().sort_by("partition_id")
+    return marker, ref
 
 
 def test_spark_extract_matches_golden(spark, pages_sdf, golden):
@@ -310,23 +333,192 @@ def test_unreadable_committed_data_aborts_resume(spark, tmp_path_factory):
 
 def test_lineage_marker_is_single_atomic_file(spark, tmp_path_factory):
     """The commit marker is ONE file per run (atomic rename), so a run can
-    never be half-committed with under-reported audit counters."""
-    import os as _os
+    never be half-committed with under-reported audit counters. Its rows
+    and Arrow schema, counted by the decode tasks, equal lineage_rows over
+    a re-read of what the run wrote — also with partitions left empty, an
+    all-error input and a run with nothing left to do."""
+    import pyarrow.parquet as pq
 
     base = str(tmp_path_factory.mktemp("atomiclin"))
     df = spark.createDataFrame(pages.make_rows(90), schema=pages.PAGES_SCHEMA)
     run_extraction(spark, df, base, run_id="a b/1", num_partitions=3)
-    files = [n for n in _os.listdir(f"{base}/lineage") if n.endswith(".parquet")]
+    files = [n for n in os.listdir(f"{base}/lineage") if n.endswith(".parquet")]
     assert len(files) == 1
     # all partitions' audit rows live in that one file
-    import pyarrow.parquet as pq
     tab = pq.read_table(f"{base}/lineage/{files[0]}")
     assert tab.num_rows == 3
     assert set(tab.column("run_id").to_pylist()) == {"a b/1"}
     assert sum(tab.column("n_in").to_pylist()) == 90
     # no temp droppings left behind
-    assert not [n for n in _os.listdir(base) if n.startswith("_lineage_tmp")]
+    assert not [n for n in os.listdir(base) if n.startswith("_lineage_tmp")]
+
+    # the same input again: an empty run, whose marker has no rows
+    assert run_extraction(spark, df, base, run_id="again",
+                          num_partitions=3)["n_in"] == 0
+    # 6 rows over 16 partitions leaves most of them empty
+    few = spark.createDataFrame(pages.make_rows(6), schema=pages.PAGES_SCHEMA)
+    run_extraction(spark, few, f"{base}/wide", run_id="w", num_partitions=16)
+    # every payload empty: every row an error, no row a sha
+    bad = spark.createDataFrame(
+        [(f"https://e.example/{i}", None, b"", None, "en") for i in range(25)],
+        schema=pages.PAGES_SCHEMA)
+    stats = run_extraction(spark, bad, f"{base}/bad", run_id="b",
+                           num_partitions=4)
+    assert (stats["n_in"], stats["n_err"]) == (25, 25)
+
+    for out, run_id, n_rows in ((base, "a b/1", 3), (base, "again", 0),
+                                (f"{base}/wide", "w", None),
+                                (f"{base}/bad", "b", None)):
+        marker, ref = _marker_and_reference(spark, out, run_id)
+        assert marker.schema == ref.schema, run_id
+        assert marker.to_pylist() == ref.to_pylist(), run_id
+        if n_rows is not None:
+            assert marker.num_rows == n_rows
     shutil.rmtree(base, ignore_errors=True)
+
+
+def test_python_digest_equals_sql_sum_digest(spark):
+    """The digest a decode task keeps in Python (commit.digest_term,
+    format_digest) equals SQL sum_digest over the same rows: random shas,
+    leading-zero prefixes, nulls counted as '0', sums past 2^60."""
+    import random
+
+    from pdf_extract_spark.plans.commit import (digest_term, format_digest,
+                                                sum_digest)
+
+    rng = random.Random(12)
+    groups = {
+        "random": [rng.randbytes(32).hex() for _ in range(300)],
+        "leading_zeros": ["0" * k + rng.randbytes(32).hex()[k:]
+                          for k in range(16)],
+        "zero_prefix_only": ["0" * 15 + rng.randbytes(32).hex()[15:]],
+        "with_nulls": [None, rng.randbytes(32).hex(), None, "f" * 64],
+        "nulls_only": [None, None],
+    }
+    assert sum(map(digest_term, groups["random"])) > 1 << 60
+    rows = [(g, h) for g, hs in groups.items() for h in hs]
+    got = {r["g"]: r["d"] for r in
+           spark.createDataFrame(rows, "g string, sha string").groupBy("g")
+           .agg(sum_digest("coalesce(sha, '0')").alias("d")).collect()}
+    assert got == {g: format_digest(sum(digest_term(h or "0") for h in hs))
+                   for g, hs in groups.items()}
+    assert got["nulls_only"] == got["zero_prefix_only"] == "0" * 15
+
+
+def test_tally_merge_is_a_keyed_union(spark):
+    """A partition's tally merged twice (a resubmitted decode task) leaves
+    the accumulator unchanged: the merge is a union, not a sum."""
+    from pdf_extract_spark.operators.extract import partition_tally
+
+    acc = partition_tally(spark)
+    acc.add({0: (5, 4, 1, 1234), 2: (3, 3, 0, 99)})
+    once = dict(acc.value)
+    acc.add({0: (5, 4, 1, 1234)})
+    assert acc.value == once == {0: (5, 4, 1, 1234), 2: (3, 3, 0, 99)}
+
+
+def test_writer_elsewhere_still_gets_its_marker(spark, tmp_path_factory):
+    """A writer that puts the rows somewhere other than <out>/extracted
+    still commits a marker counting every row it was handed."""
+    from pdf_extract_spark.plans.pipeline import ParquetRunWriter
+
+    base = str(tmp_path_factory.mktemp("elsewhere"))
+    df = spark.createDataFrame(pages.make_rows(70), schema=pages.PAGES_SCHEMA)
+    stats = run_extraction(spark, df, f"{base}/out", run_id="r1",
+                           num_partitions=3,
+                           writer=ParquetRunWriter(f"{base}/rows"))
+    assert stats["n_in"] == 70
+    assert not os.path.exists(f"{base}/out/extracted")
+    marker, ref = _marker_and_reference(spark, f"{base}/out", "r1",
+                                        data_dir=f"{base}/rows")
+    assert sum(marker.column("n_in").to_pylist()) == 70
+    assert marker.to_pylist() == ref.to_pylist()
+    shutil.rmtree(base, ignore_errors=True)
+
+
+_RETRY_SCRIPT = """
+import json, os, sys
+
+import pyarrow.parquet as pq
+from pyspark import TaskContext
+from pyspark.sql import functions as F
+
+from pdf_extract_spark.fixtures import pages
+from pdf_extract_spark.plans.pipeline import (ParquetRunWriter,
+                                              lineage_rows, run_extraction)
+from pdf_extract_spark.session import get_spark
+
+out = sys.argv[1]
+spark = get_spark()
+df = spark.createDataFrame(pages.make_rows(60), pages.PAGES_SCHEMA)
+clean = run_extraction(spark, df, f"{out}/clean", "r1", num_partitions=3)
+clean_marker = pq.read_table(f"{out}/clean/lineage/run-r1.parquet")
+# fail partition 1's first attempt at its last row, after its decode saw
+# every row
+fail_pid = 1
+fail_at = dict(zip(clean_marker.column("partition_id").to_pylist(),
+                   clean_marker.column("n_in").to_pylist()))[fail_pid]
+flag = f"{out}/injected"
+
+
+class FailingWriter(ParquetRunWriter):
+    def write_run(self, ext):
+        seen = {}
+
+        @F.udf("boolean")
+        def keep(pid):
+            ctx = TaskContext.get()
+            key = (ctx.partitionId(), ctx.attemptNumber())
+            seen[key] = seen.get(key, 0) + 1
+            if key == (fail_pid, 0) and seen[key] == fail_at:
+                open(flag, "w").close()
+                raise RuntimeError("injected failure")
+            return True
+
+        super().write_run(ext.filter(keep("partition_id")))
+
+
+retried = run_extraction(spark, df, f"{out}/retried", "r1",
+                         num_partitions=3,
+                         writer=FailingWriter(f"{out}/retried/extracted"))
+marker = pq.read_table(f"{out}/retried/lineage/run-r1.parquet")
+staged = (spark.read.parquet(f"{out}/retried/extracted")
+          .filter(F.col("run_id") == "r1"))
+ref = lineage_rows(staged, "r1").toArrow().sort_by("partition_id")
+print(json.dumps({
+    "injected": os.path.exists(flag),
+    "stats": [clean, retried],
+    "markers": [clean_marker.to_pylist(), marker.to_pylist(),
+                ref.to_pylist()],
+    "schemas_equal": marker.schema == ref.schema,
+}))
+spark.stop()
+"""
+
+
+def test_tally_exact_under_task_retry(tmp_path):
+    """On a master that retries failed tasks (local[2,2]; plain local[N]
+    never retries), a decode task whose first attempt fails after decoding
+    its whole partition leaves stats and the marker equal to a failure-free
+    run and to lineage_rows over the re-read: Spark drops the failed
+    attempt's tally."""
+    script = tmp_path / "retry.py"
+    script.write_text(_RETRY_SCRIPT)
+    env = dict(os.environ, PYTHONPATH=REPO, SPARK_DRIVER_MEM="1g")
+    res = subprocess.run(
+        [os.path.join(os.environ.get("SPARK_HOME")
+                      or os.path.dirname(pyspark.__file__),
+                      "bin", "spark-submit"),
+         "--master", "local[2,2]", str(script), str(tmp_path / "out")],
+        cwd=tmp_path, capture_output=True, text=True, timeout=600, env=env)
+    assert res.returncode == 0, res.stderr[-4000:]
+    got = json.loads(res.stdout.strip().splitlines()[-1])
+    assert got["injected"]
+    clean, retried = got["stats"]
+    assert clean == retried and clean["n_in"] == 60
+    clean_marker, marker, ref = got["markers"]
+    assert marker == clean_marker == ref
+    assert got["schemas_equal"]
 
 
 def test_charset_declared_pages_flow_through_extract(spark):
@@ -431,9 +623,11 @@ def test_derived_width_floors_at_the_cores(spark, tmp_path_factory):
     shutil.rmtree(base, ignore_errors=True)
 
 
-def test_arrow_batches_are_byte_bounded(spark):
-    """mapInPandas receives Arrow batches no larger than the session's
-    byte bound, well before the row cap closes them."""
+@pytest.mark.parametrize("operator", ["mapInPandas", "mapInArrow"])
+def test_arrow_batches_are_byte_bounded(spark, operator):
+    """mapInPandas (other kernels) and mapInArrow (the decode) receive
+    Arrow batches no larger than the session's byte bound, well before
+    the row cap closes them."""
     from pdf_extract_spark.session import (ARROW_MAX_BYTES_PER_BATCH,
                                            ARROW_MAX_RECORDS_PER_BATCH)
 
@@ -442,7 +636,7 @@ def test_arrow_batches_are_byte_bounded(spark):
     df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
                                "url string, html binary")
 
-    def sizes(batches):
+    def pandas_sizes(batches):
         import pandas as pd
         for pdf in batches:
             yield pd.DataFrame({
@@ -450,7 +644,16 @@ def test_arrow_batches_are_byte_bounded(spark):
                 "bytes": [int(pdf["html"].map(len).sum()
                               + pdf["url"].str.len().sum())]})
 
-    got = df.mapInPandas(sizes, "rows long, bytes long").collect()
+    def arrow_sizes(batches):
+        import pyarrow as pa
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({
+                "rows": [b.num_rows],
+                "bytes": [sum(map(len, b.column("html").to_pylist()))
+                          + sum(map(len, b.column("url").to_pylist()))]})
+
+    sizes = pandas_sizes if operator == "mapInPandas" else arrow_sizes
+    got = getattr(df, operator)(sizes, "rows long, bytes long").collect()
     assert sum(r["rows"] for r in got) == len(rows)
     assert len(got) > 1
     assert max(r["bytes"] for r in got) <= ARROW_MAX_BYTES_PER_BATCH

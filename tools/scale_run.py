@@ -85,8 +85,8 @@ def main() -> None:
     if args.job == "corpus":
         # Fixed corpus width: per-partition volume stays the same on both
         # legs, as on a cluster where it follows the data. The extract leg
-        # needs none: its decode width is explicit, and only the lineage
-        # groupBy (a few rows per decode partition) reads this conf.
+        # needs none: its decode width is explicit, and it runs no other
+        # shuffle.
         spark.conf.set("spark.sql.shuffle.partitions", "64")
     try:
         if not args.no_warmup:
