@@ -27,8 +27,9 @@ after a kill converges to the byte-identical final corpus digest
 (test-gated in tests/test_corpus_job.py, including a kill between the
 data write and the commit marker, the worst crash point, and a torn
 marker). run_corpus_prep reads every stage marker once, then walks the
-stages in one loop: skip, or build, write once, summarise the write with
-one read, and commit.
+stages in one loop: skip, or build, write once, and commit the counts
+and digest the write itself observed (``DataFrame.observe``: no Spark
+job reads a stage back to summarise it).
 
 Production-hash discipline: the isolated registry queries pay sha256 per
 gram/paragraph so DuckDB can replay them value-exactly; this job is the
@@ -77,9 +78,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from contextlib import ExitStack
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from ..operators.extract import derived_width, extract_text
@@ -450,7 +449,12 @@ def near_dup_pairs(docs: DataFrame) -> DataFrame:
     the bytes and two orders of magnitude more rows (measured 112 s ->
     8.6 s on a 30k-doc boilerplate-heavy page set at local[8]). A hot
     doc in many pairs duplicates its array per pair — the same payload
-    the posting join duplicates as rows, minus the per-row overhead."""
+    the posting join duplicates as rows, minus the per-row overhead.
+
+    Uncached: persisting the signatures, checkpointing the pairs and
+    persisting dedup_documents' metadata frame cost dedup_doc 9 Spark
+    jobs for no measurable wall (1,000 and 96,000 docs at local[4],
+    BENCH.md)."""
     mh_terms = ", ".join(
         # permutations hash the 8-byte gram KEY, not the gram string —
         # fixed-width long input, same MinHash family quality
@@ -458,57 +462,50 @@ def near_dup_pairs(docs: DataFrame) -> DataFrame:
         for j in range(N_PERM))
     sig = (_shingle_sets(docs)
            .select("url", "doc_key", "gh",
-                   F.expr(f"array({mh_terms})").alias("mh"))
-           .persist())  # bands + verify-a + verify-b subtrees
-    try:
-        bands = sig.select(
-            "url",
-            F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("b"),
-            F.expr("concat(element_at(mh, 2 * b + 1), ':',"
-                   " element_at(mh, 2 * b + 2))").alias("band_key"))
-        buckets = (bands.groupBy("b", "band_key")
-                   .agg(F.array_sort(F.collect_list("url")).alias("ids"))
-                   .filter((F.size("ids") >= 2)
-                           & (F.size("ids") <= MAX_BUCKET)))
-        pair_expr = (
-            "flatten(transform(sequence(1, size(ids) - 1), i -> "
-            "transform(slice(ids, i + 1, size(ids) - i), "
-            "y -> struct(element_at(ids, i) AS a_url, y AS b_url))))")
-        cand = (buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
-                .select("p.a_url", "p.b_url").distinct())
-        jac = F.expr("CAST(n_common AS DOUBLE)"
-                     " / (CAST(size(a_gh) + size(b_gh) AS DOUBLE)"
-                     " - CAST(n_common AS DOUBLE))")
-        out = (cand
-               .join(sig.select(F.col("url").alias("a_url"),
-                                F.col("gh").alias("a_gh")), "a_url")
-               .join(sig.select(F.col("url").alias("b_url"),
-                                F.col("gh").alias("b_gh")), "b_url")
-               .withColumn("n_common",
-                           F.size(F.array_intersect("a_gh", "b_gh")))
-               .select("a_url", "b_url", jac.alias("jaccard"))
-               .filter(F.col("jaccard") >= JACCARD_T))
-        return out.localCheckpoint(eager=True)
-    finally:
-        sig.unpersist()
+                   F.expr(f"array({mh_terms})").alias("mh")))
+    bands = sig.select(
+        "url",
+        F.explode(F.sequence(F.lit(0), F.lit(N_BANDS - 1))).alias("b"),
+        F.expr("concat(element_at(mh, 2 * b + 1), ':',"
+               " element_at(mh, 2 * b + 2))").alias("band_key"))
+    buckets = (bands.groupBy("b", "band_key")
+               .agg(F.array_sort(F.collect_list("url")).alias("ids"))
+               .filter((F.size("ids") >= 2)
+                       & (F.size("ids") <= MAX_BUCKET)))
+    pair_expr = (
+        "flatten(transform(sequence(1, size(ids) - 1), i -> "
+        "transform(slice(ids, i + 1, size(ids) - i), "
+        "y -> struct(element_at(ids, i) AS a_url, y AS b_url))))")
+    cand = (buckets.select(F.explode(F.expr(pair_expr)).alias("p"))
+            .select("p.a_url", "p.b_url").distinct())
+    jac = F.expr("CAST(n_common AS DOUBLE)"
+                 " / (CAST(size(a_gh) + size(b_gh) AS DOUBLE)"
+                 " - CAST(n_common AS DOUBLE))")
+    return (cand
+            .join(sig.select(F.col("url").alias("a_url"),
+                             F.col("gh").alias("a_gh")), "a_url")
+            .join(sig.select(F.col("url").alias("b_url"),
+                             F.col("gh").alias("b_gh")), "b_url")
+            .withColumn("n_common",
+                        F.size(F.array_intersect("a_gh", "b_gh")))
+            .select("a_url", "b_url", jac.alias("jaccard"))
+            .filter(F.col("jaccard") >= JACCARD_T))
 
 
-def dedup_documents(
-        docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+def dedup_documents(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Document-level dedup: exact pass (128-bit text hash groupBy, one
     shuffle, winner = min doc_key) then MinHash-LSH near-dup pairs over
     the exact survivors, contracted to clusters by alternating
     large/small-star (dedup_q.connected_components_star — O(log n)
     rounds, the 10^12-node path, stopping on the first star forest;
     property-tested equal to a union-find).
-    Returns (kept_docs, dropped, cached) with dropped = (url, error)
-    naming each drop's canonical survivor — the quarantine row a user
-    audits — and cached the persisted frame the CALLER must unpersist
-    once both outputs are materialized.
+    Returns (kept_docs, dropped) with dropped = (url, error) naming each
+    drop's canonical survivor — the quarantine row a user audits. Both
+    are lazy plans; nothing here is cached, so nothing needs releasing.
 
     Document TEXT never crosses an exact-pass exchange (round-5 rewrite,
     the dedup_paragraphs discipline): the winner election runs on a
-    narrow persisted metadata frame (url, k1, k2, enc — fixed-width rows,
+    narrow metadata frame (url, k1, k2, enc — fixed-width rows,
     text hashed exactly once on the way in), losers come back as a
     url set, and survivors are the original docs ANTI-JOINED against it.
     At bench scale AQE broadcasts the loser side, so the wide frame
@@ -520,13 +517,11 @@ def dedup_documents(
     so one string MIN elects the winner AND carries its url for the
     audit row — no second survivor-url join, and min() hash-aggregates
     with map-side partials."""
-    from pyspark import StorageLevel
-    meta = (docs.select(
+    meta = docs.select(
         "url",
         F.xxhash64("text").alias("k1"),
         F.xxhash64(F.lit(1), "text").alias("k2"),
         F.concat(_doc_key(), F.col("url")).alias("enc"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
     winners = meta.groupBy("k1", "k2").agg(F.min("enc").alias("w_enc"))
     exact_dropped = (meta.join(winners, ["k1", "k2"])
                      .filter(F.col("enc") != F.col("w_enc"))
@@ -547,7 +542,7 @@ def dedup_documents(
                                      "label").alias("error")))
     kept = exact_kept.join(near_dropped.select("url"), "url", "left_anti")
     dropped = exact_dropped.unionByName(near_dropped)
-    return kept, dropped, meta
+    return kept, dropped
 
 
 CUT_N = 8  # words per excision gram. Lee et al. 2022 cut duplicated
@@ -853,13 +848,20 @@ def run_corpus_prep(
         stage plan executes exactly once per job. The task-local sort the
         dynamic writer inserts is over a 2-value column — noise next to a
         second full compute of the stage. Returns (n_out, n_quarantined,
-        digest) of the rows written, from ONE groupBy(st) summary read of
-        two thin columns (the full text is scanned exactly once, by the
-        stage that wrote it); the digest covers the survivors only, and
-        is None when there are none."""
+        digest) of the rows written, observed on the write itself (an
+        Observation: Spark keeps only the successful attempt's counts of
+        each task, so a retried task counts once); the digest covers the
+        survivors only, and is None when there are none."""
         data_dir = os.path.join(_stage_dir(out_dir, stage), "data")
-        (staged.withColumn("st", F.when(F.col("error").isNull(),
-                                        F.lit("ok")).otherwise(F.lit("err")))
+        obs = Observation()
+        ok = F.col("error").isNull()
+        (staged.observe(
+            obs,
+            F.count(F.when(ok, 1)).alias("n_ok"),
+            F.count(F.when(~ok, 1)).alias("n_err"),
+            sum_digest("CASE WHEN error IS NULL THEN sha2(concat_ws('|', "
+                       "url, coalesce(text_sha, '0')), 256) END").alias("d"))
+         .withColumn("st", F.when(ok, F.lit("ok")).otherwise(F.lit("err")))
          .write.mode("overwrite").partitionBy("st").parquet(data_dir))
         docs_dir = _stage_docs_dir(out_dir, stage)
         if not os.path.isdir(docs_dir):
@@ -870,31 +872,21 @@ def run_corpus_prep(
              .write.mode("overwrite").parquet(docs_dir))
         if fail_after == stage:
             raise CorpusJobInterrupted(stage)
-        summary = {r["st"]: (r["n"], r["d"]) for r in (
-            spark.read.schema("url string, text_sha string").parquet(data_dir)
-            .groupBy("st").agg(
-                F.count("*").alias("n"),
-                sum_digest("sha2(concat_ws('|', url, "
-                           "coalesce(text_sha, '0')), 256)").alias("d"))
-            .collect())}
-        n_out, digest = summary.get("ok", (0, None))
-        n_quar, _ = summary.get("err", (0, None))
-        return n_out, n_quar, digest
+        row = obs.get
+        return row["n_ok"], row["n_err"], row["d"]
 
     def write_sequences(stage: str, seqs: DataFrame) -> tuple[int, int, str]:
         seq_dir = os.path.join(_stage_dir(out_dir, stage), "sequences")
-        seqs.write.mode("overwrite").parquet(seq_dir)
+        obs = Observation()
+        seqs.observe(
+            obs, F.count("*").alias("n"),
+            sum_digest("sha2(concat_ws('|', seq_id, url, tok_begin,"
+                       " tok_end), 256)").alias("d")
+        ).write.mode("overwrite").parquet(seq_dir)
         if fail_after == stage:
             raise CorpusJobInterrupted(stage)
-        row = spark.read.parquet(seq_dir).agg(
-            F.count("*").alias("n"),
-            sum_digest("sha2(concat_ws('|', seq_id, url, tok_begin,"
-                       " tok_end), 256)").alias("d")).collect()[0]
+        row = obs.get
         return row["n"], 0, row["d"]
-
-    # callbacks a build registers, run once its stage's write ends (a
-    # reusable ExitStack: one `with` per stage)
-    release = ExitStack()
 
     def extract(_docs) -> DataFrame:
         if pages is None:
@@ -907,11 +899,7 @@ def run_corpus_prep(
                         F.col("text_sha256").alias("text_sha"), "error"))
 
     def dedup_doc(docs: DataFrame) -> DataFrame:
-        kept, dropped, cached = dedup_documents(docs)
-        # released on every exit path, the fail_after hook and write
-        # errors included: never leak a corpus-sized MEMORY_AND_DISK
-        # cache into a long-lived session
-        release.callback(cached.unpersist)
+        kept, dropped = dedup_documents(docs)
         return (kept.withColumn("error", F.lit(None).cast("string"))
                 .unionByName(dropped, allowMissingColumns=True))
 
@@ -961,8 +949,7 @@ def run_corpus_prep(
         if lin is None:
             status = "ran"
             write = write_sequences if stage == "pack" else write_docs
-            with release:
-                n_out, n_quar, digest = write(stage, build(docs))
+            n_out, n_quar, digest = write(stage, build(docs))
             # the extract stage's input is what it wrote: counting the
             # pages table would take a second full scan of it
             n_in = n_out + n_quar if stage == "extract" else n_docs

@@ -28,14 +28,16 @@ the rows, and run counters come from the same entries.
 Crash safety (run-level commit protocol, plans/commit.py): lineage is
 written LAST and published as ONE atomically-renamed parquet file per
 run, so its presence is the commit marker for a run and can never be
-half-visible. At resume, run_id= directories with no lineage (crashed
-mid-write — committer v2 exposes task files as tasks finish, possibly
-torn) are deleted wholesale and their input reprocessed; committed runs
-are never touched, and a lineage file that is unreadable without being
-provably torn ABORTS the resume rather than risking deletion of
-committed data. Iceberg would make data+lineage one transaction; this
-protocol is the parquet equivalent at run granularity, tested including a
-torn-parquet-file crash.
+half-visible. Before its write a run leaves an empty file under
+<out>/_started/. At resume, run_id= directories with no lineage
+(crashed mid-write — committer v2 exposes task files as tasks finish,
+possibly torn) are deleted wholesale and their input reprocessed; in a
+writer directory outside <out>, which other outputs may share, only the
+runs <out> started are. Committed runs are never touched, and a lineage
+file that is unreadable without being provably torn ABORTS the resume
+rather than risking deletion of committed data. Iceberg would make
+data+lineage one transaction; this protocol is the parquet equivalent at
+run granularity, tested including a torn-parquet-file crash.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ import shutil
 from urllib.parse import quote, unquote
 
 import pyarrow as pa
+from pyspark.accumulators import _accumulatorRegistry
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.extract import derived_width, extract_text, partition_tally
@@ -72,7 +75,7 @@ def _committed_run_ids(lineage_dir: str) -> set[str]:
     whole-directory read, or every committed run would look uncommitted
     and be wrongly deleted. Any other unreadable file aborts the resume
     (commit.read_marker): wrongly dropping a committed run's lineage would
-    cascade into _cleanup_uncommitted rmtree-ing its DATA."""
+    cascade into the writer's cleanup rmtree-ing its DATA."""
     if not os.path.isdir(lineage_dir):
         return set()
     committed: set[str] = set()
@@ -82,31 +85,6 @@ def _committed_run_ids(lineage_dir: str) -> set[str]:
             if tab is not None:
                 committed.update(tab.column("run_id").to_pylist())
     return committed
-
-
-def _cleanup_uncommitted(extracted_dir: str, committed: set[str]) -> list[str]:
-    """Delete run_id= directories with no lineage (crashed mid-write).
-
-    Committer v2 makes task files visible as tasks finish, so a crashed run
-    leaves partial — possibly torn — files behind; because the output is
-    directory-partitioned by run_id, the whole crashed run is removable
-    without touching committed data. (Local-FS listing here; on a real
-    cluster this is the same operation through the Hadoop FS API, and an
-    Iceberg writer would make the whole run one transaction instead.)"""
-    removed = []
-    if not os.path.isdir(extracted_dir):
-        return removed
-    for name in os.listdir(extracted_dir):
-        if not name.startswith("run_id="):
-            continue
-        # Spark percent-escapes partition values in directory names
-        # (run_id='run 1' → 'run_id=run%201') — unescape before comparing,
-        # or committed runs would be wrongly treated as crashed
-        run_id = unquote(name.split("=", 1)[1])
-        if run_id not in committed:
-            shutil.rmtree(os.path.join(extracted_dir, name), ignore_errors=True)
-            removed.append(name)
-    return removed
 
 
 def lineage_rows(extracted: DataFrame, run_id: str) -> DataFrame:
@@ -144,6 +122,48 @@ class ParquetRunWriter:
         (ext.write.partitionBy("run_id", "status")
          .mode("append").parquet(self.extracted_dir))
 
+    def discard_crashed(self, out_dir: str, committed: set[str],
+                        started: set[str]) -> None:
+        """Delete the run_id= directories of crashed runs: runs with no
+        commit marker in ``out_dir``. Committer v2 makes task files
+        visible as tasks finish, so a crashed run leaves partial —
+        possibly torn — files behind; the run_id partition makes the
+        whole crashed run removable without touching committed data (on a
+        cluster: the same through the Hadoop FS API). A directory inside
+        ``out_dir`` belongs to that output alone, so every uncommitted run
+        in it crashed; a directory elsewhere may hold other outputs' runs,
+        so only the runs ``out_dir`` started are removed."""
+        if not os.path.isdir(self.extracted_dir):
+            return
+        out = os.path.abspath(out_dir)
+        owned = os.path.commonpath(
+            [out, os.path.abspath(self.extracted_dir)]) == out
+        for name in os.listdir(self.extracted_dir):
+            if not name.startswith("run_id="):
+                continue
+            # Spark percent-escapes partition values in directory names
+            # (run_id='run 1' → 'run_id=run%201') — unescape before
+            # comparing, or committed runs would be taken for crashed
+            run_id = unquote(name.split("=", 1)[1])
+            if run_id not in committed and (owned or run_id in started):
+                shutil.rmtree(os.path.join(self.extracted_dir, name),
+                              ignore_errors=True)
+
+    def committed_urls(self, spark: SparkSession,
+                       committed: set[str]) -> DataFrame | None:
+        """The urls the ``committed`` runs wrote (None when there are
+        none); the scan prunes to those runs' directories, so other
+        outputs' runs in a shared directory are not read."""
+        if not committed:
+            return None
+        # Explicit schema: a committed empty run leaves no data file to
+        # infer it from. A read error raises — taking it for "nothing
+        # committed" would decode and append every committed url twice.
+        return (spark.read.schema("url string, run_id string")
+                .parquet(self.extracted_dir)
+                .filter(F.col("run_id").isin(sorted(committed)))
+                .select("url"))
+
 
 class IcebergRunWriter:
     """DataFrameWriterV2 seam for an Iceberg output table: one
@@ -157,8 +177,8 @@ class IcebergRunWriter:
     spark-submit flags a real cluster needs. Swapping this writer into
     run_extraction is the ONLY change required — the seam is the point.
     The lineage marker counts what the writer is handed, wherever the rows
-    land; resume, however, still anti-joins the input against the parquet
-    layout under ``<out>/extracted``.
+    land. Resume is not supported: a run whose table commit succeeded but
+    whose marker did not would need its rows deleted from the table.
     """
 
     def __init__(self, spark: SparkSession, table: str):
@@ -179,6 +199,18 @@ class IcebergRunWriter:
         # of the table DDL, not the write.
         ext.writeTo(self.table).append()
 
+    def discard_crashed(self, out_dir: str, committed: set[str],
+                        started: set[str]) -> None:
+        if started | committed:
+            raise RuntimeError(
+                f"IcebergRunWriter cannot resume: {out_dir} already has "
+                f"runs {sorted(started | committed)}; start from a fresh "
+                f"output directory")
+
+    def committed_urls(self, spark: SparkSession,
+                       committed: set[str]) -> None:
+        return None  # discard_crashed refused any output with runs
+
 
 def run_extraction(
     spark: SparkSession,
@@ -196,18 +228,23 @@ def run_extraction(
     derived_width).
 
     `writer` is the output-format seam (default ParquetRunWriter; pass an
-    IcebergRunWriter on a cluster with the runtime jar)."""
-    extracted_dir = os.path.join(out_dir, "extracted")
+    IcebergRunWriter on a cluster with the runtime jar). Resume reads the
+    committed rows from wherever the writer put them."""
     lineage_dir = os.path.join(out_dir, "lineage")
+    started_dir = os.path.join(out_dir, "_started")
     if writer is None:
-        writer = ParquetRunWriter(extracted_dir)
+        writer = ParquetRunWriter(os.path.join(out_dir, "extracted"))
 
     # run-level commit protocol: sweep marker temp files orphaned by a
     # crash inside the publish, and drop data from runs that crashed
     # before their lineage (= commit marker) was written
     sweep_tmp(out_dir)
     committed = _committed_run_ids(lineage_dir)
-    _cleanup_uncommitted(extracted_dir, committed)
+    # runs this output began: each leaves <out>/_started/<run_id> first
+    started = (set(map(unquote, os.listdir(started_dir)))
+               if os.path.isdir(started_dir) else set())
+    writer.discard_crashed(out_dir, committed, started)
+    done = writer.committed_urls(spark, committed)
     if run_id in committed:
         # re-using a committed run_id would re-append its lineage rows and
         # double the audit counters — require a fresh id per invocation
@@ -221,18 +258,13 @@ def run_extraction(
         # always resolved: extract_text reads None as "no shuffle"
         num_partitions = derived_width(pages)
     todo = pages
-    if committed:
-        # Anti-join against the committed urls in place. _cleanup_uncommitted
-        # has removed every crashed run, so only committed rows are listed;
+    if done is not None:
+        # Anti-join against the committed urls in place. The scan lists
+        # only the committed runs' directories, so no crashed row is read;
         # the scan's file listing is fixed when this DataFrame is built, the
         # decode plan runs once (in write_run), and the run appends under a
         # new run_id= directory — it never overwrites a file it reads.
-        # Explicit schema: a committed empty run leaves no data file to
-        # infer it from. A read error raises — taking it for "nothing
-        # committed" would decode and append every committed url twice.
-        todo = pages.join(
-            spark.read.schema("url string").parquet(extracted_dir)
-            .select("url"), "url", "left_anti")
+        todo = pages.join(done, "url", "left_anti")
 
     tally = partition_tally(spark)
     ext = (
@@ -242,14 +274,23 @@ def run_extraction(
         .withColumn("status",
                     F.when(F.col("error").isNull(), "ok").otherwise("err"))
     )
-    writer.write_run(ext)
+    # recorded before any row lands, so a resume can tell this output's
+    # crashed runs from another output's runs in a shared writer directory
+    os.makedirs(started_dir, exist_ok=True)
+    open(os.path.join(started_dir, quote(run_id, safe="")), "w").close()
+    try:
+        writer.write_run(ext)
+        parts = sorted(tally.value.items())
+    finally:
+        # pyspark has no unregister: without this every run leaves its
+        # tally in the driver's registry for the session's lifetime
+        _accumulatorRegistry.pop(tally.aid, None)
 
     # The lineage marker from the decode's own tallies, one row per task
     # that decoded rows. ONE marker file, not a Spark append: a multi-file
     # append under committer v2 can crash having committed a subset of its
     # part files, leaving a run that looks committed with under-reported
     # counters.
-    parts = sorted(tally.value.items())
     tab = pa.Table.from_pydict({
         "run_id": [run_id] * len(parts),
         "partition_id": [p for p, _ in parts],

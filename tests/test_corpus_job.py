@@ -161,10 +161,9 @@ def test_exact_dup_pass_unit(spark):
          ("u3", TS, "en", "completely different words", "d")],
         "url string, warc_ts timestamp, lang string, text string, "
         "text_sha string")
-    kept, dropped, cached = dedup_documents(docs)
+    kept, dropped = dedup_documents(docs)
     kept_urls = {r["url"] for r in kept.collect()}
     drops = {r["url"]: r["error"] for r in dropped.collect()}
-    cached.unpersist()
     assert "u3" in kept_urls
     assert len({"u1", "u2"} & kept_urls) == 1
     (lost,) = {"u1", "u2"} - kept_urls

@@ -433,6 +433,96 @@ def test_writer_elsewhere_still_gets_its_marker(spark, tmp_path_factory):
                                         data_dir=f"{base}/rows")
     assert sum(marker.column("n_in").to_pylist()) == 70
     assert marker.to_pylist() == ref.to_pylist()
+    # resume reads the committed rows where the writer put them
+    again = run_extraction(spark, df, f"{base}/out", run_id="r2",
+                           num_partitions=3,
+                           writer=ParquetRunWriter(f"{base}/rows"))
+    assert again["n_in"] == 0
+    assert not os.path.exists(f"{base}/out/extracted")
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_iceberg_writer_refuses_to_resume(spark, tmp_path_factory):
+    """An output directory with committed runs cannot be resumed through
+    IcebergRunWriter: run_extraction raises a clear error before any
+    decode, not a missing-path error from a parquet read."""
+    from pdf_extract_spark.plans.pipeline import IcebergRunWriter
+
+    base = str(tmp_path_factory.mktemp("iceresume"))
+    df = spark.createDataFrame(pages.make_rows(20), schema=pages.PAGES_SCHEMA)
+    run_extraction(spark, df, base, run_id="r1", num_partitions=2)
+    # the catalog is named only so the writer can be built; the refusal
+    # comes before anything would load it
+    key = "spark.sql.catalog.icetest"
+    spark.conf.set(key, "org.apache.iceberg.spark.SparkCatalog")
+    try:
+        writer = IcebergRunWriter(spark, "icetest.db.extracted")
+    finally:
+        spark.conf.unset(key)
+    with pytest.raises(RuntimeError, match="IcebergRunWriter cannot resume"):
+        run_extraction(spark, df, base, run_id="r2", num_partitions=2,
+                       writer=writer)
+    # a run that started and never committed may have rows in the table
+    crashed = f"{base}/crashed"
+    os.makedirs(f"{crashed}/_started")
+    open(f"{crashed}/_started/r9", "w").close()
+    with pytest.raises(RuntimeError, match=r"runs \['r9'\]"):
+        run_extraction(spark, df, crashed, run_id="r10", num_partitions=2,
+                       writer=writer)
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_outputs_sharing_a_writer_directory(spark, tmp_path_factory):
+    """Two output directories write through one ParquetRunWriter
+    directory. A fresh output neither deletes nor reads the other's
+    committed runs, and its resume removes only its own crashed run."""
+    from pdf_extract_spark.plans.pipeline import ParquetRunWriter
+
+    class CrashBeforeMarker(ParquetRunWriter):
+        def write_run(self, ext):
+            super().write_run(ext)
+            raise RuntimeError("crash before the marker")
+
+    base = str(tmp_path_factory.mktemp("shared"))
+    rows = f"{base}/rows"
+    df = spark.createDataFrame(pages.make_rows(60), schema=pages.PAGES_SCHEMA)
+    assert run_extraction(spark, df, f"{base}/a", run_id="a1",
+                          num_partitions=3,
+                          writer=ParquetRunWriter(rows))["n_in"] == 60
+    with pytest.raises(RuntimeError, match="crash before the marker"):
+        run_extraction(spark, df, f"{base}/b", run_id="b1", num_partitions=3,
+                       writer=CrashBeforeMarker(rows))
+    assert os.path.isdir(f"{rows}/run_id=b1")
+
+    # b has committed nothing: it decodes every row, keeps a's run and
+    # drops its own crashed one
+    assert run_extraction(spark, df, f"{base}/b", run_id="b2",
+                          num_partitions=3,
+                          writer=ParquetRunWriter(rows))["n_in"] == 60
+    assert not os.path.exists(f"{rows}/run_id=b1")
+    # each output resumes from its own runs only
+    for out, run_id in ((f"{base}/a", "a2"), (f"{base}/b", "b3")):
+        assert run_extraction(spark, df, out, run_id=run_id,
+                              num_partitions=3,
+                              writer=ParquetRunWriter(rows))["n_in"] == 0
+    per_run = {r["run_id"]: r["count"] for r in
+               spark.read.parquet(rows).groupBy("run_id").count().collect()}
+    assert per_run == {"a1": 60, "b2": 60}
+    shutil.rmtree(base, ignore_errors=True)
+
+
+def test_runs_leave_no_accumulator_behind(spark, tmp_path_factory):
+    """Each run's tally accumulator leaves the driver's registry once its
+    marker is built: three runs do not grow it."""
+    from pyspark.accumulators import _accumulatorRegistry
+
+    base = str(tmp_path_factory.mktemp("accreg"))
+    before = len(_accumulatorRegistry)
+    for n, run_id in ((20, "r1"), (30, "r2"), (40, "r3")):
+        df = spark.createDataFrame(pages.make_rows(n),
+                                   schema=pages.PAGES_SCHEMA)
+        run_extraction(spark, df, base, run_id=run_id, num_partitions=2)
+    assert len(_accumulatorRegistry) == before
     shutil.rmtree(base, ignore_errors=True)
 
 
