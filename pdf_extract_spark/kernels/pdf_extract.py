@@ -53,6 +53,12 @@ import math
 import re
 import zlib
 
+# imported with the kernel, not on first use: a worker without the
+# `cryptography` wheel must fail its task, not turn every encrypted PDF
+# into a content_stream_parse_error through extract_pdf_text's catch-all
+from .pdfcrypt import (PasswordRequired, StandardDecryptor,
+                       UnsupportedEncryption)
+
 _STREAM_HDR_RE = re.compile(rb"<<(.*?)>>\s*stream\r?\n", re.DOTALL)
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)")
 # one inflated Flate stream's byte cap: past it the document quarantines
@@ -492,8 +498,6 @@ class _Doc:
         handlers and unknown V/R/CFM are `unsupported_encrypted_pdf`.
         Runs after the xref chain (xref streams are never encrypted,
         §7.5.8.2) and before any content/ObjStm stream is touched."""
-        from .pdfcrypt import (PasswordRequired, StandardDecryptor,
-                               UnsupportedEncryption)
         enc = self.resolve(self.trailer.get("Encrypt"))
         if not isinstance(enc, dict):
             raise _Unsupported("unsupported_encrypted_pdf")

@@ -1,5 +1,5 @@
 """Standard security handler for encrypted PDFs (ISO 32000-1 §7.6.3,
-ISO 32000-2 §7.6.4) — pure stdlib + numpy, decode AND encode sides.
+ISO 32000-2 §7.6.4) — decode AND encode sides.
 
 Real crawls carry a steady fraction of "encrypted" PDFs that are
 readable by everyone: an owner password sets print/copy restrictions
@@ -19,14 +19,14 @@ kernel maps to its quarantine taxonomy, distinct from structurally
 unsupported handlers (`UnsupportedEncryption`: non-/Standard filters,
 unknown V/R, crypt filters other than /Identity and /StdCF).
 
-Primitives are from public specs only: RC4 (as described in ISO
-32000-1 §7.6.2 note / Schneier), AES from FIPS-197 (test-vectored
-against appendix C in tests/test_kernels.py). AES-CBC *decryption* is
-chaining-free per block, so it is vectorized across all blocks with
-numpy T-tables (one `np.take` pass per round over the whole stream);
-encryption (fixture writer + the R6 KDF) chains, so it runs per block
-in Python ints — it only ever touches fixture-sized buffers and the
-KDF's ≤64 bounded rounds.
+AES-CBC is OpenSSL's, through the `cryptography` wheel (tested
+against FIPS-197 appendix C in tests/test_kernels.py); every worker
+needs that wheel, and the kernel imports this module at load time so a
+worker without it fails its first task instead of quarantining every
+encrypted PDF. RC4 stays in Python (ISO 32000-1 §7.6.2): `cryptography`'s
+ARC4 takes only 40/56/64/80/128/160/192/256-bit keys, while a /V 2 file
+key may be any multiple of 8 bits from 40 to 128 and each object key is
+5 bytes longer, up to 16 (a /Length 48 document derives 88-bit ones).
 
 The encode side exists for `fixtures/pdf_writer.py` only: goldens need
 real encrypted fixtures (O/U/OE/UE/Perms computed, streams actually
@@ -39,7 +39,7 @@ import hashlib
 import struct
 from functools import lru_cache as _lru_cache
 
-import numpy as np
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # --------------------------------------------------------------------
 # RC4 (§7.6.2). Sequential by construction; used for short fixture
@@ -64,205 +64,23 @@ def rc4(key: bytes, data: bytes) -> bytes:
 
 
 # --------------------------------------------------------------------
-# AES (FIPS-197). S-box generated from the spec's GF(2^8) inverse +
-# affine map (not typed in), then T-tables for both directions.
-
-def _gf_mul(a: int, b: int) -> int:
-    r = 0
-    for _ in range(8):
-        if b & 1:
-            r ^= a
-        hi = a & 0x80
-        a = (a << 1) & 0xFF
-        if hi:
-            a ^= 0x1B
-        b >>= 1
-    return r
-
-
-def _build_sbox() -> tuple[bytes, bytes]:
-    inv = [0] * 256
-    for x in range(1, 256):
-        for y in range(1, 256):
-            if _gf_mul(x, y) == 1:
-                inv[x] = y
-                break
-    sbox = bytearray(256)
-    for x in range(256):
-        b = inv[x]
-        s = b
-        for _ in range(4):
-            b = ((b << 1) | (b >> 7)) & 0xFF
-            s ^= b
-        sbox[x] = s ^ 0x63
-    invs = bytearray(256)
-    for x in range(256):
-        invs[sbox[x]] = x
-    return bytes(sbox), bytes(invs)
-
-
-_SBOX, _INV_SBOX = _build_sbox()
-_RCON = [0x01, 0x02, 0x04, 0x08, 0x10, 0x20, 0x40, 0x80, 0x1B, 0x36,
-         0x6C, 0xD8, 0xAB, 0x4D]
-
-
-def _ror(w: int, n: int) -> int:
-    return ((w >> n) | (w << (32 - n))) & 0xFFFFFFFF
-
-
-def _mk_tables() -> tuple[list[list[int]], np.ndarray, np.ndarray]:
-    te0 = []
-    td0 = []
-    for x in range(256):
-        s = _SBOX[x]
-        te0.append(((_gf_mul(s, 2) << 24) | (s << 16) | (s << 8)
-                    | _gf_mul(s, 3)) & 0xFFFFFFFF)
-        t = _INV_SBOX[x]
-        td0.append(((_gf_mul(t, 14) << 24) | (_gf_mul(t, 9) << 16)
-                    | (_gf_mul(t, 13) << 8) | _gf_mul(t, 11)) & 0xFFFFFFFF)
-    te = [te0] + [[_ror(w, 8 * i) for w in te0] for i in range(1, 4)]
-    td = np.array([td0] + [[_ror(w, 8 * i) for w in td0]
-                           for i in range(1, 4)], dtype=np.uint32)
-    return te, td, np.frombuffer(_INV_SBOX, dtype=np.uint8).copy()
-
-
-_TE, _TD, _INVS_NP = _mk_tables()
-
-
-def _expand_key(key: bytes) -> list[int]:
-    """Encryption round keys as big-endian uint32 words (4·(Nr+1))."""
-    nk = len(key) // 4
-    if nk not in (4, 6, 8):
-        raise ValueError("aes key size")
-    nr = nk + 6
-    w = list(struct.unpack(">%dI" % nk, key))
-    for i in range(nk, 4 * (nr + 1)):
-        t = w[i - 1]
-        if i % nk == 0:
-            t = _ror(t, 24)
-            t = ((_SBOX[t >> 24] << 24) | (_SBOX[(t >> 16) & 255] << 16)
-                 | (_SBOX[(t >> 8) & 255] << 8) | _SBOX[t & 255])
-            t ^= _RCON[i // nk - 1] << 24
-        elif nk > 6 and i % nk == 4:
-            t = ((_SBOX[t >> 24] << 24) | (_SBOX[(t >> 16) & 255] << 16)
-                 | (_SBOX[(t >> 8) & 255] << 8) | _SBOX[t & 255])
-        w.append(w[i - nk] ^ t)
-    return w
-
-
-def _inv_mix_word(w: int) -> int:
-    b = [(w >> 24) & 255, (w >> 16) & 255, (w >> 8) & 255, w & 255]
-    return ((_gf_mul(b[0], 14) ^ _gf_mul(b[1], 11) ^ _gf_mul(b[2], 13)
-             ^ _gf_mul(b[3], 9)) << 24 |
-            (_gf_mul(b[0], 9) ^ _gf_mul(b[1], 14) ^ _gf_mul(b[2], 11)
-             ^ _gf_mul(b[3], 13)) << 16 |
-            (_gf_mul(b[0], 13) ^ _gf_mul(b[1], 9) ^ _gf_mul(b[2], 14)
-             ^ _gf_mul(b[3], 11)) << 8 |
-            (_gf_mul(b[0], 11) ^ _gf_mul(b[1], 13) ^ _gf_mul(b[2], 9)
-             ^ _gf_mul(b[3], 14))) & 0xFFFFFFFF
-
-
-def _decrypt_key_schedule(key: bytes) -> np.ndarray:
-    """Equivalent-inverse-cipher round keys: encryption schedule
-    reversed per round, InvMixColumns on all but the outermost two."""
-    w = _expand_key(key)
-    nr = len(w) // 4 - 1
-    rounds = [w[4 * r:4 * r + 4] for r in range(nr + 1)][::-1]
-    for r in range(1, nr):
-        rounds[r] = [_inv_mix_word(x) for x in rounds[r]]
-    return np.array(rounds, dtype=np.uint32)
-
-
-def _encrypt_words(w: list[int], s0: int, s1: int, s2: int,
-                   s3: int) -> tuple[int, int, int, int]:
-    """One block through the forward cipher, state as 4 uint32 words
-    already AddRoundKey'd with w[0:4]. Unrolled locals — this is the
-    hot loop of the R6 KDF, which chains and cannot be vectorized."""
-    te0, te1, te2, te3, sb = _TE[0], _TE[1], _TE[2], _TE[3], _SBOX
-    nr = len(w) // 4 - 1
-    for r in range(1, nr):
-        k = 4 * r
-        t0 = (te0[s0 >> 24] ^ te1[(s1 >> 16) & 255]
-              ^ te2[(s2 >> 8) & 255] ^ te3[s3 & 255] ^ w[k])
-        t1 = (te0[s1 >> 24] ^ te1[(s2 >> 16) & 255]
-              ^ te2[(s3 >> 8) & 255] ^ te3[s0 & 255] ^ w[k + 1])
-        t2 = (te0[s2 >> 24] ^ te1[(s3 >> 16) & 255]
-              ^ te2[(s0 >> 8) & 255] ^ te3[s1 & 255] ^ w[k + 2])
-        t3 = (te0[s3 >> 24] ^ te1[(s0 >> 16) & 255]
-              ^ te2[(s1 >> 8) & 255] ^ te3[s2 & 255] ^ w[k + 3])
-        s0, s1, s2, s3 = t0, t1, t2, t3
-    k = 4 * nr
-    return (((sb[s0 >> 24] << 24) | (sb[(s1 >> 16) & 255] << 16)
-             | (sb[(s2 >> 8) & 255] << 8) | sb[s3 & 255]) ^ w[k],
-            ((sb[s1 >> 24] << 24) | (sb[(s2 >> 16) & 255] << 16)
-             | (sb[(s3 >> 8) & 255] << 8) | sb[s0 & 255]) ^ w[k + 1],
-            ((sb[s2 >> 24] << 24) | (sb[(s3 >> 16) & 255] << 16)
-             | (sb[(s0 >> 8) & 255] << 8) | sb[s1 & 255]) ^ w[k + 2],
-            ((sb[s3 >> 24] << 24) | (sb[(s0 >> 16) & 255] << 16)
-             | (sb[(s1 >> 8) & 255] << 8) | sb[s2 & 255]) ^ w[k + 3])
-
-
-def aes_encrypt_block(w: list[int], block: bytes) -> bytes:
-    b = struct.unpack(">4I", block)
-    return struct.pack(">4I", *_encrypt_words(
-        w, b[0] ^ w[0], b[1] ^ w[1], b[2] ^ w[2], b[3] ^ w[3]))
+# AES-CBC through OpenSSL (`cryptography`). No padding either way:
+# stream callers add/strip PKCS#7 themselves, and the R6 KDF and the
+# UE/OE/Perms wrapping are exact multiples of the block by construction.
 
 
 def aes_cbc_encrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """No padding — callers pad (PKCS#7 for streams; the R6 KDF and
-    UE/OE wrapping are exact multiples by construction)."""
     if len(data) % 16:
         raise ValueError("cbc encrypt: unpadded length")
-    w = _expand_key(key)
-    n = len(data) // 4
-    words = struct.unpack(">%dI" % n, data)
-    out = [0] * n
-    c0, c1, c2, c3 = struct.unpack(">4I", iv)
-    w0, w1, w2, w3 = w[0], w[1], w[2], w[3]
-    for i in range(0, n, 4):
-        c0, c1, c2, c3 = _encrypt_words(
-            w, words[i] ^ c0 ^ w0, words[i + 1] ^ c1 ^ w1,
-            words[i + 2] ^ c2 ^ w2, words[i + 3] ^ c3 ^ w3)
-        out[i:i + 4] = (c0, c1, c2, c3)
-    return struct.pack(">%dI" % n, *out)
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
 
 
 def aes_cbc_decrypt(key: bytes, iv: bytes, data: bytes) -> bytes:
-    """Vectorized across blocks: CBC decryption has no chain (every
-    plaintext block is D(c_i) ^ c_{i-1}), so the whole stream runs
-    through the inverse cipher as one (n_blocks, 4) uint32 array —
-    np.take per T-table per round, then one shifted-ciphertext XOR."""
     if len(data) % 16 or not data:
         raise ValueError("cbc decrypt: length")
-    n = len(data) // 16
-    s = np.frombuffer(data, dtype=">u4").reshape(n, 4).astype(np.uint32)
-    dk = _decrypt_key_schedule(key)
-    nr = dk.shape[0] - 1
-    s = s ^ dk[0]
-    idx = [0, 3, 2, 1]  # InvShiftRows source column per byte position
-    for r in range(1, nr):
-        cols = [s[:, [(i + idx[k]) % 4 for i in range(4)]]
-                for k in range(4)]
-        s = (_TD[0][(cols[0] >> np.uint32(24)).astype(np.int64)]
-             ^ _TD[1][((cols[1] >> np.uint32(16)) & np.uint32(255))
-                      .astype(np.int64)]
-             ^ _TD[2][((cols[2] >> np.uint32(8)) & np.uint32(255))
-                      .astype(np.int64)]
-             ^ _TD[3][(cols[3] & np.uint32(255)).astype(np.int64)]
-             ^ dk[r])
-    b0 = _INVS_NP[(s >> np.uint32(24)).astype(np.int64)].astype(np.uint32)
-    b1 = _INVS_NP[((s[:, [(i + 3) % 4 for i in range(4)]] >> np.uint32(16))
-                   & np.uint32(255)).astype(np.int64)].astype(np.uint32)
-    b2 = _INVS_NP[((s[:, [(i + 2) % 4 for i in range(4)]] >> np.uint32(8))
-                   & np.uint32(255)).astype(np.int64)].astype(np.uint32)
-    b3 = _INVS_NP[(s[:, [(i + 1) % 4 for i in range(4)]]
-                   & np.uint32(255)).astype(np.int64)].astype(np.uint32)
-    s = ((b0 << np.uint32(24)) | (b1 << np.uint32(16))
-         | (b2 << np.uint32(8)) | b3) ^ dk[nr]
-    plain = s.astype(">u4").tobytes()
-    prev = iv + data[:-16]
-    return (np.frombuffer(plain, dtype=np.uint8)
-            ^ np.frombuffer(prev, dtype=np.uint8)).tobytes()
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
+    return dec.update(data) + dec.finalize()
 
 
 # --------------------------------------------------------------------
@@ -318,9 +136,13 @@ def _alg4_5_u(key: bytes, r: int, id0: bytes) -> bytes:
 def _hash_2b(pw: bytes, salt: bytes, udata: bytes) -> bytes:
     """ISO 32000-2 Algorithm 2.B (R6 only): SHA-2 family iterated hash
     keyed through AES-128-CBC. Bounded: ≥64 rounds, data-dependent stop
-    within a further ≤192 (last byte of E is ≤255, count-32 reaches it).
-    Memoized: a batch re-opens the same document's U/O salts repeatedly
-    in tests; wild salts are per-document so the cache stays tiny."""
+    within a further ≤192 (last byte of E is ≤255, count-32 reaches it);
+    each round encrypts 64 copies of pw‖K‖udata, so a cold call costs a
+    few ms with OpenSSL AES. Memoized, which pays only when salts
+    repeat: every R6 fixture reuses one of two fixed salt pairs (a 100%
+    hit share), while real documents each draw their own salts, so how
+    often a crawl hits is unknown. Once the fixtures draw per-document
+    salts, the cache has nothing left to save and goes."""
     k = hashlib.sha256(pw + salt + udata).digest()
     count = 0
     while True:
@@ -510,8 +332,9 @@ class FixtureEncryptor:
                 oe = aes_cbc_encrypt(
                     hashlib.sha256(self._OWNER + oks).digest(),
                     b"\x00" * 16, self.key)
-            perms = aes_encrypt_block(
-                _expand_key(self.key),
+            # one CBC block under a zero IV is the ECB block /Perms wants
+            perms = aes_cbc_encrypt(
+                self.key, bytes(16),
                 struct.pack("<i", p) + b"\xff\xff\xff\xffTadbfixt")
             self.o, self.u = o48, u48
             self.enc = (b"<< /Filter /Standard /V 5 /R " + str(r).encode()

@@ -46,6 +46,9 @@ def _local_slots(master: str) -> int | None:
 
 def get_spark(master: str | None = None,
               app_name: str = "pdf-extract-spark") -> SparkSession:
+    # 16g stays until bench.py's 300k-doc legs at local[32] are measured
+    # lower; 4g against 16g on a 96k-page corpus run at local[4] is
+    # unresolved at three pairs (BENCH.md "Driver heap")
     driver_memory = os.environ.get("SPARK_DRIVER_MEM", "16g")
     if master is None:
         # The launcher's master: spark-submit's, or local[*] in plain

@@ -319,9 +319,9 @@ def test_pdf_filter_malformed_and_unsupported():
 
 
 def test_aes_rc4_published_vectors():
-    """FIPS-197 Appendix C block vectors (128/192/256), CBC encrypt/
-    decrypt round-trips (the decrypt side is the numpy-vectorized
-    path), and the classic RC4 test strings."""
+    """FIPS-197 Appendix C block vectors (128/192/256; one CBC block
+    under a zero IV is the ECB block), CBC encrypt/decrypt round-trips,
+    and the classic RC4 test strings."""
     import random
 
     from pdf_extract_spark.kernels import pdfcrypt as pc
@@ -331,7 +331,7 @@ def test_aes_rc4_published_vectors():
                        (24, "dda97ca4864cdfe06eaf70a0ec0d7191"),
                        (32, "8ea2b7ca516745bfeafc49904b496089")):
         key = bytes(range(klen))
-        assert pc.aes_encrypt_block(pc._expand_key(key), pt).hex() == want
+        assert pc.aes_cbc_encrypt(key, bytes(16), pt).hex() == want
     rnd = random.Random(20260819)
     for klen in (16, 32):
         key = bytes(rnd.randrange(256) for _ in range(klen))
@@ -342,6 +342,82 @@ def test_aes_rc4_published_vectors():
             assert ct != data and pc.aes_cbc_decrypt(key, iv, ct) == data
     assert pc.rc4(b"Key", b"Plaintext").hex() == "bbf316e8d940af0ad3"
     assert pc.rc4(b"Wiki", b"pedia").hex() == "1021bf0420"
+
+
+# ISO 32000-2 Algorithm 2.B keys computed with a pure-Python FIPS-197
+# AES, an implementation independent of OpenSSL's: (salt index,
+# password, with 48 bytes of user data) -> key
+_HASH_2B_PINS = {
+    (0, b"", False): "0bfa6c6fd9bf2c809902dbf6f7614664"
+                     "ab71aff0e22cbf66c5ea3dbf0b264115",
+    (0, b"", True): "ce5e8a38c381eabc08194d582ffaf1b0"
+                    "4275546b3eaefc3772e1a690d7e7accb",
+    (0, b"owner-pw", True): "b20ccd721e46a2db7fd39b2f3aab1b76"
+                            "033e1ac23ab23d0495f727515fd36fc0",
+    (1, b"", False): "4a6822c25f8ff9cdec56cb7c1a900473"
+                     "f0cd5aa6a9f716f11a75a78d46f560f9",
+    (1, b"", True): "15ab60dcb3259b976f27e24b0411c0e8"
+                    "739d69bf28512c28c172aed502918a94",
+    (2, b"", False): "68965e5f856661742b30b017551ea581"
+                     "8f761a1746183aed4d74f18e66d3f2ed",
+    (2, b"", True): "8068708a5512f6c01e924ca8e5258e2b"
+                    "3f1dd769e1814b2f1f4265a779045269",
+    (3, b"", False): "e2f981859041aa5b19716ae2b3696a4e"
+                     "72eebd2a14d0573b837d103522c187eb",
+    (3, b"", True): "d5e9b07db65f2a3cc122dd8347e9e3d5"
+                    "7abe04604391a8c68f2dfe54c873281b",
+    (4, b"", False): "f779568aa426e52808a12e7a635f2c8f"
+                     "c73292a4c69d4ebc3ba50b14c3d8a8f5",
+    (4, b"", True): "e6b240b7fa548b1aea17995bb7824616"
+                    "94b43017fefef002b838efc219d769ca",
+}
+
+
+def test_r6_kdf_known_answers():
+    """Cold Algorithm 2.B (the R6 KDF, whose every round is an
+    AES-128-CBC encryption) against pinned keys for salts the fixtures
+    never use; the cache is cleared first, so each call computes."""
+    import random
+
+    from pdf_extract_spark.kernels import pdfcrypt as pc
+
+    rnd = random.Random(15)
+    salts, udatas = [], []
+    for _ in range(5):
+        salts.append(bytes(rnd.randrange(256) for _ in range(8)))
+        udatas.append(bytes(rnd.randrange(256) for _ in range(48)))
+    for (i, pw, with_udata), want in _HASH_2B_PINS.items():
+        pc._hash_2b.cache_clear()
+        key = pc._hash_2b(pw, salts[i], udatas[i] if with_udata else b"")
+        assert key.hex() == want, (i, pw, with_udata)
+
+
+def test_missing_crypto_wheel_fails_the_import():
+    """Without `cryptography` the decode kernel must not import, so a
+    worker missing the wheel fails its task loudly instead of
+    quarantining every encrypted PDF as a parse error."""
+    import os
+    import subprocess
+    import sys
+
+    code = (
+        "import sys\n"
+        "class Refuse:\n"
+        "    def find_spec(self, name, path=None, target=None):\n"
+        "        if name.split('.')[0] == 'cryptography':\n"
+        "            raise ImportError('no ' + name)\n"
+        "sys.meta_path.insert(0, Refuse())\n"
+        "try:\n"
+        "    import pdf_extract_spark.kernels.decode\n"
+        "except ImportError as e:\n"
+        "    print('ImportError', e)\n"
+        "else:\n"
+        "    print('imported')\n")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    res = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                         capture_output=True, text=True, timeout=120)
+    assert res.returncode == 0, res.stderr
+    assert res.stdout.startswith("ImportError no cryptography"), res.stdout
 
 
 _ENCRYPT_MODES = ("rc4-40", "rc4-128", "aesv2", "aesv3")
