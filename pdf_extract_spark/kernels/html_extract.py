@@ -17,7 +17,6 @@ from __future__ import annotations
 
 import re
 from html import unescape as _unescape
-from html.parser import HTMLParser
 
 # Tags whose entire subtree is boilerplate by construction.
 _DROP_SUBTREE = frozenset(
@@ -38,86 +37,29 @@ MIN_BLOCK_CHARS = 25      # shorter blocks are dropped unless headline-like
 MIN_WORDS = 4
 
 
-class _BlockCollector(HTMLParser):
-    """Tokenize HTML into text blocks with per-block link-char counts."""
-
-    def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.blocks: list[tuple[str, int, int, str]] = []  # (text, total, linked, tag)
-        self._drop_depth = 0
-        self._a_depth = 0
-        self._parts: list[str] = []
-        self._linked = 0
-        self._block_tag = "body"
-        self._heading = False
-
-    def _flush(self) -> None:
-        raw = "".join(self._parts)
-        text = " ".join(raw.split())
-        if text:
-            self.blocks.append((text, len(text), self._linked, self._block_tag))
-        self._parts = []
-        self._linked = 0
-
-    def handle_starttag(self, tag: str, attrs) -> None:
-        if tag in _DROP_SUBTREE:
-            self._flush()
-            self._drop_depth += 1
-            return
-        if self._drop_depth:
-            return
-        if tag == "a":
-            self._a_depth += 1
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._block_tag = tag
-        elif tag == "br":
-            self._parts.append(" ")
-
-    def handle_startendtag(self, tag: str, attrs) -> None:
-        if tag == "br" and not self._drop_depth:
-            self._parts.append(" ")
-
-    def handle_endtag(self, tag: str) -> None:
-        if tag in _DROP_SUBTREE:
-            if self._drop_depth:
-                self._drop_depth -= 1
-            return
-        if self._drop_depth:
-            return
-        if tag == "a" and self._a_depth:
-            self._a_depth -= 1
-        if tag in _BLOCK_TAGS:
-            self._flush()
-            self._block_tag = "body"
-
-    def handle_data(self, data: str) -> None:
-        if self._drop_depth or not data:
-            return
-        self._parts.append(data)
-        if self._a_depth:
-            self._linked += len("".join(data.split()))
-
-    def close(self) -> None:  # flush trailing text
-        super().close()
-        self._flush()
-
-
 _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 
 # --- fast tokenizer -------------------------------------------------------
 # stdlib html.parser spends ~90% of kernel time in its char-by-char
 # goahead/parse_starttag loop (profiled: 4.4s of 4.9s per 3k docs). This
-# single-regex tokenizer implements the same block semantics 5-10× faster;
-# `_collect_blocks_reference` (HTMLParser-based) stays as the semantics
-# cross-check, asserted equal over the whole fixture corpus in pytest.
+# regex tokenizer implements the same block semantics; the HTMLParser-based
+# collector in tests/html_reference.py is its semantics cross-check,
+# asserted equal over the fixture corpus and seeded tag soup in pytest.
+# The scanning happens in the regex engine: one token regex anchored on
+# '<', whole '<p>text</p>' and '<a href>text</a>' segments as single
+# tokens, and one match over everything a dropped subtree ignores, so the
+# Python loop below sees only the tokens that change its state.
 # Spec notes (documented divergences from html.parser, acceptable for this
 # kernel's spec): (1) a literal '>' inside a quoted attribute value
 # terminates the tag early; (2) a NUL byte inside a tag is out of domain —
 # html.parser splits the tag into irregular data pieces at the NUL, while
 # WHATWG treats NULs as parse errors to replace; decode_html_bytes strips
 # them BEFORE tokenizing, so both collectors see NUL-free input and the
-# divergence is unreachable through the pipeline.
+# divergence is unreachable through the pipeline; (3) an unterminated
+# '<![' marked section ends at its first '>' like any '<!' declaration,
+# while html.parser keeps it as text: '<p>aa</p><![CDATA[x > y <b>z</b>'
+# ends in the block 'y z' here and '<![CDATA[x > y z' there, and
+# '<![if x> tail words' diverges the same way.
 
 # A tag opens only when '<' (or '</') is immediately followed by a letter —
 # matching html.parser, which leaves '3 < y' prose as text. An unterminated
@@ -131,16 +73,51 @@ _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 # the junk consumed and ignored ('</p attr>' closes p). Any other
 # '</...>' is parse_bogus_comment: consumed, emits nothing ('</>',
 # '</ >', '</3>', '</ x junk>').
+# Every alternative starts with '<', factored out so the regex engine can
+# jump between '<'s instead of trying each alternative at every character.
+# The first two alternatives take a whole segment as one token: a block
+# ('<p>text</p>': a block open, text without '<', a block close) and a
+# link ('<a href=x>text</a>'). Their opens may carry attributes but never
+# end in '/' or whitespace, so they can never be self-closing.
+# Groups: 1/2 segment block name/text; 3 segment link text; 4 unterminated
+# comment; 5/6 start-tag name/attrs; 7 end-tag name; 8 tolerant end-tag
+# name. A comment, declaration, PI or bogus end tag matches no group.
+_BLOCK_NAME = ("(?ai:article|b(?:lockquote|ody)|d(?:[dlt]|iv)|fig(?:caption|ure)"
+               "|h[1-6]|li|main|ol|p(?:re)?|section|t(?:able|[dhr])|ul)")
+_SEG_ATTRS = r"(?:[\t\n\r\f ][^>]*)?(?<![/\s])>"
 _TOKEN_RE = re.compile(
-    r"<!--.*?-->"
-    r"|(<!--.*)"
-    r"|<!\[CDATA\[.*?\]\]>"
-    r"|<![^>]*>"
-    r"|<\?[^>]*>"
-    r"|<([a-zA-Z][^\t\n\r\f />\x00]*)([^>]*?)\s*>"
-    r"|</\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
-    r"|</([a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>"
-    r"|(</[^>]*>)",
+    r"<(?:(" + _BLOCK_NAME + ")" + _SEG_ATTRS + r"([^<]*)</" + _BLOCK_NAME
+    + r">"
+    r"|[aA]" + _SEG_ATTRS + r"([^<]*)</[aA]>"
+    r"|!--.*?-->"
+    r"|(!--.*)"
+    r"|!\[CDATA\[.*?\]\]>"
+    r"|![^>]*>"
+    r"|\?[^>]*>"
+    r"|([a-zA-Z][^\t\n\r\f />\x00]*)([^>]*)>"
+    r"|/(?:\s*([a-zA-Z][-.a-zA-Z0-9:_]*)\s*>"
+    r"|([a-zA-Z][^\t\n\r\f />\x00]*)[^>]*>"
+    r"|[^>]*>))",
+    re.DOTALL,
+)
+
+# Inside a dropped subtree only drop-tag opens and closes change state, so
+# one match consumes every token the drop state ignores, each with exactly
+# _TOKEN_RE's extent: text, '<' that starts no token, comments,
+# declarations, PIs and start/end tags whose name does not begin with a
+# drop-tag name (case-insensitively, so '<NAV>', '</ nav>' and '<navx>'
+# stop it). It also stops before an unterminated '<!--'. Stopping early
+# only costs the caller one token of its loop.
+_DROP_NAME = ("(?ai:aside|button|fo(?:oter|rm)|header|iframe|n(?:av|oscript)"
+              "|option|s(?:cript|elect|tyle|vg)|template)")
+_DROP_SKIP = re.compile(
+    r"(?:[^<]*+<(?:(?!/?\s*" + _DROP_NAME + r")[a-zA-Z/][^>]*>"
+    r"|!--.*?-->"
+    r"|!\[CDATA\[.*?\]\]>"
+    r"|!(?!--)[^>]*>"
+    r"|\?[^>]*>"
+    r"|(?!!--|[!?a-zA-Z/][^>]*>)"
+    r"))*+[^<]*+",
     re.DOTALL,
 )
 
@@ -154,153 +131,182 @@ def _is_selfclose(attrs: str) -> bool:
     if not t.endswith("/"):
         return False
     return len(t) == 1 or t[-2] in " \t\n\r\"'"
+
+
 _RAWTEXT = frozenset({"script", "style"})
 # Exact CDATA-exit pattern html.parser uses (set_cdata_mode): the close
 # tag may carry whitespace but nothing else, and name match is exact.
 _RAWTEXT_END = {t: re.compile(r"</\s*%s\s*>" % t, re.IGNORECASE)
                 for t in _RAWTEXT}
 
+# What a lowercased tag name does to the collector's state.
+_BLOCK, _DROP, _RAW, _A, _BR = 1, 2, 3, 4, 5
+_KIND = {**dict.fromkeys(_BLOCK_TAGS, _BLOCK),
+         **dict.fromkeys(_DROP_SUBTREE, _DROP),
+         **dict.fromkeys(_RAWTEXT, _RAW), "a": _A, "br": _BR}
+
+
+def _squash(s: str) -> str:
+    """' '.join(s.split()) without the split when s is already in that
+    form. Every str.isspace() character but ' ' is unprintable."""
+    if s.isprintable() and "  " not in s and s[:1] != " " and s[-1:] != " ":
+        return s
+    return " ".join(s.split())
+
+
+def _nonspace(s: str) -> int:
+    """len(''.join(s.split())): the characters of s that are not space."""
+    if s.isprintable():
+        return len(s) - s.count(" ")
+    return len("".join(s.split()))
+
 
 def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
     """(text, total_chars, linked_chars, tag) blocks — fast tokenizer."""
     blocks: list[tuple[str, int, int, str]] = []
     parts: list[str] = []
-    linked = 0
+    linked = 0  # 0 whenever parts is empty
     drop_depth = 0
     a_depth = 0
     block_tag = "body"
 
     def flush() -> None:
         nonlocal parts, linked
-        if not parts:  # consecutive block tags — nothing buffered
-            linked = 0
-            return
-        raw = "".join(parts)
-        text = " ".join(raw.split())
+        text = _squash("".join(parts))
         if text:
             blocks.append((text, len(text), linked, block_tag))
         parts = []
         linked = 0
 
-    pos = 0
+    finditer = _TOKEN_RE.finditer
+    skip = _DROP_SKIP.match
+    kinds = _KIND.get
     n = len(html)
-    search = _TOKEN_RE.search  # bind hot callables/locals once
-    while pos < n:
-        m = search(html, pos)
-        if m is None:
-            data = html[pos:]
-            if data and not drop_depth:
+    pos = 0
+    # The token loop restarts (break) after every jump it makes: past raw
+    # text, past an unterminated comment, and — after every token that
+    # leaves drop_depth non-zero — past all the drop state ignores.
+    while True:
+        if drop_depth:
+            pos = skip(html, pos).end()
+        for m in finditer(html, pos):
+            start, end = m.span()
+            if start > pos and not drop_depth:
+                data = html[pos:start]
                 if "&" in data:
                     data = _unescape(data)
                 parts.append(data)
                 if a_depth:
-                    linked += len("".join(data.split()))
-            break
-        start, end = m.span()
-        if start > pos:
-            data = html[pos:start]
-            if not drop_depth:
+                    linked += _nonspace(data)
+            pos = end
+            k = m.lastindex
+            if k is None:  # comment, declaration, PI, bogus end tag
+                if drop_depth:
+                    break
+                continue
+            if k == 2:  # <p>text</p> (segments never start where a skip stops)
+                if parts:
+                    flush()
+                data = m[2]
+                if "&" in data:
+                    data = _unescape(data)
+                text = _squash(data)
+                if text:
+                    blocks.append((text, len(text),
+                                   len(text) - text.count(" ") if a_depth
+                                   else 0, m[1].lower()))
+                block_tag = "body"
+                continue
+            if k == 3:  # <a href=x>text</a>
+                data = m[3]
                 if "&" in data:
                     data = _unescape(data)
                 parts.append(data)
-                if a_depth:
-                    linked += len("".join(data.split()))
-        pos = end
-        # one C call for all capture groups instead of ~6 m.group(i) calls
-        # per token — this loop runs once per tag of every document
-        g_open_comment, g_start, g_attrs, g_end, g_end_tol, g_bogus = m.groups()
-        if g_open_comment is not None:
-            # unterminated comment: html.parser (goahead, end=1) emits data
-            # up to AND INCLUDING the next '>' (else next '<', else one
-            # char), then resumes normal parsing — mirror that exactly
-            k = html.find(">", start + 1)
-            if k < 0:
-                k2 = html.find("<", start + 1)
-                k = k2 if k2 >= 0 else start + 1
-            else:
-                k += 1
-            data = html[start:k]
-            if not drop_depth:
-                if "&" in data:
-                    data = _unescape(data)
-                parts.append(data)
-                if a_depth:
-                    linked += len("".join(data.split()))
-            pos = k
-            continue
-        if g_bogus is not None:
-            continue  # bogus end tag → parse_bogus_comment: no data, no tag
-        if g_end is not None or g_end_tol is not None:
-            closing, name, selfclose = "/", g_end or g_end_tol, False
-        elif g_start is not None:
-            closing, name = "", g_start
-            # the token regex consumes trailing whitespace before '>', so
-            # an attr region not ending in '/' can never self-close — one
-            # endswith call gates out ~95% of _is_selfclose calls
-            selfclose = (bool(g_attrs) and g_attrs.endswith("/")
-                         and _is_selfclose(g_attrs))
-        else:  # comment / doctype / PI
-            continue
-        tag = name.lower()
-        if selfclose and not closing:
-            # XHTML self-closing: the reference collector's
-            # handle_startendtag only reacts to <br/> — mirror that exactly
-            if tag == "br" and not drop_depth:
-                parts.append(" ")
-            continue
-        if not closing and tag in _RAWTEXT and not selfclose:
-            # Skip raw content up to the matching close tag. html.parser's
-            # CDATA mode only exits at r'</\s*<tag>\s*>' (set_cdata_mode):
-            # a longer tag name sharing the prefix (</scripty>) is DATA and
-            # must NOT end the block — a plain substring find would. At EOF
-            # with no close tag the rest of the doc is CDATA (dropped).
-            m2 = _RAWTEXT_END[tag].search(html, pos)
-            if m2 is None:
+                linked += _nonspace(data)
+                continue
+            if k == 4:
+                # unterminated comment: html.parser (goahead, end=1) emits
+                # data up to AND INCLUDING the next '>' (else next '<', else
+                # one char), then resumes normal parsing — mirror that
+                pos = html.find(">", start + 1) + 1
+                if not pos:
+                    pos = html.find("<", start + 1)
+                    if pos < 0:
+                        pos = start + 1
+                if not drop_depth:
+                    data = html[start:pos]
+                    if "&" in data:
+                        data = _unescape(data)
+                    parts.append(data)
+                    if a_depth:
+                        linked += _nonspace(data)
                 break
-            pos = m2.end()
-            if tag in _DROP_SUBTREE:
-                flush()
-            continue
-        if closing:
-            if tag in _DROP_SUBTREE:
+            if k == 6:  # start tag
+                tag = m[5].lower()
+                kind = kinds(tag)
+                attrs = m[6]
+                if attrs and _is_selfclose(attrs):
+                    # XHTML self-closing: the reference collector's
+                    # handle_startendtag only reacts to <br/>
+                    if drop_depth:
+                        break
+                    if kind == _BR:
+                        parts.append(" ")
+                    continue
+                if kind == _RAW:
+                    # Skip raw content up to the matching close tag.
+                    # html.parser's CDATA mode only exits at
+                    # r'</\s*<tag>\s*>' (set_cdata_mode): a longer tag name
+                    # sharing the prefix (</scripty>) is DATA. At EOF with
+                    # no close tag the rest of the doc is CDATA (dropped).
+                    m2 = _RAWTEXT_END[tag].search(html, pos)
+                    pos = n if m2 is None else m2.end()
+                    if parts:
+                        flush()
+                    break
+                if kind == _DROP:
+                    if parts:
+                        flush()
+                    drop_depth += 1
+                    break
+                if drop_depth:
+                    break
+                if kind == _BLOCK:
+                    if parts:
+                        flush()
+                    block_tag = tag
+                elif kind == _A:
+                    a_depth += 1
+                elif kind == _BR:
+                    parts.append(" ")
+                continue
+            kind = kinds(m[k].lower())  # end tag
+            if kind == _DROP or kind == _RAW:
                 if drop_depth:
                     drop_depth -= 1
+                    if drop_depth:
+                        break
                 continue
             if drop_depth:
-                continue
-            if tag == "a" and a_depth:
-                a_depth -= 1
-            if tag in _BLOCK_TAGS:
-                flush()
+                break
+            if kind == _BLOCK:
+                if parts:
+                    flush()
                 block_tag = "body"
+            elif kind == _A and a_depth:
+                a_depth -= 1
         else:
-            if tag in _DROP_SUBTREE:
-                flush()
-                drop_depth += 1
-                continue
-            if drop_depth:
-                continue
-            if tag == "a":
-                a_depth += 1
-            if tag in _BLOCK_TAGS:
-                flush()
-                block_tag = tag
-            elif tag == "br":
-                parts.append(" ")
-    flush()
+            if pos < n and not drop_depth:
+                data = html[pos:]
+                if "&" in data:
+                    data = _unescape(data)
+                parts.append(data)
+                if a_depth:
+                    linked += _nonspace(data)
+            break
+    if parts:
+        flush()
     return blocks
-
-
-def _collect_blocks_reference(html: str) -> list[tuple[str, int, int, str]]:
-    """HTMLParser-based reference collector (the original implementation);
-    kept as the cross-check oracle for the fast tokenizer."""
-    parser = _BlockCollector()
-    try:
-        parser.feed(html)
-        parser.close()
-    except Exception:
-        parser._flush()
-    return parser.blocks
 
 
 def _kept_blocks(html: str) -> list[tuple[str, str]]:

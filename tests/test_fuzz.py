@@ -12,8 +12,10 @@ from __future__ import annotations
 from hypothesis import example, given, settings, strategies as st
 
 # tag soup alphabet: words, whitespace, angle brackets, real tags (incl.
-# rawtext and self-closing), comments, entities, attribute junk
-_FRAGMENTS = st.sampled_from([
+# rawtext and self-closing), comments, entities, attribute junk, every
+# drop-subtree tag in the case and spacing forms that do and do not open or
+# close it, and the one-token '<p>text</p>' / '<a href>text</a>' segments
+_SOUP = [
     "word", "longer words here", " ", "\n", "\t", "<", ">", "</", "/>",
     "<p>", "</p>", "<div>", "</div>", "<br>", "<br/>", "<a href=x>",
     "<a href=http://e.com/>", "</a>", "<script>", "</script>",
@@ -24,7 +26,17 @@ _FRAGMENTS = st.sampled_from([
     "<li>", "</li>", "<h1>", "</h1>", "<!doctype html>", "<?pi ?>",
     "<p.x>", "</p.x>", "<a_b>", "</a_b>", "</a_b junk>", "<ns:tag>",
     "</ns:tag>", "</p attr>", "</ x junk>", "</3>",
-])
+    "<nav>", "</nav>", "<NAV>", "</Nav >", "</ nav>", "<nav/>", "<nav />",
+    "<navx>", "</navx>", "</nav junk>", "</footer/>", "< nav>",
+    "<header>", "</header>", "<footer class=f>", "</footer>", "<aside>",
+    "</aside>", "<form>", "</form>", "<select>", "</select>", "<option>",
+    "</option>", "<button>", "</button>", "<template>", "</template>",
+    "<noscript>", "</noscript>", "<![CDATA[x]]>", "<!x>", "<3",
+    "<script/>", "<style >",
+    '<a href="/s0">', '<p class="c">', "<P CLASS=X >", "<li id=1>", "</A >",
+    "<pre>", "</pre>", "\u00a0", "\u3000", "\x0b", "  ", "\r\n",
+]
+_FRAGMENTS = st.sampled_from(_SOUP)
 # NUL-in-tag is excluded from the collector-level domain: html.parser
 # splits tags irregularly at NULs while decode_html_bytes strips them
 # before tokenizing (documented divergence in html_extract.py)
@@ -33,12 +45,11 @@ _FRAGMENTS = st.sampled_from([
 @given(st.lists(_FRAGMENTS, min_size=0, max_size=40).map("".join))
 @settings(max_examples=300, derandomize=True, deadline=None)
 def test_fast_tokenizer_matches_reference_on_tag_soup(html):
-    from pdf_extract_spark.kernels.html_extract import (
-        _collect_blocks,
-        _collect_blocks_reference,
-    )
+    from html_reference import collect_blocks_reference
 
-    assert _collect_blocks(html) == _collect_blocks_reference(html), repr(html)
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
+
+    assert _collect_blocks(html) == collect_blocks_reference(html), repr(html)
 
 
 @given(st.lists(_FRAGMENTS, min_size=0, max_size=30).map("".join))
@@ -47,17 +58,54 @@ def test_full_html_extract_matches_reference_text(html):
     """GENUINE end-to-end parity: run the full extraction once with the
     fast tokenizer and once with the HTMLParser reference collector
     swapped in underneath — extracted text must be byte-identical."""
+    from html_reference import collect_blocks_reference
+
     from pdf_extract_spark.kernels import html_extract as H
 
     doc = f"<html><body>{html}</body></html>"
     fast = H.extract_main_text(doc)
     orig = H._collect_blocks
-    H._collect_blocks = H._collect_blocks_reference
+    H._collect_blocks = collect_blocks_reference
     try:
         ref = H.extract_main_text(doc)
     finally:
         H._collect_blocks = orig
     assert fast == ref, repr(html)
+
+
+# Fragments on which the tokenizer departs from html.parser by design
+# (html_extract's spec notes 1 and 3), kept out of the reference checks.
+_DIVERGENT = ['<a title="</nav>">', '<p title="a>b">', "<![CDATA[x > y",
+              "<![if x>"]
+
+
+def _soup_corpus(n: int = 6000) -> list[str]:
+    import random
+
+    rng = random.Random("tokenizer-soup-pin")
+    alphabet = _SOUP + _DIVERGENT
+    return ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 60)))
+            for _ in range(n)]
+
+
+# sha256 over json.dumps(_collect_blocks(doc)) for _soup_corpus(), one
+# line per document, recorded with the collector's per-token loop before
+# its scans moved into the regex engine. The reference cannot pin the
+# divergent fragments; this digest does.
+PINNED_SOUP_SHA256 = \
+    "cf0ab39f30ba1bf914cef5046954ee28418c8d6300b44b0a492a430b90b95391"
+
+
+def test_tokenizer_soup_pinned_digest():
+    import hashlib
+    import json
+
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
+
+    h = hashlib.sha256()
+    for doc in _soup_corpus():
+        h.update(json.dumps(_collect_blocks(doc)).encode() + b"\n")
+    assert h.hexdigest() == PINNED_SOUP_SHA256
 
 
 _PDF_CHUNKS = st.sampled_from([

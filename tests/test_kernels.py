@@ -153,10 +153,9 @@ def test_fast_tokenizer_matches_htmlparser_reference():
     HTMLParser-based reference collector produces, across the full fixture
     mix (boilerplate, oversized, unicode, all languages)."""
     from pdf_extract_spark.fixtures.pages import make_payload
-    from pdf_extract_spark.kernels.html_extract import (
-        _collect_blocks,
-        _collect_blocks_reference,
-    )
+    from html_reference import collect_blocks_reference
+
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
 
     checked = 0
     for i in range(0, 3000, 3):
@@ -167,9 +166,29 @@ def test_fast_tokenizer_matches_htmlparser_reference():
             html = payload.decode("utf-8")
         except UnicodeDecodeError:
             continue
-        assert _collect_blocks(html) == _collect_blocks_reference(html), i
+        assert _collect_blocks(html) == collect_blocks_reference(html), i
         checked += 1
     assert checked > 500
+
+
+def test_tokenizer_tag_name_patterns_match_the_tag_sets():
+    """The segment token's block-name pattern accepts exactly the
+    _BLOCK_TAGS names (any ASCII case), and the drop skip stops at every
+    _DROP_SUBTREE name: both are hand-factored alternations of the sets."""
+    import re
+
+    from pdf_extract_spark.kernels import html_extract as H
+
+    names = H._BLOCK_TAGS | H._DROP_SUBTREE | {"a", "br", "span", "h7"}
+    near = {w[:i] for w in names for i in range(1, len(w))}
+    near |= {w + c for w in names for c in "1aesx"}
+    for w in names | near:
+        for form in (w, w.upper(), w.capitalize()):
+            assert bool(re.fullmatch(H._BLOCK_NAME, form)) == (
+                w in H._BLOCK_TAGS), form
+    for w in H._DROP_SUBTREE:
+        for form in (w, w.upper(), w.capitalize()):
+            assert re.fullmatch(H._DROP_NAME, form), form
 
 
 def test_roundtrip_property_arbitrary_text():
@@ -1040,10 +1059,9 @@ def test_entity_sanitation_idempotent():
 def test_fast_tokenizer_edge_cases_match_reference():
     """Review-found divergences, now fixed: bare '<' in prose is text (not
     a tag), and XHTML self-closing tags don't split or drop blocks."""
-    from pdf_extract_spark.kernels.html_extract import (
-        _collect_blocks,
-        _collect_blocks_reference,
-    )
+    from html_reference import collect_blocks_reference
+
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
 
     cases = [
         "<p>price is 3 < y and 7 > 2 tested here today ok</p>",
@@ -1053,16 +1071,15 @@ def test_fast_tokenizer_edge_cases_match_reference():
         "<p>self closed para</p><p/><p>another real one with words</p>",
     ]
     for html in cases:
-        assert _collect_blocks(html) == _collect_blocks_reference(html), html
+        assert _collect_blocks(html) == collect_blocks_reference(html), html
 
 
 def test_second_review_regressions():
     """Fixes from the kernel-focused review pass."""
+    from html_reference import collect_blocks_reference
+
     from pdf_extract_spark.kernels.chunker import split_text
-    from pdf_extract_spark.kernels.html_extract import (
-        _collect_blocks,
-        _collect_blocks_reference,
-    )
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
     from pdf_extract_spark.kernels.pdf_extract import extract_pdf_text
     from pdf_extract_spark.kernels.textstats import simhash64
 
@@ -1075,12 +1092,12 @@ def test_second_review_regressions():
     # (bare-URL anchors must count as linked chars)
     h1 = ('<div><a href=http://example.com/>click here now</a> plus real '
           'body prose that stays</div>')
-    assert _collect_blocks(h1) == _collect_blocks_reference(h1)
+    assert _collect_blocks(h1) == collect_blocks_reference(h1)
 
     # tokenizer: unterminated comment → remainder is data, like html.parser
     h2 = ("<p>good paragraph with plenty of words here</p>"
           "<!-- oops <p>ghost block content here</p>")
-    assert _collect_blocks(h2) == _collect_blocks_reference(h2)
+    assert _collect_blocks(h2) == collect_blocks_reference(h2)
 
     # pdf: malformed operands quarantine instead of crashing
     bad = (b"%PDF-1.4\n<< /Length 21 >>\nstream\n"
@@ -1110,10 +1127,9 @@ def test_rawtext_close_tag_boundary_matches_reference():
     end a <script> CDATA block — html.parser only exits CDATA at
     r'</\\s*script\\s*>'. Also: whitespace-padded close tags DO end it, and
     an unterminated rawtext block swallows the rest of the document."""
-    from pdf_extract_spark.kernels.html_extract import (
-        _collect_blocks,
-        _collect_blocks_reference,
-    )
+    from html_reference import collect_blocks_reference
+
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
 
     cases = [
         # longer-name prefix: </scripty> is still CDATA, real close follows
@@ -1130,7 +1146,7 @@ def test_rawtext_close_tag_boundary_matches_reference():
          "<p>never seen paragraph content</p>"),
     ]
     for html in cases:
-        assert _collect_blocks(html) == _collect_blocks_reference(html), html
+        assert _collect_blocks(html) == collect_blocks_reference(html), html
 
 
 def _content_html(body: str) -> str:
