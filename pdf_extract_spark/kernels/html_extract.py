@@ -122,15 +122,31 @@ _DROP_SKIP = re.compile(
 )
 
 
+# html.parser's start-tag grammar after the name: whitespace and '/'s not
+# before '>' (the tail of tagfind_tolerant), then one attrfind_tolerant
+# match per attribute.
+_ATTRS_LEAD = re.compile(r"(?:\s|/(?!>))*")
+_ATTR = re.compile(
+    r"""(?<=['"\s/])[^\s/>][^\s/=>]*"""
+    r"""(?:\s*=+\s*(?:'[^']*'|"[^"]*"|(?!['"])[^>\s]*))?(?:\s|/(?!>))*""")
+
+
 def _is_selfclose(attrs: str) -> bool:
-    """html.parser treats '/' before '>' as a self-close marker ONLY when it
-    is not part of an unquoted attribute value (attrfind consumes '/' into
-    values like href=http://x/): self-closing iff the attr region is just
-    '/' or the '/' follows whitespace or a closing quote."""
-    t = attrs.rstrip()
-    if not t.endswith("/"):
+    """Whether a start tag with this attribute region self-closes, decided
+    as html.parser decides it: its attribute grammar must leave exactly
+    '/>'. An unquoted value takes a trailing '/' (<a href=http://x/> opens
+    a link); a quoted value or a valueless name stops before it (<iframe
+    allowfullscreen/> and <svg class=i aria-hidden/> close themselves)."""
+    if not attrs.rstrip().endswith("/"):
         return False
-    return len(t) == 1 or t[-2] in " \t\n\r\"'"
+    s = attrs + ">"
+    k = _ATTRS_LEAD.match(s).end()
+    while k < len(attrs):
+        m = _ATTR.match(s, k)
+        if m is None:
+            break
+        k = m.end()
+    return s[k:].strip() == "/>"
 
 
 _RAWTEXT = frozenset({"script", "style"})

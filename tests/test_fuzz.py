@@ -36,7 +36,11 @@ _SOUP = [
     '<a href="/s0">', '<p class="c">', "<P CLASS=X >", "<li id=1>", "</A >",
     "<pre>", "</pre>", "\u00a0", "\u3000", "\x0b", "  ", "\r\n",
 ]
-_FRAGMENTS = st.sampled_from(_SOUP)
+# a '/' after a valueless attribute self-closes the tag; the soup pin below
+# was recorded before the tokenizer did so, and leaves these out
+_VALUELESS_SELFCLOSE = ['<iframe src="v.html" allowfullscreen/>',
+                        "<svg class=i aria-hidden/>", "<a href=x data/>"]
+_FRAGMENTS = st.sampled_from(_SOUP + _VALUELESS_SELFCLOSE)
 # NUL-in-tag is excluded from the collector-level domain: html.parser
 # splits tags irregularly at NULs while decode_html_bytes strips them
 # before tokenizing (documented divergence in html_extract.py)

@@ -1122,6 +1122,32 @@ def test_second_review_regressions():
     assert simhash64(t) == ref(t)
 
 
+def test_tokenizer_valueless_attribute_self_closes():
+    """A '/' right after a valueless attribute name self-closes the tag, as
+    in html.parser: '<iframe ... allowfullscreen/>' must not open a drop
+    subtree that swallows the rest of the page, and '<a href=x data/>'
+    must not open a link."""
+    from html_reference import collect_blocks_reference
+
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
+
+    body = "<p>main body paragraph that must survive extraction</p>"
+    for tag in ('<iframe src="v.html" allowfullscreen/>',
+                "<svg class=i aria-hidden/>", "<a href=x data/>"):
+        html = ("<p>intro paragraph with enough words here</p>" + tag
+                + body + "<p>tail text</p>")
+        blocks = _collect_blocks(html)
+        assert blocks == collect_blocks_reference(html), tag
+        assert [b[0] for b in blocks] == [
+            "intro paragraph with enough words here",
+            "main body paragraph that must survive extraction",
+            "tail text"], tag
+    # an unquoted value still takes the '/': <a href=x/> opens a link
+    html = "<div><a href=x/>linked words</a> and plain words</div>"
+    assert _collect_blocks(html) == collect_blocks_reference(html) == [
+        ("linked words and plain words", 28, 11, "div")]
+
+
 def test_rawtext_close_tag_boundary_matches_reference():
     """ADVICE r1: '</scripty>' shares the prefix of '</script' but must NOT
     end a <script> CDATA block — html.parser only exits CDATA at
