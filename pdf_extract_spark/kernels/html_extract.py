@@ -198,14 +198,19 @@ def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
     skip = _DROP_SKIP.match
     kinds = _KIND.get
     n = len(html)
+    # Every token but an unterminated comment ends in '>', and an
+    # unterminated comment after the last '>' is text like the rest of the
+    # tail. So scanning stops at the last '>': a run of '<x' openings with
+    # no '>' after them costs one pass instead of one pass each.
+    stop = html.rfind(">") + 1
     pos = 0
     # The token loop restarts (break) after every jump it makes: past raw
     # text, past an unterminated comment, and — after every token that
     # leaves drop_depth non-zero — past all the drop state ignores.
     while True:
-        if drop_depth:
-            pos = skip(html, pos).end()
-        for m in finditer(html, pos):
+        if drop_depth and pos < stop:
+            pos = skip(html, pos, stop).end()
+        for m in finditer(html, pos, stop):
             start, end = m.span()
             if start > pos and not drop_depth:
                 data = html[pos:start]

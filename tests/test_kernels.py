@@ -1148,6 +1148,23 @@ def test_tokenizer_valueless_attribute_self_closes():
         ("linked words and plain words", 28, 11, "div")]
 
 
+def test_tokenizer_openings_without_a_close_bracket_stay_linear():
+    """'<x' openings with no '>' after them start no token. The tokenizer
+    stops scanning at the document's last '>', so each of them is not a
+    fresh scan to the end of the document (a 6 KB page of them inside a
+    <nav> used to take minutes)."""
+    import time
+
+    from pdf_extract_spark.kernels.html_extract import _collect_blocks
+
+    head = "<p>kept paragraph with enough words</p>"
+    for tail in ("<nav>" + "<x" * 3000, "<p class=x " * 6000):
+        t0 = time.perf_counter()
+        blocks = _collect_blocks(head + tail)
+        assert time.perf_counter() - t0 < 2.0, tail[:20]
+        assert blocks[0] == ("kept paragraph with enough words", 32, 0, "p")
+
+
 def test_rawtext_close_tag_boundary_matches_reference():
     """ADVICE r1: '</scripty>' shares the prefix of '</script' but must NOT
     end a <script> CDATA block — html.parser only exits CDATA at
