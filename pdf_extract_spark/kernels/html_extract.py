@@ -6,7 +6,9 @@ text from PDFs; the north rule generalizes this to Common-Crawl-style HTML
 pages with boilerplate stripping).  Strategy is the classical
 text-density / link-density block classification (public knowledge:
 Kohlschuetter et al., "Boilerplate Detection Using Shallow Text Features",
-WSDM 2010), implemented from scratch on top of stdlib ``html.parser``.
+WSDM 2010), implemented from scratch as a regex tokenizer that follows
+stdlib ``html.parser``'s grammar (checked against an HTMLParser-based
+collector in the tests).
 
 Pure function of the input bytes — no wall clock, no randomness, no
 environment reads — so the single-node run of this module IS the golden
@@ -46,9 +48,8 @@ _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 # collector in tests/html_reference.py is its semantics cross-check,
 # asserted equal over the fixture corpus and seeded tag soup in pytest.
 # The scanning happens in the regex engine: one token regex anchored on
-# '<', whole '<p>text</p>' and '<a href>text</a>' segments as single
-# tokens, and one match over everything a dropped subtree ignores, so the
-# Python loop below sees only the tokens that change its state.
+# '<', and one match over everything a dropped subtree ignores, so the
+# Python loop below sees no token inside a dropped subtree.
 # Spec notes (documented divergences from html.parser, acceptable for this
 # kernel's spec): (1) a literal '>' inside a quoted attribute value
 # terminates the tag early; (2) a NUL byte inside a tag is out of domain —
@@ -75,21 +76,11 @@ _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 # '</ >', '</3>', '</ x junk>').
 # Every alternative starts with '<', factored out so the regex engine can
 # jump between '<'s instead of trying each alternative at every character.
-# The first two alternatives take a whole segment as one token: a block
-# ('<p>text</p>': a block open, text without '<', a block close) and a
-# link ('<a href=x>text</a>'). Their opens may carry attributes but never
-# end in '/' or whitespace, so they can never be self-closing.
-# Groups: 1/2 segment block name/text; 3 segment link text; 4 unterminated
-# comment; 5/6 start-tag name/attrs; 7 end-tag name; 8 tolerant end-tag
-# name. A comment, declaration, PI or bogus end tag matches no group.
-_BLOCK_NAME = ("(?ai:article|b(?:lockquote|ody)|d(?:[dlt]|iv)|fig(?:caption|ure)"
-               "|h[1-6]|li|main|ol|p(?:re)?|section|t(?:able|[dhr])|ul)")
-_SEG_ATTRS = r"(?:[\t\n\r\f ][^>]*)?(?<![/\s])>"
+# Groups: 1 unterminated comment; 2/3 start-tag name/attrs; 4 end-tag
+# name; 5 tolerant end-tag name. A comment, declaration, PI or bogus end
+# tag matches no group.
 _TOKEN_RE = re.compile(
-    r"<(?:(" + _BLOCK_NAME + ")" + _SEG_ATTRS + r"([^<]*)</" + _BLOCK_NAME
-    + r">"
-    r"|[aA]" + _SEG_ATTRS + r"([^<]*)</[aA]>"
-    r"|!--.*?-->"
+    r"<(?:!--.*?-->"
     r"|(!--.*)"
     r"|!\[CDATA\[.*?\]\]>"
     r"|![^>]*>"
@@ -108,8 +99,11 @@ _TOKEN_RE = re.compile(
 # drop-tag name (case-insensitively, so '<NAV>', '</ nav>' and '<navx>'
 # stop it). It also stops before an unterminated '<!--'. Stopping early
 # only costs the caller one token of its loop.
-_DROP_NAME = ("(?ai:aside|button|fo(?:oter|rm)|header|iframe|n(?:av|oscript)"
-              "|option|s(?:cript|elect|tyle|vg)|template)")
+# The lookahead on the first letter lets most tokens fail the name test
+# without trying each name.
+_DROP_NAME = "(?ai:(?=[%s])(?:%s))" % (
+    "".join(sorted({t[0] for t in _DROP_SUBTREE})),
+    "|".join(sorted(_DROP_SUBTREE)))
 _DROP_SKIP = re.compile(
     r"(?:[^<]*+<(?:(?!/?\s*" + _DROP_NAME + r")[a-zA-Z/][^>]*>"
     r"|!--.*?-->"
@@ -162,21 +156,6 @@ _KIND = {**dict.fromkeys(_BLOCK_TAGS, _BLOCK),
          **dict.fromkeys(_RAWTEXT, _RAW), "a": _A, "br": _BR}
 
 
-def _squash(s: str) -> str:
-    """' '.join(s.split()) without the split when s is already in that
-    form. Every str.isspace() character but ' ' is unprintable."""
-    if s.isprintable() and "  " not in s and s[:1] != " " and s[-1:] != " ":
-        return s
-    return " ".join(s.split())
-
-
-def _nonspace(s: str) -> int:
-    """len(''.join(s.split())): the characters of s that are not space."""
-    if s.isprintable():
-        return len(s) - s.count(" ")
-    return len("".join(s.split()))
-
-
 def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
     """(text, total_chars, linked_chars, tag) blocks — fast tokenizer."""
     blocks: list[tuple[str, int, int, str]] = []
@@ -188,7 +167,7 @@ def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
 
     def flush() -> None:
         nonlocal parts, linked
-        text = _squash("".join(parts))
+        text = " ".join("".join(parts).split())
         if text:
             blocks.append((text, len(text), linked, block_tag))
         parts = []
@@ -218,34 +197,14 @@ def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
                     data = _unescape(data)
                 parts.append(data)
                 if a_depth:
-                    linked += _nonspace(data)
+                    linked += len("".join(data.split()))
             pos = end
             k = m.lastindex
             if k is None:  # comment, declaration, PI, bogus end tag
                 if drop_depth:
                     break
                 continue
-            if k == 2:  # <p>text</p> (segments never start where a skip stops)
-                if parts:
-                    flush()
-                data = m[2]
-                if "&" in data:
-                    data = _unescape(data)
-                text = _squash(data)
-                if text:
-                    blocks.append((text, len(text),
-                                   len(text) - text.count(" ") if a_depth
-                                   else 0, m[1].lower()))
-                block_tag = "body"
-                continue
-            if k == 3:  # <a href=x>text</a>
-                data = m[3]
-                if "&" in data:
-                    data = _unescape(data)
-                parts.append(data)
-                linked += _nonspace(data)
-                continue
-            if k == 4:
+            if k == 1:
                 # unterminated comment: html.parser (goahead, end=1) emits
                 # data up to AND INCLUDING the next '>' (else next '<', else
                 # one char), then resumes normal parsing — mirror that
@@ -260,12 +219,12 @@ def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
                         data = _unescape(data)
                     parts.append(data)
                     if a_depth:
-                        linked += _nonspace(data)
+                        linked += len("".join(data.split()))
                 break
-            if k == 6:  # start tag
-                tag = m[5].lower()
+            if k == 3:  # start tag
+                tag = m[2].lower()
                 kind = kinds(tag)
-                attrs = m[6]
+                attrs = m[3]
                 if attrs and _is_selfclose(attrs):
                     # XHTML self-closing: the reference collector's
                     # handle_startendtag only reacts to <br/>
@@ -323,7 +282,7 @@ def _collect_blocks(html: str) -> list[tuple[str, int, int, str]]:
                     data = _unescape(data)
                 parts.append(data)
                 if a_depth:
-                    linked += _nonspace(data)
+                    linked += len("".join(data.split()))
             break
     if parts:
         flush()

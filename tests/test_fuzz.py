@@ -14,7 +14,7 @@ from hypothesis import example, given, settings, strategies as st
 # tag soup alphabet: words, whitespace, angle brackets, real tags (incl.
 # rawtext and self-closing), comments, entities, attribute junk, every
 # drop-subtree tag in the case and spacing forms that do and do not open or
-# close it, and the one-token '<p>text</p>' / '<a href>text</a>' segments
+# close it, and block and link opens with attributes and case forms
 _SOUP = [
     "word", "longer words here", " ", "\n", "\t", "<", ">", "</", "/>",
     "<p>", "</p>", "<div>", "</div>", "<br>", "<br/>", "<a href=x>",

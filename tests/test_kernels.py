@@ -171,26 +171,6 @@ def test_fast_tokenizer_matches_htmlparser_reference():
     assert checked > 500
 
 
-def test_tokenizer_tag_name_patterns_match_the_tag_sets():
-    """The segment token's block-name pattern accepts exactly the
-    _BLOCK_TAGS names (any ASCII case), and the drop skip stops at every
-    _DROP_SUBTREE name: both are hand-factored alternations of the sets."""
-    import re
-
-    from pdf_extract_spark.kernels import html_extract as H
-
-    names = H._BLOCK_TAGS | H._DROP_SUBTREE | {"a", "br", "span", "h7"}
-    near = {w[:i] for w in names for i in range(1, len(w))}
-    near |= {w + c for w in names for c in "1aesx"}
-    for w in names | near:
-        for form in (w, w.upper(), w.capitalize()):
-            assert bool(re.fullmatch(H._BLOCK_NAME, form)) == (
-                w in H._BLOCK_TAGS), form
-    for w in H._DROP_SUBTREE:
-        for form in (w, w.upper(), w.capitalize()):
-            assert re.fullmatch(H._DROP_NAME, form), form
-
-
 def test_roundtrip_property_arbitrary_text():
     """Property: for any text whose blank-line paragraphs are
     whitespace-normalized and individually keepable (≥25 chars, ≥4 words),
